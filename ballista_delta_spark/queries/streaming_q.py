@@ -97,8 +97,11 @@ def _events_dir(sf_dir: str) -> str:
         # recurse into a symlinked subdirectory — staging the dir as one
         # symlink silently yields a ZERO-file (and zero-row) stream.
         # Stage each leaf part file directly instead.
+        # Sorted walk: part-NNNNN numbering (and so the stream's file
+        # order) must not depend on directory listing order.
         n = 0
-        for root, _dirs, fnames in os.walk(src, followlinks=True):
+        for root, dirs, fnames in os.walk(src, followlinks=True):
+            dirs.sort()
             for fn in sorted(fnames):
                 if fn.endswith(".parquet"):
                     os.symlink(
@@ -106,6 +109,8 @@ def _events_dir(sf_dir: str) -> str:
                         os.path.join(d, f"part-{n:05d}.parquet"),
                     )
                     n += 1
+        if n == 0:
+            raise FileNotFoundError(f"no parquet files under {src}")
     else:
         os.symlink(src, os.path.join(d, "events.parquet"))
     _STREAM_DIRS[sf_dir] = d

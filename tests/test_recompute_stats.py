@@ -165,6 +165,29 @@ def test_recompute_variant_table_spark_fallback(spark, tmp_path):
         recompute_stats(tbl)
 
 
+def test_recompute_skips_truncated_footer(spark, tmp_path):
+    """An unreadable footer skips that one file — its old stats stay in
+    the log — instead of failing the recompute of a 4-file table."""
+    tbl = str(tmp_path / "t")
+    write_delta(spark.range(0, 400, 1, 4).selectExpr("id"), tbl)
+    snap = DeltaTable(tbl).snapshot
+    assert len(snap.files) == 4
+    victim = sorted(snap.files)[0]
+    old_stats = snap.files[victim]["stats"]
+    fp = os.path.join(tbl, victim)
+    with open(fp, "rb") as fh:
+        head = fh.read(16)
+    with open(fp, "wb") as fh:
+        fh.write(head)
+
+    res = recompute_stats(tbl, spark=spark)
+    assert res["numFilesSkipped"] == 1
+    assert res["numFilesRecomputed"] == 3
+    snap2 = DeltaTable(tbl).snapshot
+    assert snap2.version == snap.version + 1
+    assert snap2.files[victim]["stats"] == old_stats
+
+
 def test_recompute_loses_race_cleanly(spark, sf_dir, monkeypatch):
     """COMPUTE STATS is not a blind append — losing an optimistic-commit
     race must raise ConcurrentWriteException (the caller reloads and

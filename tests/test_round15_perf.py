@@ -179,6 +179,44 @@ def test_events_stream_stages_directory_fixtures(spark, tmp_path):
     assert all(os.path.isfile(os.path.join(staged, f)) for f in files)
 
 
+def test_events_stream_staging_is_sorted_and_refuses_empty(tmp_path, monkeypatch):
+    """Leaf staging walks directories in sorted order whatever order the
+    filesystem lists them in, and a directory fixture holding no parquet
+    file raises instead of staging an empty stream."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ballista_delta_spark.queries.streaming_q import _events_dir
+
+    src = tmp_path / "events.parquet"
+    for sub in ("a", "b", "c"):
+        (src / sub).mkdir(parents=True)
+        pq.write_table(
+            pa.table({"event_id": pa.array([1], pa.int64())}),
+            str(src / sub / "part-000.parquet"),
+        )
+    real_walk = os.walk
+
+    def reversed_walk(*a, **kw):
+        # list subdirectories in reverse order, as a filesystem may
+        for root, dirs, files in real_walk(*a, **kw):
+            dirs.sort(reverse=True)
+            yield root, dirs, files
+
+    monkeypatch.setattr(os, "walk", reversed_walk)
+    staged = _events_dir(str(tmp_path))
+    links = [
+        os.path.basename(os.path.dirname(os.readlink(os.path.join(staged, f))))
+        for f in sorted(os.listdir(staged))
+    ]
+    assert links == ["a", "b", "c"]
+
+    empty = tmp_path / "empty"
+    (empty / "events.parquet" / "a").mkdir(parents=True)
+    with pytest.raises(FileNotFoundError, match="no parquet files"):
+        _events_dir(str(empty))
+
+
 def test_session_oversplits_initial_shuffle_partitions():
     n = default_cpus()
     opts = {
