@@ -42,7 +42,7 @@ from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import urlparse
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -307,15 +307,15 @@ class DeltaTable:
 
         The driver only READS each file's compressed bitmap (metadata-scale
         — delta-spark holds the same bitmaps in task memory) and ships a
-        (file_path, bitmap_bytes) relation; row-index EXPANSION happens
-        executor-side in an Arrow-batched pandas UDF (a merge-on-read
+        (file_path, bitmap_bytes) local relation; row-index EXPANSION
+        happens executor-side in one ``mapInArrow`` stage (a merge-on-read
         DELETE of 10^8 rows must never materialize 10^8 tuples on the
         driver). The scan gains Spark's ``_metadata.file_path`` /
         ``_metadata.row_index`` columns and anti-joins the expanded set.
-        Join planning broadcasts the deleted set when small (the
-        overwhelmingly common case, and AQE sizes it POST-expansion) and
-        shuffles when a table carries giant DVs — correct either way, and
-        the data files are never rewritten, which is the point of
+        Join planning broadcasts the deleted set when the descriptors'
+        cardinalities say it is small (the overwhelmingly common case) and
+        sort-merges when a table carries giant DVs — correct either way,
+        and the data files are never rewritten, which is the point of
         merge-on-read.
         """
         snap = self.snapshot
@@ -388,38 +388,43 @@ def _expand_dv_bitmaps(
     """(abs_file_path, bitmap_bytes, cardinality) rows -> a distributed
     ``(__src_fp, __src_ri)`` relation of deleted row indexes.
 
-    The input is metadata-sized (one compressed roaring bitmap per file);
-    the O(deleted rows) expansion runs executor-side — an Arrow-batched
-    pandas UDF decodes each bitmap to an index array and ``explode``
-    generates the rows inside the same stage, so the driver never holds a
-    per-row collection. Files are spread with a repartition so a table
-    whose DVs concentrate in few commits still decodes in parallel."""
-    from pyspark.sql.functions import pandas_udf
+    The input is metadata-sized (one compressed roaring bitmap per file)
+    and becomes an Arrow-built local relation: no job to build it, and
+    its scan already spreads the files over ``min(files,
+    defaultParallelism)`` tasks. The O(deleted rows) expansion runs
+    executor-side in one ``mapInArrow`` stage (``dv.expand_dv_batches``),
+    so the driver never holds a per-row collection.
 
-    @pandas_udf("array<long>")
-    def decode(dv: pd.Series, card: pd.Series) -> pd.Series:
-        from ballista_delta_spark.sources.dv import parse_roaring_bitmap_array
+    The planner sizes this relation by its input, a few bitmaps, and so
+    would always broadcast the expansion — through the driver. The
+    descriptors' cardinalities give the expanded size up front: past the
+    broadcast threshold, or when a descriptor records none, the relation
+    asks for a sort-merge join instead."""
+    from .dv import expand_dv_batches
 
-        out = []
-        for data, c in zip(dv, card):
-            idx = parse_roaring_bitmap_array(bytes(data))
-            if c and c != len(idx):
-                raise ValueError(
-                    f"DV cardinality mismatch: descriptor says {c}, "
-                    f"bitmap has {len(idx)}"
-                )
-            out.append(idx)
-        return pd.Series(out)
+    rel = _arrow_relation(spark, bitmaps, pa.schema([
+        ("__src_fp", pa.string()), ("__dv", pa.binary()),
+        ("__card", pa.int64()),
+    ])).mapInArrow(expand_dv_batches, "__src_fp string, __src_ri long")
+    # ~ UnsafeRow bytes per deleted row: 24 fixed + the path string.
+    expanded = sum(card * (24 + len(fp)) for fp, _, card in bitmaps)
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if expanded > threshold or not all(card for _, _, card in bitmaps):
+        rel = rel.hint("merge")
+    return rel
 
-    rel = spark.createDataFrame(
-        [(fp, bytearray(data), card) for fp, data, card in bitmaps],
-        "__src_fp string, __dv binary, __card long",
-    )
-    n_slices = min(len(bitmaps), spark.sparkContext.defaultParallelism)
-    return rel.repartition(max(n_slices, 1)).select(
-        "__src_fp",
-        F.explode(decode("__dv", "__card")).alias("__src_ri"),
-    )
+
+def _arrow_relation(
+    spark: SparkSession, rows: list[tuple], schema: pa.Schema
+) -> DataFrame:
+    """Driver-side tuples -> a local relation built from Arrow. Unlike
+    ``createDataFrame`` on a Python list, which plans a pickled RDD that
+    needs a Python worker stage, this launches no job at all."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    ))
 
 
 def read_delta(
@@ -715,9 +720,10 @@ def _row_lineage_df(spark: SparkSession, path: str, dt: DeltaTable) -> DataFrame
             f"{missing} file(s) lack baseRowId despite rowTracking — "
             "corrupt enablement commit"
         )
-    id_map = F.broadcast(spark.createDataFrame(
-        rows, "__src_fp string, __base long, __dcv long"
-    ))
+    id_map = F.broadcast(_arrow_relation(spark, rows, pa.schema([
+        ("__src_fp", pa.string()), ("__base", pa.int64()),
+        ("__dcv", pa.int64()),
+    ])))
     out_cols = [f.name for f in snap.schema.fields]
     return (
         base.join(id_map, "__src_fp")

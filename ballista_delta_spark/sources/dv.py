@@ -4,7 +4,7 @@ A deletion vector (DV) marks individual rows of one parquet data file as
 deleted without rewriting the file — the merge-on-read half of Delta's DML
 story (delta-spark writes DVs by default for DELETE/UPDATE/MERGE since 3.x;
 the reference has no DV support at all, its write surface errors). This
-module implements both directions — parsing for scans, serialization for
+module implements both directions — decoding for scans, serialization for
 the DV-writing DELETE path (delta_dml.delete_delta mode="dv"):
 
 - the Z85 decoding the descriptor uses for UUIDs and inline bitmaps,
@@ -15,10 +15,17 @@ the DV-writing DELETE path (delta_dml.delete_delta mode="dv"):
   storageType "u" (UUID-named file) / "p" (absolute path), and the inline
   form "i".
 
+One roaring decoder, ``roaring_indexes``, serves every reader. It is numpy:
+array containers are a ``<u2`` view of the buffer, bitmap containers go
+through ``unpackbits`` + ``flatnonzero``, run containers are a repeated
+``arange``. ``parse_roaring_bitmap_array`` wraps it for the driver-side
+callers that merge DVs as lists (DML, REORG, the stream source).
+
 Scale note: a DV is metadata — a compressed bitmap, loaded whole per file
 by every engine (delta-spark holds it in task memory the same way). The
-driver parses descriptors; the row-index ANTI-JOIN that applies them runs
-distributed (see delta.DeltaTable.to_df).
+driver reads the compressed bytes; a scan expands them to row indexes in
+one ``mapInArrow`` stage (``expand_dv_batches``) and anti-joins them
+(see delta.DeltaTable.to_df).
 """
 
 from __future__ import annotations
@@ -28,6 +35,8 @@ import struct
 import uuid as _uuid
 import zlib
 from typing import Any
+
+import numpy as np
 
 # ZeroMQ Z85 alphabet (the Delta spec's encoding for pathOrInlineDv).
 _Z85_CHARS = (
@@ -75,9 +84,22 @@ def z85_encode(b: bytes) -> str:
     return "".join(out)
 
 
-def _parse_roaring32(data: bytes, pos: int) -> tuple[list[int], int]:
-    """Parse one standard-serialized 32-bit roaring bitmap starting at
-    ``pos``; return (values, new_pos). RoaringFormatSpec layouts:
+def _take(data: bytes, pos: int, dtype: str, count: int) -> tuple[np.ndarray, int]:
+    """``count`` little-endian ``dtype`` items at ``pos`` as a zero-copy
+    view; return (view, new_pos). A buffer cut short raises ValueError
+    (inline DVs carry no CRC, so truncation reaches the decoder)."""
+    end = pos + np.dtype(dtype).itemsize * count
+    if end > len(data):
+        raise ValueError(
+            f"truncated deletion vector: need {end} bytes, have {len(data)}"
+        )
+    return np.frombuffer(data, dtype, count, pos), end
+
+
+def _roaring32(data: bytes, pos: int) -> tuple[list[np.ndarray], int]:
+    """Decode one standard-serialized 32-bit roaring bitmap starting at
+    ``pos``; return (per-container uint32 value arrays, new_pos).
+    RoaringFormatSpec layouts:
 
     cookie 12347 (has run containers): size = (cookie >> 16) + 1, then a
     run-flag bitset of (size+7)//8 bytes; offset header present only when
@@ -86,75 +108,78 @@ def _parse_roaring32(data: bytes, pos: int) -> tuple[list[int], int]:
     (n_runs × [start, length-1]), array (cardinality × uint16) when
     cardinality <= 4096, else a 8192-byte bitmap.
     """
-    (cookie,) = struct.unpack_from("<I", data, pos)
-    pos += 4
+    (cookie,), pos = _take(data, pos, "<u4", 1)
+    cookie = int(cookie)
     if (cookie & 0xFFFF) == 12347:
         size = (cookie >> 16) + 1
-        n_flag_bytes = (size + 7) // 8
-        run_flags = data[pos : pos + n_flag_bytes]
-        pos += n_flag_bytes
+        flag_bytes, pos = _take(data, pos, "u1", (size + 7) // 8)
+        run_flags = np.unpackbits(flag_bytes, bitorder="little")[:size]
         has_offsets = size >= 4
     elif cookie == 12346:
-        (size,) = struct.unpack_from("<I", data, pos)
-        pos += 4
-        run_flags = b"\x00" * ((size + 7) // 8)
+        (size,), pos = _take(data, pos, "<u4", 1)
+        size = int(size)
+        run_flags = None  # no run containers
         has_offsets = True
     else:
         raise ValueError(f"invalid roaring bitmap cookie {cookie}")
 
-    keys_cards = []
-    for i in range(size):
-        key, card_m1 = struct.unpack_from("<HH", data, pos)
-        pos += 4
-        keys_cards.append((key, card_m1 + 1))
+    header, pos = _take(data, pos, "<u2", 2 * size)
+    if run_flags is None:
+        # Allocated only once the header read has shown that ``size``
+        # fits the buffer.
+        run_flags = np.zeros(size, np.uint8)
+    keys = header[0::2].astype(np.uint32) << 16
+    cards = header[1::2].astype(np.int64) + 1
     if has_offsets:
         pos += 4 * size  # sequential read; offsets are redundant
 
-    values: list[int] = []
-    for i, (key, card) in enumerate(keys_cards):
-        base = key << 16
-        is_run = bool(run_flags[i // 8] & (1 << (i % 8)))
+    out: list[np.ndarray] = []
+    for base, card, is_run in zip(keys, cards, run_flags):
         if is_run:
-            (n_runs,) = struct.unpack_from("<H", data, pos)
-            pos += 2
-            for _ in range(n_runs):
-                # Pair (v, l) encodes the inclusive interval [v, v+l]
-                # (RoaringFormatSpec "run containers").
-                start, run_len = struct.unpack_from("<HH", data, pos)
-                pos += 4
-                values.extend(range(base + start, base + start + run_len + 1))
+            (n_runs,), pos = _take(data, pos, "<u2", 1)
+            runs, pos = _take(data, pos, "<u2", 2 * int(n_runs))
+            # Pair (v, l) encodes the inclusive interval [v, v+l]
+            # (RoaringFormatSpec "run containers").
+            starts = runs[0::2].astype(np.int64)
+            lens = runs[1::2].astype(np.int64) + 1
+            if (starts + lens > 1 << 16).any():
+                raise ValueError("roaring run container overflows its key")
+            firsts = np.repeat(starts - (np.cumsum(lens) - lens), lens)
+            low = firsts + np.arange(int(lens.sum()))
         elif card <= 4096:
-            vals = struct.unpack_from(f"<{card}H", data, pos)
-            pos += 2 * card
-            values.extend(base + v for v in vals)
+            low, pos = _take(data, pos, "<u2", int(card))
         else:
-            chunk = data[pos : pos + 8192]
-            pos += 8192
-            for word_i in range(1024):
-                (word,) = struct.unpack_from("<Q", chunk, word_i * 8)
-                while word:
-                    low = word & -word
-                    values.append(base + word_i * 64 + low.bit_length() - 1)
-                    word ^= low
-    return values, pos
+            words, pos = _take(data, pos, "u1", 8192)
+            low = np.flatnonzero(np.unpackbits(words, bitorder="little"))
+        out.append(base | low.astype(np.uint32))
+    return out, pos
 
 
-def parse_roaring_bitmap_array(data: bytes) -> list[int]:
-    """Portable-format 64-bit RoaringBitmapArray -> sorted row indexes."""
-    (magic,) = struct.unpack_from("<i", data, 0)
+def roaring_indexes(data: bytes) -> np.ndarray:
+    """Portable-format 64-bit RoaringBitmapArray -> sorted int64 row
+    indexes. Malformed or truncated input raises ValueError."""
+    (magic,), pos = _take(data, 0, "<i4", 1)
     if magic != _MAGIC:
         raise ValueError(
             f"bad deletion-vector magic {magic} (expected {_MAGIC})"
         )
-    (n_bitmaps,) = struct.unpack_from("<q", data, 4)
-    pos = 12
-    out: list[int] = []
-    for _ in range(n_bitmaps):
-        (key,) = struct.unpack_from("<I", data, pos)
-        pos += 4
-        values, pos = _parse_roaring32(data, pos)
-        out.extend((key << 32) | v for v in values)
-    return out
+    (n_bitmaps,), pos = _take(data, pos, "<i8", 1)
+    parts: list[np.ndarray] = []
+    for _ in range(int(n_bitmaps)):
+        (key,), pos = _take(data, pos, "<u4", 1)
+        high = np.int64(key) << 32
+        values, pos = _roaring32(data, pos)
+        parts.extend(high | v.astype(np.int64) for v in values)
+    if not parts:
+        return np.empty(0, np.int64)
+    return np.concatenate(parts)
+
+
+def parse_roaring_bitmap_array(data: bytes) -> list[int]:
+    """Portable-format 64-bit RoaringBitmapArray -> sorted row indexes, as
+    a list (the driver-side callers: DML DV merging, REORG, the stream
+    source)."""
+    return roaring_indexes(data).tolist()
 
 
 def dv_file_path(table_path: str, descriptor: dict[str, Any]) -> str:
@@ -241,13 +266,42 @@ def read_deletion_vector(table_path: str, descriptor: dict[str, Any]) -> list[in
     """Deleted row indexes for one file's DV descriptor (storage u/i/p)."""
     data = read_dv_bytes(table_path, descriptor)
     idx = parse_roaring_bitmap_array(data)
-    card = int(descriptor.get("cardinality") or 0)
-    if card and card != len(idx):
-        raise ValueError(
-            f"DV cardinality mismatch: descriptor says {card}, bitmap has "
-            f"{len(idx)}"
-        )
+    _check_cardinality(int(descriptor.get("cardinality") or 0), len(idx))
     return idx
+
+
+def _check_cardinality(card: int, n: int) -> None:
+    """A descriptor's cardinality (0 = not recorded) must match the
+    decoded bitmap."""
+    if card and card != n:
+        raise ValueError(
+            f"DV cardinality mismatch: descriptor says {card}, bitmap has {n}"
+        )
+
+
+# Most rows in one Arrow batch that ``expand_dv_batches`` yields, so one
+# file's huge DV streams out in pieces instead of one giant batch.
+_DV_BATCH_ROWS = 1 << 16
+
+
+def expand_dv_batches(batches):
+    """``mapInArrow`` body of the DV scan: ``(__src_fp, __dv, __card)``
+    batches -> ``(__src_fp, __src_ri)`` batches of deleted row indexes,
+    at most ``_DV_BATCH_ROWS`` rows each. Runs in the Python worker, so
+    the O(deleted rows) expansion never touches the driver."""
+    import pyarrow as pa
+
+    for batch in batches:
+        cols = batch.to_pydict()
+        for fp, data, card in zip(cols["__src_fp"], cols["__dv"], cols["__card"]):
+            idx = roaring_indexes(data)
+            _check_cardinality(card, len(idx))
+            for lo in range(0, len(idx), _DV_BATCH_ROWS):
+                chunk = pa.array(idx[lo : lo + _DV_BATCH_ROWS])
+                yield pa.RecordBatch.from_arrays(
+                    [pa.repeat(fp, len(chunk)), chunk],
+                    ["__src_fp", "__src_ri"],
+                )
 
 
 # ------------------------------------------------------------- write side

@@ -342,7 +342,7 @@ def test_vacuum_removes_orphaned_dv_bins(spark, tmp_path):
     assert read_delta(spark, tbl).count() == 85
 
 
-def test_dv_expansion_runs_executor_side_at_scale(spark, tmp_path):
+def test_dv_expansion_runs_executor_side_at_scale(spark, tmp_path, monkeypatch):
     """The 100-TB-scale contract of the apply path: the driver ships only
     the compressed bitmap, never the expanded per-row index list. Proven by
     breaking the decoder IN THE DRIVER PROCESS — Python workers are
@@ -360,22 +360,109 @@ def test_dv_expansion_runs_executor_side_at_scale(spark, tmp_path):
     deleted = list(range(0, 1 << 20, 2))
     _attach_dv_file(tbl, rel, deleted)
 
-    real_parse = dv_mod.parse_roaring_bitmap_array
-
     def driver_must_not_expand(data):
         raise AssertionError(
-            "parse_roaring_bitmap_array called in the DRIVER process — "
+            "roaring decoder called in the DRIVER process — "
             "DV row-index expansion must happen executor-side"
         )
 
-    dv_mod.parse_roaring_bitmap_array = driver_must_not_expand
-    try:
-        got = read_delta(spark, tbl)
-        assert got.count() == (1 << 20) - len(deleted)
-        # Spot-check values, not just counts: all survivors are odd.
-        assert got.filter("id % 2 = 0").count() == 0
-    finally:
-        dv_mod.parse_roaring_bitmap_array = real_parse
+    # Both the list wrapper and the decoder the mapInArrow body calls.
+    monkeypatch.setattr(
+        dv_mod, "parse_roaring_bitmap_array", driver_must_not_expand
+    )
+    monkeypatch.setattr(dv_mod, "roaring_indexes", driver_must_not_expand)
+    got = read_delta(spark, tbl)
+    # Nor does the expanded set come back through the driver as a
+    # broadcast: 2^19 deleted rows are past the broadcast threshold.
+    assert "Broadcast" not in (
+        got._jdf.queryExecution().executedPlan().toString()
+    )
+    assert got.count() == (1 << 20) - len(deleted)
+    # Spot-check values, not just counts: all survivors are odd.
+    assert got.filter("id % 2 = 0").count() == 0
+
+
+def _plan_nodes(plan):
+    """Every node of a JVM physical plan, depth first."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    children = plan.children()
+    out = [plan]
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i))
+    return out
+
+
+def test_dv_expansion_plans_one_python_stage_without_shuffle(spark):
+    """The expanded-bitmap relation is a local scan feeding ONE Python
+    node: no pickled-RDD scan (a Python stage of its own) and no
+    repartition shuffle in front of the decode."""
+    from ballista_delta_spark.sources.delta import _expand_dv_bitmaps
+
+    bitmaps = [
+        (f"/t/part-{i}.parquet", _serialize_dv([i, i + 7]), 2)
+        for i in range(3)
+    ]
+    df = _expand_dv_bitmaps(spark, bitmaps)
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    leaves = [n.nodeName() for n in nodes if n.children().size() == 0]
+    assert leaves == ["LocalTableScan"], leaves
+    assert not [n for n in nodes if "Exchange" in n.nodeName()]
+    python_nodes = [
+        n.nodeName() for n in nodes
+        if n.getClass().getName().startswith(
+            "org.apache.spark.sql.execution.python."
+        )
+    ]
+    assert len(python_nodes) == 1, python_nodes
+    assert sorted(map(tuple, df.collect())) == sorted(
+        (fp, r) for i, (fp, _, _) in enumerate(bitmaps) for r in (i, i + 7)
+    )
+
+    # Join strategy follows the descriptors' cardinalities, not the size
+    # of the local relation: a few deleted rows broadcast, 10^8 (or an
+    # unrecorded count) sort-merge. Planned only, never run.
+    def join_plan(bitmaps):
+        scan = spark.range(10).selectExpr(
+            "'/t/part-0.parquet' AS __src_fp", "id AS __src_ri"
+        )
+        joined = scan.join(
+            _expand_dv_bitmaps(spark, bitmaps),
+            ["__src_fp", "__src_ri"], "left_anti",
+        )
+        return joined._jdf.queryExecution().executedPlan().toString()
+
+    assert "BroadcastHashJoin" in join_plan(bitmaps)
+    ((fp, data, _),) = bitmaps[:1]
+    for card in (10**8, 0):
+        plan = join_plan([(fp, data, card)])
+        assert "SortMergeJoin" in plan and "Broadcast" not in plan
+
+
+def test_truncated_or_malformed_dv_raises_value_error():
+    """Every cut of a serialized DV is a ValueError (the module's error
+    contract), never struct.error — inline DVs carry no CRC, so a short
+    buffer reaches the decoder. So are a run reaching past its 16-bit
+    key and a container count larger than the buffer."""
+    small = _serialize_dv([1, 5, 7, 65536 + 3])
+    # 6: inside the bitmap count; 14: inside the first key; 20: inside
+    # the container count; len-4: inside the last array container.
+    for cut in (6, 14, 20, len(small) - 4):
+        with pytest.raises(ValueError, match="truncated"):
+            parse_roaring_bitmap_array(small[:cut])
+    bitmap = _serialize_dv(list(range(5000)))  # one bitmap container
+    with pytest.raises(ValueError, match="truncated"):
+        parse_roaring_bitmap_array(bitmap[:-100])
+    runs = _serialize_dv([10, 11, 12, 50], force_runs=True)
+    with pytest.raises(ValueError, match="truncated"):
+        parse_roaring_bitmap_array(runs[:-2])
+    # Last run (50, length-1 0) rewritten to (65535, 1): 65535..65536.
+    with pytest.raises(ValueError, match="overflows"):
+        parse_roaring_bitmap_array(runs[:-4] + struct.pack("<HH", 65535, 1))
+    # Container count 2^32-1 where the buffer holds one container.
+    huge = small[:16] + struct.pack("<II", 12346, 0xFFFFFFFF) + small[24:]
+    with pytest.raises(ValueError, match="truncated"):
+        parse_roaring_bitmap_array(huge)
 
 
 def test_dv_protocol_upgrade_preserves_declared_features(spark, tmp_path):
