@@ -1,4 +1,4 @@
-"""Local standalone session over the reference's golden Delta fixture —
+"""Local standalone session over the re-created golden Delta fixture —
 the PySpark twin of reference examples/local_standalone.rs:10-51.
 
 Where the reference wires Ballista codecs + a custom session state and
@@ -15,14 +15,15 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import tempfile
 
 from ballista_delta_spark.session import get_spark, sql
 from ballista_delta_spark.sources.delta import read_delta, write_delta
 
-FIXTURE = "/root/reference/data/people_countries_delta_dask"
+FIXTURE = os.path.join(REPO, "data", "people_countries_delta")
 
 
 def main() -> None:

@@ -44,9 +44,10 @@ import socket
 import sys
 from urllib.parse import urlparse
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-FIXTURE = "/root/reference/data/people_countries_delta_dask"
+FIXTURE = os.path.join(REPO, "data", "people_countries_delta")
 
 
 def _reachable(master: str) -> bool:

@@ -20,8 +20,8 @@ Usage (against MinIO or any S3 endpoint):
   python examples/s3_standalone.py s3://ballista/sample/
 
 With no arguments it boots an in-process moto S3 server, uploads the
-reference's people_countries Delta fixture, and runs the golden query —
-a self-contained demo of the full S3 path.
+re-created people_countries Delta fixture (data/people_countries_delta),
+and runs the golden query — a self-contained demo of the full S3 path.
 """
 
 from __future__ import annotations
@@ -29,7 +29,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from ballista_delta_spark.session import get_spark
 from ballista_delta_spark.sources.registry import (
@@ -37,7 +38,7 @@ from ballista_delta_spark.sources.registry import (
     register_s3_parquet,
 )
 
-FIXTURE = "/root/reference/data/people_countries_delta_dask"
+FIXTURE = os.path.join(REPO, "data", "people_countries_delta")
 
 
 def _demo_endpoint() -> tuple[str, dict[str, str]]:

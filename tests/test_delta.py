@@ -1,6 +1,7 @@
 """Delta protocol tests, mirroring the reference's test net (SURVEY.md §5):
 
-- golden-rows test against the reference fixture (reference tests/local.rs:31-41)
+- golden-rows test against the re-created reference fixture
+  (data/people_countries_delta; reference tests/local.rs:31-41)
 - DDL registration (reference tests/local.rs:48-54)
 - write-path tests (the reference asserts INSERT *fails*, tests/local.rs:100-103;
   we assert append/overwrite *work* — S9/S10 exceeded)
@@ -21,7 +22,10 @@ from ballista_delta_spark.sources.delta import (
     write_delta,
 )
 
-FIXTURE = "/root/reference/data/people_countries_delta_dask"
+FIXTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "data", "people_countries_delta",
+)
 
 GOLDEN = [
     ("Bruce", "Lee", "Asia", "China"),

@@ -33,6 +33,7 @@ SCRIPT = textwrap.dedent(
     """
     import os, sys, tempfile
     sys.path.insert(0, {repo!r})
+    FIXTURE = {fixture!r}
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 
     from ballista_delta_spark.session import get_spark, sql
@@ -54,8 +55,7 @@ SCRIPT = textwrap.dedent(
     #    a real parquet scan + sort whose tasks run on remote executors.
     sql(
         spark,
-        "CREATE EXTERNAL TABLE demo STORED AS DELTA LOCATION "
-        "'/root/reference/data/people_countries_delta_dask'",
+        f"CREATE EXTERNAL TABLE demo STORED AS DELTA LOCATION '{{FIXTURE}}'",
     )
     rows = spark.sql(
         "SELECT first_name, country FROM demo ORDER BY first_name"
@@ -132,7 +132,7 @@ SCRIPT = textwrap.dedent(
         c = s3_client(endpoint)
         c.create_bucket(Bucket="ballista")
         upload_tree(
-            c, "/root/reference/data/people_countries_delta_dask",
+            c, FIXTURE,
             "ballista", "pc",
         )
         df = register_s3_parquet(
@@ -143,7 +143,7 @@ SCRIPT = textwrap.dedent(
         print("S3_OK")
     spark.stop()
     """
-).format(repo=REPO)
+).format(repo=REPO, fixture=os.path.join(REPO, "data", "people_countries_delta"))
 
 
 def _executor_log_tails(before: set[str]) -> str:

@@ -20,6 +20,7 @@ URL parity on real clusters that do ship the jars.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
@@ -92,7 +93,10 @@ def test_delta_over_s3_golden_fixture(spark, s3_client, moto_endpoint):
     (examples/s3_standalone.rs:15-47) — golden people_countries rows."""
     from ballista_delta_spark.sources.registry import register_delta_s3
 
-    fixture = "/root/reference/data/people_countries_delta_dask"
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "data", "people_countries_delta",
+    )
     _put_tree(s3_client, fixture, "ballista", "people_countries")
 
     df = register_delta_s3(
