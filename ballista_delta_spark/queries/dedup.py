@@ -1122,6 +1122,24 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _text_fingerprint(text):
+    """64-bit xxhash64 content fingerprint of a text column."""
+    return F.xxhash64(text)
+
+
+def _by_exact_text(d: DataFrame) -> tuple[DataFrame, list[str]]:
+    """``d`` shuffled for a window over exact document identity, and
+    that window's partition columns. The shuffle key is the xxhash64
+    fingerprint, not md5 or the text: an 8-byte long, far cheaper per
+    byte than a cryptographic digest. The window partitions by the
+    fingerprint AND the text, so the identity is exact: two distinct
+    documents whose 64-bit fingerprints collide stay two groups. The
+    fingerprint shuffle already clusters every such group, so the window
+    adds no exchange of its own."""
+    d = d.withColumn("__text_fp", _text_fingerprint(F.col("text")))
+    return d.repartition("__text_fp"), ["__text_fp", "text"]
+
+
 # ---------------------------------------------------- dedup_survivorship
 # Canonical-document selection ("survivorship"): exact-duplicate groups
 # keep ONE copy, picked by lowest doc_id (groups share md5(text), so
@@ -1162,17 +1180,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    # Partition by the xxhash64 content fingerprint, not md5 (r15, guide
-    # §2.3): the hash is internal-only (outputs are per-lang counts), an
-    # 8-byte long exchange key instead of a 32-char hex string, and
-    # xxhash64 over full document text is ~an order of magnitude cheaper
-    # per byte than a cryptographic digest. Same groups as the oracle's
-    # md5 partitioning whenever the fingerprint is collision-free on the
-    # corpus — which the oracle gate checks at every SF.
-    w = Window.partitionBy(F.xxhash64("text")).orderBy(
-        F.col("n_chars").desc(), "doc_id"
-    )
+    d, key = _by_exact_text(load(spark, sf_dir, "documents"))
+    w = Window.partitionBy(*key).orderBy(F.col("n_chars").desc(), "doc_id")
     picked = d.select(
         "lang", "n_chars", F.row_number().over(w).alias("rn")
     )
@@ -1264,11 +1273,10 @@ def corpus_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import text_decontaminate
 
     d = load(spark, sf_dir, "documents")
-    # xxhash64 fingerprint, not md5, for the exact-stage pick: internal
-    # key only (stage counts are the output) — see dedup_survivorship.
-    w = Window.partitionBy(F.xxhash64("text")).orderBy("doc_id")
+    by_text, key = _by_exact_text(d)
+    w = Window.partitionBy(*key).orderBy("doc_id")
     s1 = (
-        d.select("doc_id", "n_chars", F.row_number().over(w).alias("rn"))
+        by_text.select("doc_id", "n_chars", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") == 1)
         .drop("rn")
         .localCheckpoint(eager=False)

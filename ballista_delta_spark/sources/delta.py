@@ -174,9 +174,10 @@ class DeltaTable:
         are stored as strings in ``partitionValues``; the dir names carry the
         same strings).
 
-        ``with_location`` appends ``__src_fp`` (normalized absolute file
-        path) and ``__src_ri`` (parquet row index) columns — the physical
-        row identity the DV-writing DELETE needs.
+        ``with_location`` appends ``__src_fp`` (the file key: the file's
+        URI path as the scan spells it, see :func:`_file_key`) and
+        ``__src_ri`` (parquet row index) columns — the physical row
+        identity the DV-writing DELETE needs.
 
         ``with_row_lineage`` additionally reads the MATERIALIZED row
         lineage columns (:data:`MATERIALIZED_ROW_ID_COL` /
@@ -219,15 +220,13 @@ class DeltaTable:
                 F.col(MATERIALIZED_ROW_ID_COL),
                 F.col(MATERIALIZED_ROW_COMMIT_COL),
             ]
-        attach_location, deleted = self._dv_parts(
+        attach_location, bits = self._dv_parts(
             spark, keep_location=with_location
         )
 
         def dv_filter(df: DataFrame) -> DataFrame:
             df = attach_location(df)
-            if deleted is not None:
-                df = df.join(deleted, ["__src_fp", "__src_ri"], "left_anti")
-            return df
+            return df if bits is None else _drop_deleted(df, bits)
 
         paths = [_fs_join(self.path, p) for p in snap.files]
         # Absolute add paths (shallow clones) can live OUTSIDE the table
@@ -253,9 +252,7 @@ class DeltaTable:
         # references live under the SOURCE's roots): group files by
         # identical partitionValues and union per-group scans with the
         # partition literals attached. partitionValues keys are PHYSICAL
-        # names per the spec. DVs apply per group — each branch is its
-        # own parquet scan with its own ``_metadata`` columns, and the
-        # anti-join relation simply misses the other groups' files.
+        # names per the spec.
         if with_row_lineage:
             raise ValueError(
                 "with_row_lineage on a non-Hive partition layout is not "
@@ -277,9 +274,8 @@ class DeltaTable:
             return tuple((c, v is None, v or "") for c, v in kv[0])
 
         # Attach location columns per branch (each parquet scan owns its
-        # _metadata columns) but apply the DV anti-join ONCE above the
-        # union — joining the expanded-bitmap relation into every branch
-        # would re-run the bitmap decode job per partition group.
+        # _metadata columns) but join the DV bitsets ONCE above the union
+        # rather than broadcasting them into every branch.
         for key, group in sorted(by_pv.items(), key=_group_key):
             df = attach_location(
                 spark.read.schema(phys_data_schema).parquet(*group)
@@ -291,75 +287,57 @@ class DeltaTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if deleted is not None:
-            out = out.join(deleted, ["__src_fp", "__src_ri"], "left_anti")
+        if bits is not None:
+            out = _drop_deleted(out, bits)
         return out.select(*logical)
 
     def _dv_parts(self, spark: SparkSession, keep_location: bool = False):
-        """Return ``(attach_location, deleted)`` — the pieces of the DV
+        """Return ``(attach_location, bits)`` — the pieces of the DV
         merge-on-read filter, separated so multi-branch scans (the
         non-Hive union path) can attach the per-scan ``_metadata``-derived
-        location columns inside each branch but run the anti-join ONCE
+        location columns inside each branch but join the bitsets ONCE
         above the union. ``attach_location`` is the identity when neither
-        DVs nor ``keep_location`` need it; ``deleted`` is ``None`` when no
-        active file carries a deletion vector, else the expanded
-        (file, row_index) relation to anti-join on.
+        DVs nor ``keep_location`` need it; ``bits`` is ``None`` when no
+        active file carries a deletion vector, else the
+        :func:`_dv_bitset_relation` for :func:`_drop_deleted`.
 
-        The driver only READS each file's compressed bitmap (metadata-scale
-        — delta-spark holds the same bitmaps in task memory) and ships a
-        (file_path, bitmap_bytes) local relation; row-index EXPANSION
-        happens executor-side in one ``mapInArrow`` stage (a merge-on-read
-        DELETE of 10^8 rows must never materialize 10^8 tuples on the
-        driver). The scan gains Spark's ``_metadata.file_path`` /
-        ``_metadata.row_index`` columns and anti-joins the expanded set.
-        Join planning broadcasts the deleted set when the descriptors'
-        cardinalities say it is small (the overwhelmingly common case) and
-        sort-merges when a table carries giant DVs — correct either way,
-        and the data files are never rewritten, which is the point of
-        merge-on-read.
+        The driver reads each DV'd file's compressed bitmap and its file
+        key once per file; no row is decoded on either side. The scan
+        side keys each row by ``_metadata.file_path`` minus its scheme
+        (no decode) plus ``_metadata.row_index``.
         """
         snap = self.snapshot
-        dv_adds = {rel: snap.files[rel] for rel in _dv_paths(snap)}
 
         def attach_location(df: DataFrame) -> DataFrame:
-            # _metadata.file_path spells the scheme as file:/x or file:///x
-            # depending on FS/Spark version — normalize to a plain path —
-            # AND percent-encodes URI-special characters (a space becomes
-            # %20). __src_fp must be the DECODED filesystem path: every
-            # consumer (the DV anti-join here, the row-id broadcast join,
-            # the DML attribution maps) keys on raw os.path strings, and
-            # an encoded join side silently matches nothing — DVs on a
-            # table under '/data/my table/' would be invisible. '+' is
-            # protected first: url_decode is form-decoding ('+' -> space);
-            # we want pure percent-decoding of the URI path.
+            # Spark spells the scheme file:/x or file:///x by version.
+            # A byte-prefix test and a substring cost little per row; a
+            # regex (a Java String round trip per row) nearly doubled the
+            # scan of a large DV'd file.
+            fp = F.col("_metadata.file_path")
             return df.select(
                 "*",
-                F.url_decode(
-                    F.replace(
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:/+", "/"
-                        ),
-                        F.lit("+"), F.lit("%2B"),
-                    )
-                ).alias("__src_fp"),
+                F.when(fp.startswith("file:///"), F.substr(fp, F.lit(8)))
+                .otherwise(F.substr(fp, F.lit(6)))
+                .alias("__src_fp"),
                 F.col("_metadata.row_index").alias("__src_ri"),
             )
 
-        if not dv_adds:
+        dv_rels = _dv_paths(snap)
+        if not dv_rels:
             return (
                 attach_location if keep_location else (lambda df: df)
             ), None
         from . import dv as _dv
 
-        bitmaps = [
-            (
-                os.path.abspath(_fs_join(self.path, rel)),
-                _dv.read_dv_bytes(self.path, _as_dict(a["deletionVector"])),
-                int(_as_dict(a["deletionVector"]).get("cardinality") or 0),
-            )
-            for rel, a in dv_adds.items()
-        ]
-        return attach_location, _expand_dv_bitmaps(spark, bitmaps)
+        dvs = []
+        for rel in dv_rels:
+            desc = _as_dict(snap.files[rel]["deletionVector"])
+            dvs.append((
+                _file_key(_fs_join(self.path, rel)),
+                _dv.read_dv_bytes(self.path, desc),
+                int(desc.get("cardinality") or 0),
+            ))
+        return attach_location, _dv_bitset_relation(spark, dvs)
 
     def _hive_pathed(self, rel_path: str) -> bool:
         parts = rel_path.split("/")[:-1]
@@ -382,48 +360,72 @@ class DeltaTable:
         return out
 
 
-def _expand_dv_bitmaps(
-    spark: SparkSession, bitmaps: list[tuple[str, bytes, int]]
+def _dv_bitset_relation(
+    spark: SparkSession, dvs: list[tuple[str, bytes, int]]
 ) -> DataFrame:
-    """(abs_file_path, bitmap_bytes, cardinality) rows -> a distributed
-    ``(__src_fp, __src_ri)`` relation of deleted row indexes.
+    """(file key, bitmap bytes, cardinality) per DV'd file -> a
+    ``(__src_fp, __hi, __w)`` relation: one row per touched 65,536-row
+    roaring container, ``__hi = row_index >> 16`` and ``__w`` its
+    1,024-word bitset (``array<bigint>``). Built on the driver straight
+    from the serialized containers (``dv.roaring_bitsets``), never from a
+    per-row index list, and handed to Spark as an Arrow-built local
+    relation: no job.
 
-    The input is metadata-sized (one compressed roaring bitmap per file)
-    and becomes an Arrow-built local relation: no job to build it, and
-    its scan already spreads the files over ``min(files,
-    defaultParallelism)`` tasks. The O(deleted rows) expansion runs
-    executor-side in one ``mapInArrow`` stage (``dv.expand_dv_batches``),
-    so the driver never holds a per-row collection.
+    Spark sizes an array column as one element, so the planner would
+    underestimate this relation about 1,000-fold. The join strategy is
+    decided here from the true size instead: broadcast up to
+    ``autoBroadcastJoinThreshold``, a shuffle hash join on ``(__src_fp,
+    __hi)`` past it."""
+    from .dv import _check_cardinality, bitset_cardinality, roaring_bitsets
 
-    The planner sizes this relation by its input, a few bitmaps, and so
-    would always broadcast the expansion — through the driver. The
-    descriptors' cardinalities give the expanded size up front: past the
-    broadcast threshold, or when a descriptor records none, the relation
-    asks for a sort-merge join instead."""
-    from .dv import expand_dv_batches
-
-    rel = _arrow_relation(spark, bitmaps, pa.schema([
-        ("__src_fp", pa.string()), ("__dv", pa.binary()),
-        ("__card", pa.int64()),
-    ])).mapInArrow(expand_dv_batches, "__src_fp string, __src_ri long")
-    # ~ UnsafeRow bytes per deleted row: 24 fixed + the path string.
-    expanded = sum(card * (24 + len(fp)) for fp, _, card in bitmaps)
+    keys, his, words = [], [], []
+    for key, data, card in dvs:
+        containers = roaring_bitsets(data)
+        _check_cardinality(
+            card, sum(bitset_cardinality(w) for _, w in containers)
+        )
+        keys += [key] * len(containers)
+        his += [hi for hi, _ in containers]
+        words += [w.view("<i8") for _, w in containers]
+    offsets = pa.array(range(0, 1024 * (len(words) + 1), 1024), pa.int32())
+    rel = _arrow_relation(spark, [
+        keys, his, pa.ListArray.from_arrays(
+            offsets, pa.chunked_array(words, pa.int64()).combine_chunks()
+        ),
+    ], pa.schema([
+        ("__src_fp", pa.string()), ("__hi", pa.int64()),
+        ("__w", pa.list_(pa.int64())),
+    ]))
+    size = sum(8 * 1024 + 8 + len(key) for key in keys)
     threshold = spark._jsparkSession.sessionState().conf() \
         .autoBroadcastJoinThreshold()
-    if expanded > threshold or not all(card for _, _, card in bitmaps):
-        rel = rel.hint("merge")
-    return rel
+    return F.broadcast(rel) if size <= threshold else rel.hint("shuffle_hash")
+
+
+def _drop_deleted(df: DataFrame, bits: DataFrame) -> DataFrame:
+    """Rows of a located scan (``__src_fp``/``__src_ri``) whose bit in
+    ``bits`` (:func:`_dv_bitset_relation`) is clear: a left join on
+    ``(file key, row_index >> 16)``, then one word lookup per row."""
+    return (
+        df.withColumn("__hi", F.shiftright("__src_ri", 16))
+        .join(bits, ["__src_fp", "__hi"], "left")
+        .filter(
+            "__w IS NULL OR (__w[(__src_ri & 65535) >> 6] "
+            ">> CAST(__src_ri & 63 AS INT)) & 1 = 0"
+        )
+        .drop("__hi", "__w")
+    )
 
 
 def _arrow_relation(
-    spark: SparkSession, rows: list[tuple], schema: pa.Schema
+    spark: SparkSession, columns: list, schema: pa.Schema
 ) -> DataFrame:
-    """Driver-side tuples -> a local relation built from Arrow. Unlike
+    """Driver-side columns (sequences or Arrow arrays, one per schema
+    field) -> a local relation built from Arrow. Unlike
     ``createDataFrame`` on a Python list, which plans a pickled RDD that
     needs a Python worker stage, this launches no job at all."""
-    cols = list(zip(*rows)) or [()] * len(schema)
     return spark.createDataFrame(pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+        [pa.array(c, f.type) for c, f in zip(columns, schema)], schema=schema
     ))
 
 
@@ -707,7 +709,7 @@ def _row_lineage_df(spark: SparkSession, path: str, dt: DeltaTable) -> DataFrame
     base = dt.to_df(spark, with_location=True, with_row_lineage=True)
     rows = [
         (
-            os.path.abspath(_fs_join(path, rel)),
+            _file_key(_fs_join(path, rel)),
             int(a["baseRowId"]),
             int(a.get("defaultRowCommitVersion") or 0),
         )
@@ -720,7 +722,7 @@ def _row_lineage_df(spark: SparkSession, path: str, dt: DeltaTable) -> DataFrame
             f"{missing} file(s) lack baseRowId despite rowTracking — "
             "corrupt enablement commit"
         )
-    id_map = F.broadcast(_arrow_relation(spark, rows, pa.schema([
+    id_map = F.broadcast(_arrow_relation(spark, list(zip(*rows)), pa.schema([
         ("__src_fp", pa.string()), ("__base", pa.int64()),
         ("__dcv", pa.int64()),
     ])))
@@ -2114,6 +2116,28 @@ def _fs_join(root: str, rel: str) -> str:
         return dec
     raw = os.path.join(root, rel)
     return raw if os.path.exists(raw) else dec
+
+
+# What java.net.URI's multi-argument constructors escape in a path, as
+# Hadoop's ``Path.toUri()`` does: every ASCII character outside RFC 2396
+# pchar, ';' and '/' ('%' included), plus the non-ASCII space and ISO
+# control characters. Other non-ASCII characters stay as they are.
+_URI_PATH_ESCAPE = re.compile(
+    r"[^A-Za-z0-9\-_.!~*'():@&=+$,;/\x80-\U0010ffff]"
+    r"|[\x80-\x9f\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
+
+
+def _file_key(path: str) -> str:
+    """The key the scan gives a local file: Hadoop's
+    ``Path(abspath).toUri().getRawPath()``, which is exactly
+    ``_metadata.file_path`` minus its ``file:`` scheme. Computed once per
+    file on the driver, so the scan side never decodes a row."""
+    from urllib.parse import quote
+
+    return _URI_PATH_ESCAPE.sub(
+        lambda m: quote(m.group(), safe=""), os.path.abspath(path)
+    )
 
 
 def _next_version(log: str) -> int:
@@ -7062,7 +7086,7 @@ def reorg_purge(
 
     Scale shape vs OPTIMIZE: a 100 TB table with 0.1% of its files DV'd
     rewrites ONLY that 0.1% — the scan is the DV'd-file subset (one job,
-    the anti-join applies inside ``to_df``), untouched files are never
+    the DV bitset join applies inside ``to_df``), untouched files are never
     read. ``delta-spark``'s REORG is the same operation (an OPTIMIZE
     restricted to files needing materialization).
 

@@ -10,7 +10,8 @@ delta-rs users actually run (`DELETE FROM`, `UPDATE ... SET`, `MERGE INTO`).
 Copy-on-write, the way delta-spark implements it:
 
 1. **Find affected files** — one distributed scan attributes every matching
-   row to its parquet file (``input_file_name``); only files that contain at
+   row to its parquet file (its ``_metadata.file_path`` key, mapped to the
+   add action on the driver once per file); only files that contain at
    least one matching row are touched. Partition pruning applies to this
    scan (a predicate on a partition column prunes directories before
    listing), so a partition-aligned DELETE never reads non-matching
@@ -45,7 +46,8 @@ from pyspark.sql import functions as F
 from .delta import (
     DeltaTable,
     ENGINE_INFO,
-    _dv_paths,
+    _file_key,
+    _fs_join,
     _fs_rel,
     _stage_adds,
     _strip_file_scheme,
@@ -110,89 +112,48 @@ def _check_writable(
 
 
 def _attributed(spark: SparkSession, dt: DeltaTable) -> DataFrame:
-    """Snapshot scan with a per-row relative-file-path column attached.
-
-    input_file_name() is URI-form (file:/... or file:///...) with
-    percent-encoded specials, and reports the path as Spark resolved it —
-    which may be the absolute or the symlink-resolved form of ``dt.path``.
-    Try both prefixes; anything else raises rather than silently producing a
-    key that misses the add-action map (which would make DML a 0-row no-op).
-
-    Shallow-clone exception: the snapshot may reference files OUTSIDE the
-    table root by absolute path — then the add-action key IS the absolute
-    path, so the decoded path passes through unchanged (and the raise
-    guard only covers roots that reference no external file).
-    """
-    stripped = _strip_file_scheme(dt.path).rstrip("/")
-    bases = {os.path.abspath(stripped), os.path.realpath(stripped)}
-    has_external = any(os.path.isabs(r) for r in dt.snapshot.files)
-    has_dv = bool(_dv_paths(dt.snapshot))  # columnar probe — no
-    # per-add materialization on checkpoint-backed snapshots
-    if has_dv:
-        # input_file_name() goes blank after the DV anti-join inside
-        # to_df; the metadata-derived __src_fp survives it — and is
-        # ALREADY percent-decoded at construction (attach_location).
-        df = dt.to_df(spark, with_location=True)
-        decoded = F.col("__src_fp")
-    else:
-        df = dt.to_df(spark)
-        decoded = F.url_decode(
-            # Protect literal '+' first: url_decode is form-decoding
-            # ('+' -> space); we want pure percent-decoding of the URI.
-            F.replace(
-                F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
-                F.lit("+"), F.lit("%2B"),
-            )
-        )
-    if has_external:
-        rel = decoded
-    else:
-        rel = F.raise_error(
-            F.concat(
-                F.lit(f"scanned file outside Delta root {stripped}: "),
-                decoded,
-            )
-        )
-    for b in sorted(bases, key=len):
-        rel = F.when(
-            decoded.startswith(F.lit(b.rstrip("/") + "/")),
-            F.substr(decoded, F.lit(len(b.rstrip("/")) + 2)),
-        ).otherwise(rel)
-    out = df.withColumn(_FILE_COL, rel)
-    return out.drop("__src_fp", "__src_ri") if has_dv else out
+    """Snapshot scan with each row's file key (``_file_key`` spelling)
+    attached as ``_FILE_COL``: a prefix strip of ``_metadata.file_path``,
+    never a per-row decode. Callers group or join on the key and map the
+    touched keys back to add-action paths on the driver
+    (:func:`_canon_rels`), once per file."""
+    if not dt.snapshot.files:
+        return dt.to_df(spark).withColumn(_FILE_COL, F.lit(None).cast("string"))
+    return (
+        dt.to_df(spark, with_location=True)
+        .withColumnRenamed("__src_fp", _FILE_COL)
+        .drop("__src_ri")
+    )
 
 
-def _canon_rels(dt: DeltaTable, rels) -> list[str]:
-    """Map scanned file keys back to the snapshot's add-action keys.
+def _canon_rels(dt: DeltaTable, keys) -> list[str]:
+    """Map scanned file keys back to the snapshot's add-action keys
+    through a driver-side dict, one ``_file_key`` per active file.
 
-    External (shallow-clone) adds are keyed by the abspath form of the
-    source; Spark's scan may report the symlink-RESOLVED form instead
-    (/tmp vs /private/tmp) — tolerate it via a realpath alias map, and
-    raise on anything that matches neither (a silent miss would turn the
-    DML into a 0-row no-op)."""
-    keys = set(dt.snapshot.files)
-    alias = {
-        os.path.realpath(k): k for k in keys if os.path.isabs(k)
+    Shallow-clone adds are absolute paths, possibly outside the table
+    root; they key the same way. A key matching no file is retried by
+    its symlink-resolved path (a scan may report /private/tmp for /tmp),
+    and anything still unmatched raises rather than silently making the
+    DML a 0-row no-op."""
+    from urllib.parse import unquote
+
+    paths = {
+        rel: os.path.abspath(_fs_join(dt.path, rel))
+        for rel in dt.snapshot.files
     }
-    for k in keys:
-        # The scan reports DECODED on-disk names; log keys are RFC 2396
-        # spellings (spec) — alias the decoded form back to its key so
-        # DML on an encoded-path table locates its files.
-        dec = _fs_rel(k)
-        if dec != k:
-            alias.setdefault(dec, k)
-            if os.path.isabs(dec):
-                alias.setdefault(os.path.realpath(dec), k)
+    by_key = {_file_key(p): rel for rel, p in paths.items()}
+    resolved = None
     out: list[str] = []
-    for r in rels:
-        if r in keys:
-            out.append(r)
-        elif r in alias:
-            out.append(alias[r])
-        else:
-            raise ValueError(
-                f"scanned file not in snapshot of {dt.path}: {r!r}"
-            )
+    for k in keys:
+        rel = by_key.get(k)
+        if rel is None:
+            if resolved is None:
+                resolved = {os.path.realpath(p): r for r, p in paths.items()}
+            # _file_key escapes every '%', so unquote inverts it exactly.
+            rel = resolved.get(os.path.realpath(unquote(k)))
+        if rel is None:
+            raise ValueError(f"scanned file not in snapshot of {dt.path}: {k!r}")
+        out.append(rel)
     return out
 
 
@@ -524,36 +485,12 @@ def _dv_mark_rows(
     )
     if not per_file:
         return {}, 0
-    stripped = _strip_file_scheme(dt.path).rstrip("/")
-    bases = sorted(
-        {os.path.abspath(stripped), os.path.realpath(stripped)}, key=len
-    )
-    # __src_fp arrives already percent-decoded (attach_location decodes
-    # at construction — decoding again would corrupt paths that contain
-    # literal %XX sequences).
-    abs_keys = {k for k in dt.snapshot.files if os.path.isabs(k)}
-    alias = {os.path.realpath(k): k for k in abs_keys}
-    new_per_file: dict[str, list[int]] = {}
-    for r in per_file:
-        fp = r["__src_fp"]
-        rel = None
-        for b in bases:
-            if fp.startswith(b + "/"):
-                rel = fp[len(b) + 1:]
-        if rel is None or rel not in dt.snapshot.files:
-            # shallow clone: the snapshot key IS the absolute source
-            # path (or its symlink-resolved form)
-            if fp in abs_keys:
-                rel = fp
-            elif fp in alias:
-                rel = alias[fp]
-            elif os.path.realpath(fp) in alias:
-                rel = alias[os.path.realpath(fp)]
-            else:
-                raise ValueError(
-                    f"scanned file not in snapshot of {dt.path}: {fp}"
-                )
-        new_per_file[rel] = list(r["idxs"])
+    new_per_file = {
+        rel: list(r["idxs"])
+        for r, rel in zip(
+            per_file, _canon_rels(dt, [r["__src_fp"] for r in per_file])
+        )
+    }
     n_marked = sum(len(v) for v in new_per_file.values())
     # Merge with any existing DV on the same file (union of row indexes).
     for rel in new_per_file:

@@ -15,17 +15,22 @@ the DV-writing DELETE path (delta_dml.delete_delta mode="dv"):
   storageType "u" (UUID-named file) / "p" (absolute path), and the inline
   form "i".
 
-One roaring decoder, ``roaring_indexes``, serves every reader. It is numpy:
-array containers are a ``<u2`` view of the buffer, bitmap containers go
-through ``unpackbits`` + ``flatnonzero``, run containers are a repeated
-``arange``. ``parse_roaring_bitmap_array`` wraps it for the driver-side
-callers that merge DVs as lists (DML, REORG, the stream source).
+One roaring decoder, ``roaring_bitsets``, serves every reader. It turns
+each 65,536-row container straight into its bitset of 1,024 uint64 words:
+bitmap containers already are those words (a zero-copy view), array
+containers set at most 4,096 bits, run containers fill ranges.
+``roaring_indexes`` (row indexes as numpy) and
+``parse_roaring_bitmap_array`` (as a list) unpack those bitsets for the
+driver-side callers that merge DVs as index lists (DML, REORG, the stream
+source).
 
 Scale note: a DV is metadata — a compressed bitmap, loaded whole per file
-by every engine (delta-spark holds it in task memory the same way). The
-driver reads the compressed bytes; a scan expands them to row indexes in
-one ``mapInArrow`` stage (``expand_dv_batches``) and anti-joins them
-(see delta.DeltaTable.to_df).
+by every engine (delta-spark holds it in task memory the same way). A scan
+never expands it to row indexes: the driver turns each touched container
+into one ``(file, row_index >> 16, bitset)`` row, and the scan keeps a row
+when its bit is clear, through a broadcast join (see
+delta.DeltaTable._dv_parts). That costs one bit per row of a DV'd file,
+whatever the number of deletions.
 """
 
 from __future__ import annotations
@@ -96,17 +101,19 @@ def _take(data: bytes, pos: int, dtype: str, count: int) -> tuple[np.ndarray, in
     return np.frombuffer(data, dtype, count, pos), end
 
 
-def _roaring32(data: bytes, pos: int) -> tuple[list[np.ndarray], int]:
+def _roaring32(data: bytes, pos: int) -> tuple[list[tuple[int, np.ndarray]], int]:
     """Decode one standard-serialized 32-bit roaring bitmap starting at
-    ``pos``; return (per-container uint32 value arrays, new_pos).
-    RoaringFormatSpec layouts:
+    ``pos``; return (per-container ``(key, words)``, new_pos), where
+    ``words`` is the container's 65,536-bit set as 1,024 little-endian
+    uint64 words and ``key`` its upper 16 bits. RoaringFormatSpec layouts:
 
     cookie 12347 (has run containers): size = (cookie >> 16) + 1, then a
     run-flag bitset of (size+7)//8 bytes; offset header present only when
     size >= 4. cookie 12346: size in the next 4 bytes, no run containers,
     offset header always present. Containers follow in key order: run
     (n_runs × [start, length-1]), array (cardinality × uint16) when
-    cardinality <= 4096, else a 8192-byte bitmap.
+    cardinality <= 4096, else a 8192-byte bitmap — already the 1,024
+    words, taken as a zero-copy view.
     """
     (cookie,), pos = _take(data, pos, "<u4", 1)
     cookie = int(cookie)
@@ -128,48 +135,77 @@ def _roaring32(data: bytes, pos: int) -> tuple[list[np.ndarray], int]:
         # Allocated only once the header read has shown that ``size``
         # fits the buffer.
         run_flags = np.zeros(size, np.uint8)
-    keys = header[0::2].astype(np.uint32) << 16
-    cards = header[1::2].astype(np.int64) + 1
+    keys = header[0::2].tolist()
+    cards = (header[1::2].astype(np.int64) + 1).tolist()
     if has_offsets:
         pos += 4 * size  # sequential read; offsets are redundant
 
-    out: list[np.ndarray] = []
-    for base, card, is_run in zip(keys, cards, run_flags):
+    out: list[tuple[int, np.ndarray]] = []
+    for key, card, is_run in zip(keys, cards, run_flags):
         if is_run:
             (n_runs,), pos = _take(data, pos, "<u2", 1)
             runs, pos = _take(data, pos, "<u2", 2 * int(n_runs))
             # Pair (v, l) encodes the inclusive interval [v, v+l]
-            # (RoaringFormatSpec "run containers").
+            # (RoaringFormatSpec "run containers"): +1 at each start and
+            # -1 past each end, prefix-summed, marks the covered bits.
             starts = runs[0::2].astype(np.int64)
-            lens = runs[1::2].astype(np.int64) + 1
-            if (starts + lens > 1 << 16).any():
+            ends = starts + runs[1::2] + 1
+            if (ends > 1 << 16).any():
                 raise ValueError("roaring run container overflows its key")
-            firsts = np.repeat(starts - (np.cumsum(lens) - lens), lens)
-            low = firsts + np.arange(int(lens.sum()))
+            edges = np.zeros((1 << 16) + 1, np.int32)
+            np.add.at(edges, starts, 1)
+            np.add.at(edges, ends, -1)
+            bits = np.cumsum(edges[:-1]) > 0
         elif card <= 4096:
-            low, pos = _take(data, pos, "<u2", int(card))
+            low, pos = _take(data, pos, "<u2", card)
+            bits = np.zeros(1 << 16, bool)
+            bits[low] = True
         else:
-            words, pos = _take(data, pos, "u1", 8192)
-            low = np.flatnonzero(np.unpackbits(words, bitorder="little"))
-        out.append(base | low.astype(np.uint32))
+            words, pos = _take(data, pos, "<u8", 1024)
+            out.append((key, words))
+            continue
+        out.append((key, np.packbits(bits, bitorder="little").view("<u8")))
     return out, pos
 
 
-def roaring_indexes(data: bytes) -> np.ndarray:
-    """Portable-format 64-bit RoaringBitmapArray -> sorted int64 row
-    indexes. Malformed or truncated input raises ValueError."""
+def roaring_bitsets(data: bytes) -> list[tuple[int, np.ndarray]]:
+    """Portable-format 64-bit RoaringBitmapArray -> one ``(row_index >>
+    16, words)`` pair per container, ascending, where ``words`` holds
+    the container's 65,536 row bits as 1,024 little-endian uint64 words
+    (row ``r`` is bit ``r & 63`` of word ``(r & 65535) >> 6``). Work and
+    memory scale with the containers, never with the deleted rows.
+    Malformed or truncated input raises ValueError."""
     (magic,), pos = _take(data, 0, "<i4", 1)
     if magic != _MAGIC:
         raise ValueError(
             f"bad deletion-vector magic {magic} (expected {_MAGIC})"
         )
     (n_bitmaps,), pos = _take(data, pos, "<i8", 1)
-    parts: list[np.ndarray] = []
+    out: list[tuple[int, np.ndarray]] = []
     for _ in range(int(n_bitmaps)):
-        (key,), pos = _take(data, pos, "<u4", 1)
-        high = np.int64(key) << 32
-        values, pos = _roaring32(data, pos)
-        parts.extend(high | v.astype(np.int64) for v in values)
+        (high,), pos = _take(data, pos, "<u4", 1)
+        containers, pos = _roaring32(data, pos)
+        out.extend(((int(high) << 16) | key, w) for key, w in containers)
+    return out
+
+
+# Set bits per byte value: the popcount of a bitset's uint8 view.
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], np.int64)
+
+
+def bitset_cardinality(words: np.ndarray) -> int:
+    """Number of set bits in a bitset's words."""
+    return int(_POPCOUNT8[words.view(np.uint8)].sum())
+
+
+def roaring_indexes(data: bytes) -> np.ndarray:
+    """Portable-format 64-bit RoaringBitmapArray -> sorted int64 row
+    indexes. Malformed or truncated input raises ValueError."""
+    parts = [
+        (np.int64(hi) << 16)
+        | np.flatnonzero(np.unpackbits(w.view(np.uint8), bitorder="little"))
+        for hi, w in roaring_bitsets(data)
+    ]
     if not parts:
         return np.empty(0, np.int64)
     return np.concatenate(parts)
@@ -277,31 +313,6 @@ def _check_cardinality(card: int, n: int) -> None:
         raise ValueError(
             f"DV cardinality mismatch: descriptor says {card}, bitmap has {n}"
         )
-
-
-# Most rows in one Arrow batch that ``expand_dv_batches`` yields, so one
-# file's huge DV streams out in pieces instead of one giant batch.
-_DV_BATCH_ROWS = 1 << 16
-
-
-def expand_dv_batches(batches):
-    """``mapInArrow`` body of the DV scan: ``(__src_fp, __dv, __card)``
-    batches -> ``(__src_fp, __src_ri)`` batches of deleted row indexes,
-    at most ``_DV_BATCH_ROWS`` rows each. Runs in the Python worker, so
-    the O(deleted rows) expansion never touches the driver."""
-    import pyarrow as pa
-
-    for batch in batches:
-        cols = batch.to_pydict()
-        for fp, data, card in zip(cols["__src_fp"], cols["__dv"], cols["__card"]):
-            idx = roaring_indexes(data)
-            _check_cardinality(card, len(idx))
-            for lo in range(0, len(idx), _DV_BATCH_ROWS):
-                chunk = pa.array(idx[lo : lo + _DV_BATCH_ROWS])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.repeat(fp, len(chunk)), chunk],
-                    ["__src_fp", "__src_ri"],
-                )
 
 
 # ------------------------------------------------------------- write side

@@ -342,13 +342,14 @@ def test_vacuum_removes_orphaned_dv_bins(spark, tmp_path):
     assert read_delta(spark, tbl).count() == 85
 
 
-def test_dv_expansion_runs_executor_side_at_scale(spark, tmp_path, monkeypatch):
-    """The 100-TB-scale contract of the apply path: the driver ships only
-    the compressed bitmap, never the expanded per-row index list. Proven by
-    breaking the decoder IN THE DRIVER PROCESS — Python workers are
-    separate processes, so the scan only survives if expansion happens
-    there — with a DV big enough (1e6 indexes) that driver-side expansion
-    would also be a visible memory event."""
+def test_dv_bitsets_built_without_row_decode_at_scale(spark, tmp_path, monkeypatch):
+    """The 100-TB-scale contract of the apply path: no process expands a
+    DV into its per-row index list. Proven by breaking the row decoders
+    in the driver process, with a DV big enough (2^19 indexes) that a
+    per-row expansion would also be a visible memory event: the driver
+    builds one bitset per touched 65,536-row container straight from the
+    serialized containers, so the relation it ships has at most 16 rows
+    for a 2^20-row file."""
     from ballista_delta_spark.sources import dv as dv_mod
 
     tbl = str(tmp_path / "big")
@@ -362,21 +363,17 @@ def test_dv_expansion_runs_executor_side_at_scale(spark, tmp_path, monkeypatch):
 
     def driver_must_not_expand(data):
         raise AssertionError(
-            "roaring decoder called in the DRIVER process — "
-            "DV row-index expansion must happen executor-side"
+            "roaring row decoder called — the DV read path must build "
+            "bitsets from the containers, never expand row indexes"
         )
 
-    # Both the list wrapper and the decoder the mapInArrow body calls.
     monkeypatch.setattr(
         dv_mod, "parse_roaring_bitmap_array", driver_must_not_expand
     )
     monkeypatch.setattr(dv_mod, "roaring_indexes", driver_must_not_expand)
+    _, bits = DeltaTable(tbl)._dv_parts(spark)
+    assert bits.count() <= 16
     got = read_delta(spark, tbl)
-    # Nor does the expanded set come back through the driver as a
-    # broadcast: 2^19 deleted rows are past the broadcast threshold.
-    assert "Broadcast" not in (
-        got._jdf.queryExecution().executedPlan().toString()
-    )
     assert got.count() == (1 << 20) - len(deleted)
     # Spot-check values, not just counts: all survivors are odd.
     assert got.filter("id % 2 = 0").count() == 0
@@ -393,50 +390,72 @@ def _plan_nodes(plan):
     return out
 
 
-def test_dv_expansion_plans_one_python_stage_without_shuffle(spark):
-    """The expanded-bitmap relation is a local scan feeding ONE Python
-    node: no pickled-RDD scan (a Python stage of its own) and no
-    repartition shuffle in front of the decode."""
-    from ballista_delta_spark.sources.delta import _expand_dv_bitmaps
+def test_dv_read_plans_no_python_node_and_no_shuffle(spark, tmp_path):
+    """A small-DV read is one parquet scan joined to a broadcast local
+    relation of bitsets: no Python node (the DV apply needs no Python
+    worker) and no shuffle Exchange in the executed plan."""
+    from ballista_delta_spark.sources.delta_dml import delete_delta
 
-    bitmaps = [
-        (f"/t/part-{i}.parquet", _serialize_dv([i, i + 7]), 2)
-        for i in range(3)
-    ]
-    df = _expand_dv_bitmaps(spark, bitmaps)
+    tbl = str(tmp_path / "t")
+    write_delta(spark.range(0, 300, 1, 3).selectExpr("id"), tbl)
+    delete_delta(spark, tbl, "id % 7 = 0", mode="dv")
+    df = read_delta(spark, tbl)
     nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
-    leaves = [n.nodeName() for n in nodes if n.children().size() == 0]
-    assert leaves == ["LocalTableScan"], leaves
-    assert not [n for n in nodes if "Exchange" in n.nodeName()]
+    names = [n.nodeName() for n in nodes]
     python_nodes = [
+        n for n in names
+        if n in (
+            "MapInArrow", "PythonMapInArrow", "ArrowEvalPython",
+            "BatchEvalPython",
+        )
+    ] + [
         n.nodeName() for n in nodes
         if n.getClass().getName().startswith(
             "org.apache.spark.sql.execution.python."
         )
     ]
-    assert len(python_nodes) == 1, python_nodes
-    assert sorted(map(tuple, df.collect())) == sorted(
-        (fp, r) for i, (fp, _, _) in enumerate(bitmaps) for r in (i, i + 7)
+    assert not python_nodes, names
+    assert not [n for n in names if n.endswith("Exchange")
+                and n != "BroadcastExchange"], names
+    assert "BroadcastHashJoin" in names, names
+    assert sorted(r.id for r in df.collect()) == [
+        i for i in range(300) if i % 7
+    ]
+
+
+def test_dv_bitset_join_shuffles_past_broadcast_threshold(spark):
+    """The bitset relation's join strategy follows its true size (8 KiB
+    per container), not the planner's one-element estimate of an array:
+    under the threshold it broadcasts, past it the join is a shuffle
+    join on (file key, row_index >> 16). Planned only, never run."""
+    from ballista_delta_spark.sources.delta import (
+        _dv_bitset_relation, _drop_deleted,
     )
 
-    # Join strategy follows the descriptors' cardinalities, not the size
-    # of the local relation: a few deleted rows broadcast, 10^8 (or an
-    # unrecorded count) sort-merge. Planned only, never run.
-    def join_plan(bitmaps):
-        scan = spark.range(10).selectExpr(
-            "'/t/part-0.parquet' AS __src_fp", "id AS __src_ri"
-        )
-        joined = scan.join(
-            _expand_dv_bitmaps(spark, bitmaps),
-            ["__src_fp", "__src_ri"], "left_anti",
-        )
+    dvs = [(f"/t/part-{i}.parquet", _serialize_dv([i, i + 7]), 2)
+           for i in range(3)]
+    scan = spark.range(10).selectExpr(
+        "'/t/part-0.parquet' AS __src_fp", "id AS __src_ri"
+    )
+
+    def plan():
+        joined = _drop_deleted(scan, _dv_bitset_relation(spark, dvs))
         return joined._jdf.queryExecution().executedPlan().toString()
 
-    assert "BroadcastHashJoin" in join_plan(bitmaps)
-    ((fp, data, _),) = bitmaps[:1]
-    for card in (10**8, 0):
-        plan = join_plan([(fp, data, card)])
-        assert "SortMergeJoin" in plan and "Broadcast" not in plan
+    assert "BroadcastHashJoin" in plan()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(3 * 8192))  # below three containers' bytes
+    try:
+        p = plan()
+        assert "ShuffledHashJoin" in p and "Broadcast" not in p
+    finally:
+        spark.conf.set(key, old)
+    rows = _dv_bitset_relation(spark, dvs).collect()
+    assert sorted((r["__src_fp"], r["__hi"]) for r in rows) == [
+        (fp, 0) for fp, _, _ in dvs
+    ]
+    assert all(len(r["__w"]) == 1024 for r in rows)
 
 
 def test_truncated_or_malformed_dv_raises_value_error():
@@ -1125,12 +1144,14 @@ def test_restore_refuses_when_target_dv_bin_vacuumed(spark, tmp_path):
 
 
 def test_dv_and_row_tracking_on_uri_encodable_path(spark, tmp_path):
-    """Tables whose absolute path contains URI-encodable characters
-    (space, '+') must behave identically to plain paths (r10 review fix):
-    Spark's _metadata.file_path percent-encodes the URI, and __src_fp is
-    now decoded AT CONSTRUCTION — before this, the DV anti-join and the
-    row-id broadcast join keyed on raw paths matched nothing, so 'deleted'
-    rows stayed visible and row tracking broke."""
+    """Tables whose absolute path contains URI-encodable characters must
+    behave identically to plain paths. Spark's _metadata.file_path spells
+    a space as %20, keeps '+' and spells a literal '%41' as %2541; the
+    DV bitset join, the row-id join and DML file attribution all key on
+    that spelling. A key that url_decodes ('%2541' -> '%41', or '%41' ->
+    'A'), reads '+' as a space, or keeps the 'file:' prefix on one side
+    only matches nothing, so deleted rows would stay visible and DML
+    would miss its files."""
     from ballista_delta_spark.sources.delta import (
         alter_properties,
         read_delta,
@@ -1139,24 +1160,57 @@ def test_dv_and_row_tracking_on_uri_encodable_path(spark, tmp_path):
     )
     from ballista_delta_spark.sources.delta_dml import (
         delete_delta,
+        merge_delta,
         update_delta,
     )
 
-    root = tmp_path / "enc dir"  # space
-    tbl = str(root / "t+plus")   # plus
-    write_delta(spark.range(20).selectExpr("id"), tbl)
+    root = tmp_path / "enc dir%41"  # space and a literal %41
+    tbl = str(root / "t+plus")      # plus
+    write_delta(spark.range(0, 20, 1, 2).selectExpr("id"), tbl)
     alter_properties(spark, tbl, {"delta.enableRowTracking": "true"})
+
+    def ids():
+        return sorted(r.id for r in read_delta(spark, tbl).collect())
 
     m = delete_delta(spark, tbl, "id < 5", mode="dv")
     assert m["numDeletedRows"] == 5
-    assert read_delta(spark, tbl).count() == 15
+    assert ids() == list(range(5, 20))
 
     update_delta(spark, tbl, "id = 19", {"id": "id + 100"}, mode="dv")
-    vals = sorted(r.id for r in read_delta(spark, tbl).collect())
-    assert vals == list(range(5, 19)) + [119]
+    assert ids() == list(range(5, 19)) + [119]
 
     with_ids = read_delta_with_row_ids(spark, tbl)
     assert with_ids.select("row_id").distinct().count() == 15
+
+    src = spark.createDataFrame([(6,), (7,), (200,)], "id long")
+    m = merge_delta(
+        spark, tbl, src, "t.id = s.id", matched_delete=True, mode="dv"
+    )
+    assert ids() == [5] + list(range(8, 19)) + [119, 200]
+
+    m = delete_delta(spark, tbl, "id IN (8, 119)")  # copy-on-write
+    assert m["numDeletedRows"] == 2
+    assert ids() == [5] + list(range(9, 19)) + [200]
+
+
+def test_file_key_matches_hadoop_raw_path(spark):
+    """The driver-side file key spells a path exactly as Hadoop's
+    ``Path.toUri().getRawPath()`` does, which is what the scan reports
+    in ``_metadata.file_path`` after ``file:``: RFC 2396 escapes for
+    ASCII ('%' included), non-ASCII letters kept, non-ASCII spaces and
+    controls escaped as UTF-8."""
+    from ballista_delta_spark.sources.delta import _file_key
+
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    for p in [
+        "/t/part-0.parquet",
+        "/data/odd dir+x%41/t/k=a%3Ab/part-0.parquet",
+        "/data/#frag?q;p=1&x=$,@!~*'()/\\\"<>^`|/f",
+        "/data/caf\u00e9 \u00fc\u4e2d\U0001f600/f",
+        "/data/nb\u00a0sp\u3000ideo\u2028ls\x85nel\x9fc/f",
+        "/data/\x01ctl\x7fdel\ttab/f",
+    ]:
+        assert _file_key(p) == hadoop_path(p).toUri().getRawPath(), p
 
 
 def test_vacuum_counts_dv_bin_retention_from_supersession(spark, tmp_path):

@@ -925,6 +925,32 @@ class TestR9iBehavior:
         assert got["en"]["chars_dropped"] == 18
         assert got["de"]["n_survivors"] == 1 and got["de"]["n_dropped"] == 0
 
+    def test_exact_dedup_keeps_distinct_texts_on_hash_collision(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Exact dedup groups by document identity, not by its 64-bit
+        fingerprint: with the fingerprint forced to one constant, two
+        distinct documents must both survive, while true copies still
+        collapse."""
+        from ballista_delta_spark.queries import dedup
+
+        monkeypatch.setattr(
+            dedup, "_text_fingerprint", lambda text: F.lit(0).cast("bigint")
+        )
+        rows = [
+            (20, "alpha beta gamma", "en", "s", 16),
+            (21, "delta epsilon zeta", "en", "s", 18),
+            (22, "alpha beta gamma", "en", "s", 16),
+        ]
+        sf = self._mini_docs(spark, tmp_path, rows)
+        (got,) = dedup.dedup_survivorship(spark, sf).collect()
+        assert (got["n_survivors"], got["n_dropped"]) == (2, 1)
+        stages = {
+            r["stage"]: r["n_docs"]
+            for r in dedup.corpus_dedup_cascade(spark, sf).collect()
+        }
+        assert stages["0_raw"] == 3 and stages["1_exact"] == 2
+
     def test_interval_overlap_detects_planted_concurrency(self, spark, tmp_path):
         """Users 1+2 are active 10:00-14:00 and 12:00-18:00 on the same
         day (2 h overlap >= 30 min -> one pair); user 3 overlaps user 2
