@@ -391,7 +391,51 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- join_salted: explicit skew-salted shuffle join (operators.salted_join)
+def salted_join(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    n_salts: int = 16,
+    how: str = "inner",
+) -> DataFrame:
+    """Equi-join on ``on`` with the LEFT side's hot keys spread over
+    ``n_salts`` shuffle partitions.
+
+    When to use: the left side has a few keys carrying a large share of
+    the rows AND the right side is too big to broadcast. A plain shuffle
+    join sends every hot-key row to one task; salting appends a
+    per-row salt to the left key and replicates each right row across all
+    ``n_salts`` salt values, so a hot key's rows land on ``n_salts`` tasks
+    instead of one. Cost: the right side is materialized ``n_salts``
+    times in the shuffle — size n_salts to the skew factor, not higher.
+
+    Prefer AQE's skew-join split (`spark.sql.adaptive.skewJoin.enabled`,
+    on by default in this engine's sessions) when it applies — it reads
+    runtime sizes and splits only the partitions that are actually skewed.
+    Salting is the static fallback for the cases AQE can't rebalance
+    (e.g. the skew appears AFTER a stage boundary AQE has already
+    committed, or deterministic layout is required).
+
+    The salt is random-uniform per left row; correctness doesn't depend
+    on WHICH salt a row gets, only that the (key, salt) join covers every
+    pair — the right-side explode guarantees that. Supports ``inner`` and
+    ``left`` joins (right/full would need the salt on the other side).
+    """
+    if how not in ("inner", "left"):
+        raise ValueError(f"salted_join supports inner|left, got {how!r}")
+    salted_l = left.withColumn(
+        "__salt", (F.rand(seed=42) * n_salts).cast("int")
+    )
+    salted_r = right.withColumn(
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+    )
+    return (
+        salted_l.join(salted_r, [on, "__salt"], how)
+        .drop("__salt")
+    )
+
+
+# --- join_salted: explicit skew-salted shuffle join (salted_join above)
 # registered as a driver-verified query: the salted plan must return
 # EXACTLY the plain join's relation (oracle = plain join + aggregate),
 # while shuffling on (key, salt) so a hot customer's rows spread over
@@ -411,8 +455,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import salted_join
-
     orders = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )

@@ -569,11 +569,71 @@ def _strip_leading_comments(stmt: str) -> str:
             return t
 
 
-# _mask_literals moved to sources/delta.py (r12) so the data-skipping
-# predicate splitters share the ONE Spark-lexer-faithful literal scanner
-# — a weaker hand-rolled copy there is exactly what made OR/AND
-# detection unsound inside double-quoted and backslash-escaped literals.
-from .sources.delta import _mask_literals  # noqa: E402,F401
+def _mask_literals(stmt: str) -> str:
+    """Same-LENGTH copy of ``stmt`` with string-literal contents AND
+    comment contents replaced by 'x' (delimiters kept; '' / "" doubling
+    AND backslash escapes handled — Spark's default parser accepts
+    'O\\'Brien', and skipping the escaped quote is what keeps the mask in
+    sync so trailing syntax like WHERE can't be swallowed into a phantom
+    literal). Comments follow Spark's lexer too: ``--`` to end-of-line
+    and ``/* ... */`` (nesting honored, Spark 3+) are masked so an AND/OR
+    or paren inside comment TEXT can never read as predicate structure —
+    'k = 1 -- note AND m = 9' filters as k = 1 in Spark, and a scanner
+    that split at that AND manufactured a required conjunct. The
+    SQL-dialect regexes in this module all scan the mask and slice spans
+    from the ORIGINAL string — one Spark-lexer-faithful scanner,
+    property-tested (TestMaskLiterals), instead of per-caller copies that
+    drift."""
+    out: list[str] = []
+    i, n = 0, len(stmt)
+    while i < n:
+        q = stmt[i]
+        if q == "-" and i + 1 < n and stmt[i + 1] == "-":
+            j = stmt.find("\n", i + 2)
+            end = n if j == -1 else j  # newline kept: it ends the comment
+            out.append("--" + "x" * (end - i - 2))
+            i = end
+            continue
+        if q == "/" and i + 1 < n and stmt[i + 1] == "*":
+            depth, j = 1, i + 2
+            while j < n and depth:
+                pair = stmt[j:j + 2]
+                if pair == "/*":
+                    depth += 1
+                    j += 2
+                elif pair == "*/":
+                    depth -= 1
+                    j += 2
+                else:
+                    j += 1
+            if depth == 0:
+                out.append("/*" + "x" * (j - i - 4) + "*/")
+            else:  # unterminated: mask to end
+                out.append("/*" + "x" * (n - i - 2))
+            i = j
+            continue
+        if q in ("'", '"'):
+            j = i + 1
+            while j < n:
+                if stmt[j] == "\\":  # \' \\ \n ... — skip escaped char
+                    j += 2
+                    continue
+                if stmt[j] == q:
+                    if j + 1 < n and stmt[j + 1] == q:  # doubled escape
+                        j += 2
+                        continue
+                    break
+                j += 1
+            if j < n:
+                out.append(q + "x" * (j - i - 1) + q)
+                i = j + 1
+            else:  # unterminated: mask to end
+                out.append(q + "x" * (n - i - 1))
+                i = n
+        else:
+            out.append(q)
+            i += 1
+    return "".join(out)
 
 
 def _g(stmt: str, m: "re.Match", name: str) -> str | None:

@@ -440,16 +440,19 @@ def read_delta(
     by version or by timestamp (latest commit whose commitInfo timestamp is
     <= ``timestamp_ms``, the delta-rs ``load_with_datetime`` rule).
 
-    ``where`` additionally enables Delta DATA SKIPPING: eligible conjuncts
-    (``col <op> literal``) are evaluated against each add action's
-    min/max stats DRIVER-side and provably-dead files never reach the scan
-    at all — the same file-level pruning delta-spark's PrepareDeltaScan
-    does, and the layer Spark's own parquet row-group pruning can't reach
-    (Spark still sees every file's footer; this skips the file open
-    entirely). The full predicate is then applied exactly in the scan, so
-    ``where`` is never weaker than ``.filter(where)``. At 100 TB with a
-    Z-ordered or sorted layout this is the difference between opening a
-    million footers and a few hundred.
+    ``where`` additionally enables Delta DATA SKIPPING (``skip_files``):
+    Spark's own SQL parser reads the predicate, its judgeable conjuncts
+    (``col <op> literal``, BETWEEN, IN, IS [NOT] NULL, LIKE 'prefix%',
+    typed date/timestamp literals) are evaluated against each add
+    action's min/max stats DRIVER-side, and provably-dead files never
+    reach the scan at all — the same file-level pruning delta-spark's
+    PrepareDeltaScan does, and the layer Spark's own parquet row-group
+    pruning can't reach (Spark still sees every file's footer; this skips
+    the file open entirely). The full predicate is then applied exactly
+    in the scan, so ``where`` is never weaker than ``.filter(where)``, and
+    text Spark cannot parse raises ``ParseException`` before any scan. At
+    100 TB with a Z-ordered or sorted layout this is the difference
+    between opening a million footers and a few hundred.
     """
     if timestamp_ms is not None:
         if version is not None:
@@ -756,222 +759,6 @@ def read_delta_with_row_ids(
     return _row_lineage_df(spark, path, DeltaTable(path, version=version))
 
 
-# Eligible data-skipping conjunct: <col> <op> <literal> (or reversed).
-_SKIP_CMP = re.compile(
-    r"^\s*(?:(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r"(?P<op>>=|<=|==|<>|!=|=|<|>)\s*"
-    r"(?P<lit>'[^']*'|-?\d+(?:\.\d+)?)"
-    r"|(?P<lit2>'[^']*'|-?\d+(?:\.\d+)?)\s*"
-    r"(?P<op2>>=|<=|==|<>|!=|=|<|>)\s*"
-    r"(?P<col2>[A-Za-z_][A-Za-z0-9_]*))\s*$"
-)
-_FLIP = {
-    "<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "=", "==": "==",
-    "!=": "!=", "<>": "<>",
-}
-
-
-def _mask_literals(stmt: str) -> str:
-    """Same-LENGTH copy of ``stmt`` with string-literal contents AND
-    comment contents replaced by 'x' (delimiters kept; '' / "" doubling
-    AND backslash escapes handled — Spark's default parser accepts
-    'O\\'Brien', and skipping the escaped quote is what keeps the mask in
-    sync so trailing syntax like WHERE can't be swallowed into a phantom
-    literal). Comments follow Spark's lexer too: ``--`` to end-of-line
-    and ``/* ... */`` (nesting honored, Spark 3+) are masked so an AND/OR
-    or paren inside comment TEXT can never read as predicate structure —
-    'k = 1 -- note AND m = 9' filters as k = 1 in Spark, and a scanner
-    that split at that AND manufactured a required conjunct and pruned
-    files unsoundly (ADVICE r12). The SQL-dialect regexes (session.py)
-    and the data-skipping predicate splitters below all scan the mask and
-    slice spans from the ORIGINAL string — one Spark-lexer-faithful
-    scanner, property-tested (TestMaskLiterals), instead of per-caller
-    copies that drift."""
-    out: list[str] = []
-    i, n = 0, len(stmt)
-    while i < n:
-        q = stmt[i]
-        if q == "-" and i + 1 < n and stmt[i + 1] == "-":
-            j = stmt.find("\n", i + 2)
-            end = n if j == -1 else j  # newline kept: it ends the comment
-            out.append("--" + "x" * (end - i - 2))
-            i = end
-            continue
-        if q == "/" and i + 1 < n and stmt[i + 1] == "*":
-            depth, j = 1, i + 2
-            while j < n and depth:
-                pair = stmt[j:j + 2]
-                if pair == "/*":
-                    depth += 1
-                    j += 2
-                elif pair == "*/":
-                    depth -= 1
-                    j += 2
-                else:
-                    j += 1
-            if depth == 0:
-                out.append("/*" + "x" * (j - i - 4) + "*/")
-            else:  # unterminated: mask to end
-                out.append("/*" + "x" * (n - i - 2))
-            i = j
-            continue
-        if q in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if stmt[j] == "\\":  # \' \\ \n ... — skip escaped char
-                    j += 2
-                    continue
-                if stmt[j] == q:
-                    if j + 1 < n and stmt[j + 1] == q:  # doubled escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            if j < n:
-                out.append(q + "x" * (j - i - 1) + q)
-                i = j + 1
-            else:  # unterminated: mask to end
-                out.append(q + "x" * (n - i - 1))
-                i = n
-        else:
-            out.append(q)
-            i += 1
-    return "".join(out)
-
-
-def _strip_comments(s: str) -> str:
-    """Replace each comment span with a single space — exactly what
-    Spark's lexer does (a comment is a token separator, never content).
-    Spans are located on the mask, where comment interiors are all 'x',
-    so the first ``*/`` after a ``/*`` IS its closing delimiter and a
-    ``--`` inside a string literal never matches. Used by ``skip_files``
-    so a commented predicate ('k = 1 -- note') still PRUNES as k = 1
-    instead of merely (soundly) matching nothing."""
-    masked = _mask_literals(s)
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        if masked[i] == "-" and masked[i + 1:i + 2] == "-":
-            j = masked.find("\n", i + 2)
-            out.append(" ")
-            i = n if j == -1 else j  # the newline survives as itself
-        elif masked[i] == "/" and masked[i + 1:i + 2] == "*":
-            j = masked.find("*/", i + 2)
-            out.append(" ")
-            i = n if j == -1 else j + 2
-        else:
-            out.append(s[i])
-            i += 1
-    return "".join(out)
-
-
-def _split_top(pred: str, word: str) -> list[str]:
-    """Split ``pred`` on top-level occurrences of the operator ``word``
-    (case-insensitive). Structure (parens, operators) is detected on the
-    literal-MASKED copy — so string literals in EITHER quote style, with
-    doubled-quote or backslash escapes, are fully opaque — while the
-    returned parts are sliced from the ORIGINAL string. An operator is
-    recognized at any identifier boundary — space, newline, tab, or
-    adjacent parens — never inside an identifier, so a column named
-    ``priORity`` can't split and ``a = 1\\nOR b = 2`` (a legal
-    multi-line predicate) does. Returns ``[pred]`` when no top-level
-    occurrence exists."""
-    masked = _mask_literals(pred)
-    parts, start, depth, i, n = [], 0, 0, 0, len(pred)
-    wlen = len(word)
-    # BETWEEN's own AND is not a conjunction: 'a BETWEEN 1 AND 5' is ONE
-    # predicate, and splitting at its AND manufactured the conjuncts
-    # 'a BETWEEN 1' / '5' (both unjudgeable — sound but never prunable,
-    # and wrong structure for any other consumer). A depth-0 BETWEEN
-    # token arms a counter that swallows the next depth-0 AND; only the
-    # AND split cares (no OR lives inside BETWEEN).
-    pending_between = 0
-
-    def _ident(c: str) -> bool:
-        return c.isalnum() or c == "_"
-
-    def _word_at(idx: int, w: str) -> bool:
-        if masked[idx:idx + len(w)].upper() != w:
-            return False
-        prev = masked[idx - 1] if idx > 0 else " "
-        nxt = masked[idx + len(w)] if idx + len(w) < n else " "
-        return not _ident(prev) and not _ident(nxt)
-
-    while i < n:
-        ch = masked[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        # Slice-local upper(): a whole-string pre-uppercased copy can be
-        # LONGER than the original ('ß'.upper() == 'SS'), shifting every
-        # index after such a char and hiding real operators — which made
-        # the conjunctive path prune unsoundly. (Masked literal contents
-        # are all 'x', so no operator can match inside one.)
-        if depth == 0 and word == "AND" and _word_at(i, "BETWEEN"):
-            pending_between += 1
-            i += len("BETWEEN")
-            continue
-        if depth == 0 and _word_at(i, word):
-            if word == "AND" and pending_between > 0:
-                pending_between -= 1
-                i += wlen
-                continue
-            parts.append(pred[start:i])
-            i += wlen
-            start = i
-            continue
-        i += 1
-    parts.append(pred[start:])
-    return parts
-
-
-def _split_and(pred: str) -> list[str]:
-    """Split on top-level AND. An OR at top level makes the WHOLE
-    predicate ineligible for a conjunctive split (file-level pruning must
-    be provably sound) — callers that can prune disjunctions dispatch on
-    ``_split_or`` first."""
-    if len(_split_top(pred, "OR")) > 1:
-        return []
-    return _split_top(pred, "AND")
-
-
-_SKIP_IN = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s+IN\s*\(\s*(?P<vals>[^)]+?)\s*\)\s*$",
-    re.IGNORECASE,
-)
-# col LIKE 'prefix%' — the StartsWith shape delta-spark skips on. Only
-# judged when the pattern is a non-empty literal prefix + ONE trailing %
-# (no other %/_ wildcards, no backslash escapes): it then becomes the
-# range [prefix, bump(prefix)) — any match starts with prefix, so it is
-# >= prefix and < prefix-with-last-char-incremented in codepoint order
-# (UTF-8 byte order is codepoint order, so Spark-written string stats
-# compare consistently). NOT LIKE / ILIKE / other patterns drop: sound.
-_SKIP_LIKE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s+LIKE\s+'(?P<pat>[^']*)'\s*$",
-    re.IGNORECASE,
-)
-# col BETWEEN lo AND hi — sugar for two range conjuncts. NOT BETWEEN
-# deliberately fails the match (the NOT sits where BETWEEN must) and is
-# dropped: widening, sound.
-_SKIP_BETWEEN = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s+BETWEEN\s+"
-    r"(?P<lo>'[^']*'|-?\d+(?:\.\d+)?)\s+AND\s+"
-    r"(?P<hi>'[^']*'|-?\d+(?:\.\d+)?)\s*$",
-    re.IGNORECASE,
-)
-_SKIP_NULL = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s+IS\s+(?P<not>NOT\s+)?NULL\s*$",
-    re.IGNORECASE,
-)
-
-
-def _skip_lit(lit: str) -> Any:
-    return lit[1:-1] if lit.startswith("'") else (
-        float(lit) if "." in lit else int(lit)
-    )
-
-
 def _temporal_key(s: Any) -> float | None:
     """Date/timestamp string -> epoch seconds (UTC), or None when not
     parseable. Stats spell timestamps ISO with 'T' and an offset while
@@ -990,252 +777,242 @@ def _temporal_key(s: Any) -> float | None:
     return (d - _dt.datetime(1970, 1, 1)).total_seconds()
 
 
-def _split_or(pred: str) -> list[str]:
-    """Split on top-level OR — the disjunctive mirror of ``_split_and``.
-    Returns ``[pred]`` when no top-level OR exists."""
-    return _split_top(pred, "OR")
+def _parsed(text: str):
+    """``text`` as Spark's own SQL parser reads it, parsed once: the
+    Java expression and its tree as nested ``(kind, node, children)``
+    triples, where ``kind`` is the Catalyst class name (``EqualTo``,
+    ``Literal``, ``UnresolvedAttribute``, ...) and ``node`` the JSON fields
+    of ``Expression.toJSON``. Comments, escapes, quoting and keyword case
+    therefore mean exactly what they mean to ``.filter(text)``; text Spark
+    cannot parse raises its ``ParseException``."""
+    jexpr = (
+        SparkSession.active()._jsparkSession.sessionState().sqlParser()
+        .parseExpression(text)
+    )
+    nodes = iter(json.loads(jexpr.toJSON()))  # pre-order
+
+    def build():
+        n = next(nodes)
+        kids = [build() for _ in range(n["num-children"])]
+        return n["class"].rpartition(".")[2], n, kids
+
+    return jexpr, build()
 
 
-def _unwrap_parens(pred: str) -> str:
-    """Strip outer parens that wrap the WHOLE expression — ``(a AND b)``
-    -> ``a AND b``, but ``(a) IN (b)``-style strings where the first
-    paren closes early are left alone. Paren depth is counted on the
-    literal-MASKED copy, so a paren inside a string literal in either
-    quote style (``(s = ')')``) can't end the wrap early."""
-    s = pred.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        masked = _mask_literals(s)
-        n = len(masked)
-        for i, ch in enumerate(masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < n - 1:
-                    return s  # first paren closes early: not a full wrap
-        s = s[1:-1].strip()
-    return s
+def _flatten(kind: str, tree) -> list:
+    """The operands of a chain of ``kind`` (``And`` / ``Or``) nodes."""
+    if tree[0] != kind:
+        return [tree]
+    return [t for kid in tree[2] for t in _flatten(kind, kid)]
+
+
+def _column(tree) -> str | None:
+    """The column a one-part unresolved name refers to. Multi-part names
+    and names containing ', ' (which ``nameParts`` cannot tell apart)
+    are not judged."""
+    kind, n, _ = tree
+    if kind != "UnresolvedAttribute":
+        return None
+    name = n["nameParts"][1:-1]
+    return None if ", " in name else name
+
+
+_NUMERIC = ("byte", "short", "integer", "long", "float", "double")
+
+
+def _literal(tree, col_type: Any) -> Any:
+    """The value of a literal operand as the min/max evaluator compares
+    it, or None when it is not judged. Numbers and strings are judged on
+    any column. ``DATE '…'`` / ``TIMESTAMP '…'`` and
+    ``CAST('…' AS DATE|TIMESTAMP)`` are judged only against a column of
+    that type: Spark casts a date column compared with a timestamp, or a
+    string column compared with a date, the other way round."""
+    kind, n, kids = tree
+    if (
+        kind == "Cast" and n["dataType"] in ("date", "timestamp")
+        and kids[0][0] == "Literal" and kids[0][1]["dataType"] == "string"
+    ):
+        typ, val = n["dataType"], kids[0][1]["value"]
+    elif kind == "Literal":
+        typ, val = n["dataType"], n["value"]
+    else:
+        return None
+    if val is None or typ == "string":
+        return val
+    if typ in _NUMERIC or typ.startswith("decimal"):
+        return int(val) if val.lstrip("-").isdigit() else float(val)
+    want = {"date": T.DateType, "timestamp": T.TimestampType}.get(typ)
+    if want and isinstance(col_type, want) and _temporal_key(val) is not None:
+        return val
+    return None
+
+
+def _judged(col_tree, lit_tree, types: dict[str, Any]):
+    """``(column, literal value)`` when the operands are a judgeable
+    column and literal, else None."""
+    col = _column(col_tree)
+    val = None if col is None else _literal(lit_tree, types.get(col))
+    return None if val is None else (col, val)
+
+
+# Comparison class -> (op with the column on the left, op with it on the
+# right): `5 > k` is judged as `k < 5`.
+_CMP_OPS = {
+    "EqualTo": ("=", "="),
+    "NotEqualTo": ("!=", "!="),  # Not(EqualTo): `!=` and `<>`
+    "LessThan": ("<", ">"),
+    "LessThanOrEqual": ("<=", ">="),
+    "GreaterThan": (">", "<"),
+    "GreaterThanOrEqual": (">=", "<="),
+}
+
+
+def _parse_skip_branch(branch, types: dict[str, Any], jexpr):
+    """One OR branch of the parsed predicate -> (cmp conjuncts, null
+    conjuncts) over its top-level AND chain. A conjunct that is not a
+    judgeable shape is dropped, which only widens the surviving file
+    set."""
+    conjuncts: list[tuple[str, str, Any]] = []
+    null_conjuncts: list[tuple[str, bool]] = []
+    for kind, n, kids in _flatten("And", branch):
+        if kind == "Not" and kids[0][0] == "EqualTo":
+            kind, n, kids = "NotEqualTo", kids[0][1], kids[0][2]
+        if kind in _CMP_OPS:
+            for (c, lit), op in zip((kids, kids[::-1]), _CMP_OPS[kind]):
+                hit = _judged(c, lit, types)
+                if hit:
+                    conjuncts.append((hit[0], op, hit[1]))
+                    break
+        elif kind == "UnresolvedFunction" and len(kids) == 3 and (
+            n["nameParts"].lower() == "[between]"
+        ):  # col BETWEEN lo AND hi: two range conjuncts
+            for op, lit in ((">=", kids[1]), ("<=", kids[2])):
+                hit = _judged(kids[0], lit, types)
+                if hit:
+                    conjuncts.append((hit[0], op, hit[1]))
+        elif kind == "In":
+            hits = [_judged(kids[0], lit, types) for lit in kids[1:]]
+            if None not in hits:
+                conjuncts.append((hits[0][0], "in", [v for _, v in hits]))
+        elif kind in ("IsNull", "IsNotNull"):
+            col = _column(kids[0])
+            if col:
+                null_conjuncts.append((col, kind == "IsNotNull"))
+        elif kind == "Like":
+            # 'prefix%' -> the range [prefix, bump(prefix)): any match
+            # starts with prefix, so it is >= prefix and < prefix with its
+            # last char incremented (codepoint order == UTF-8 byte order,
+            # the order Spark-written string stats use). Any other pattern
+            # shape is not judged, nor is any LIKE with an ESCAPE clause:
+            # toJSON drops the escape character, toString names it.
+            hit = _judged(kids[0], kids[1], types)
+            pat = hit and hit[1]
+            if not (isinstance(pat, str) and pat.endswith("%")):
+                continue
+            prefix = pat[:-1]
+            if (
+                not prefix or any(ch in prefix for ch in "%_\\")
+                or " ESCAPE '" in jexpr.toString()
+            ):
+                continue
+            conjuncts.append((hit[0], ">=", prefix))
+            if ord(prefix[-1]) < 0x10FFFF:
+                conjuncts.append(
+                    (hit[0], "<", prefix[:-1] + chr(ord(prefix[-1]) + 1))
+                )
+    return conjuncts, null_conjuncts
+
+
+def _derived_bounds(
+    snap: "Snapshot", conjuncts: "list[tuple[str, str, Any]]"
+) -> "list[tuple[str, str, Any]]":
+    """Generated-column partition pruning (delta-spark's optimization): a
+    partition column generated as ``CAST(src AS DATE)`` or ``year(src)``
+    (read with the same parser) gets a bound from a predicate on the raw
+    SOURCE column — ``ts >= '2024-03-05 10:00'`` prunes to
+    ``event_date >= '2024-03-05'``. Strict inequalities widen to
+    inclusive ones (same-day/-year rows may satisfy the original), so
+    derivation is sound by construction."""
+    import datetime as _dt
+
+    derived = []
+    for f in snap.schema.fields:
+        expr = (f.metadata or {}).get("delta.generationExpression")
+        if not expr or f.name not in snap.partition_columns:
+            continue
+        _, (kind, n, kids) = _parsed(expr)
+        is_date = kind == "Cast" and n["dataType"] == "date"
+        is_year = kind == "UnresolvedFunction" and (
+            n["nameParts"].lower() == "[year]"
+        )
+        src = _column(kids[0]) if len(kids) == 1 else None
+        if not (is_date or is_year) or src is None:
+            continue
+        for col, op, val in conjuncts:
+            # != never derives: ts != '2024-03-05 10:00' is satisfied by
+            # rows at OTHER times of the same day, so a derived
+            # gd != '2024-03-05' would prune partitions holding matches.
+            key = _temporal_key(val) if isinstance(val, str) else None
+            if col != src or key is None or op in ("in", "!="):
+                continue
+            d = _dt.datetime.fromtimestamp(key, _dt.timezone.utc)
+            derived.append((
+                f.name, {">": ">=", "<": "<="}.get(op, op),
+                d.date().isoformat() if is_date else d.year,
+            ))
+    return derived
 
 
 def skip_files(snap: "Snapshot", where: str) -> dict[str, Any]:
     """The subset of ``snap.files`` that might contain rows matching
-    ``where``, judged from per-file min/max/nullCount stats. Sound by
-    construction: only ``col <op> literal`` (incl. ``!=``/``<>``),
-    ``col BETWEEN lo AND hi`` (two range conjuncts; NOT BETWEEN drops),
-    ``col LIKE 'prefix%'`` (the [prefix, bump) range; any other pattern
-    shape drops), ``col IN (literals)``, and ``col IS [NOT] NULL``
-    conjuncts prune;
-    anything else (functions, casts, unknown columns, missing stats)
-    keeps the file. An IN list prunes when EVERY value falls outside
-    [min, max]; ``!=`` prunes only a constant chunk (min==max==literal —
-    spec-compliant stats bound all values, and null rows can't satisfy
-    ``!=`` either); IS NULL prunes on nullCount=0; IS NOT NULL prunes
-    when nullCount equals the file's numRecords (an all-null column
-    chunk).
+    ``where``, judged from per-file min/max/nullCount stats and partition
+    values. ``where`` is read by Spark's own SQL parser (``_parsed``), so
+    it means exactly what ``.filter(where)`` means; text Spark cannot
+    parse raises ``ParseException``.
+
+    Judged conjuncts, with the column on either side: ``=``, ``!=``/``<>``,
+    ``<``, ``<=``, ``>``, ``>=`` and ``BETWEEN`` against a literal (``!=``
+    prunes only a constant chunk, min == max == literal); ``IN
+    (literals)`` (every value outside [min, max]); ``IS NULL``
+    (nullCount = 0) and ``IS NOT NULL`` (nullCount = numRecords); ``LIKE
+    'prefix%'``. Literals are numbers, strings, and date/timestamp
+    literals or casts against a column of that type. Anything else
+    (``NOT``, functions, a cast of a column, a multi-part name, unknown
+    columns, missing stats) keeps the file.
 
     Disjunctions (the TPC-H q19 shape, ``(a AND b) OR (c AND d)``) prune
-    too: a file is skipped only when EVERY top-level OR branch is
-    provably dead for it. A branch contributing no judgeable conjunct
-    can never be proved dead, so it disables pruning for the whole
-    predicate — keeping the evaluation sound.
+    too: a file is skipped only when EVERY top-level OR branch is provably
+    dead for it, so a branch with no judgeable conjunct disables pruning.
     """
-    # Comments are token separators to Spark's lexer — strip them first
-    # so 'k = 1 -- note' still prunes as k = 1 (masking alone would only
-    # make the commented conjunct unjudgeable: sound but prune-less).
-    # Then unwrap a fully-parenthesized predicate: callers composing
-    # predicates programmatically wrap defensively, and "(k = 5 OR ...)"
-    # must prune exactly like its unwrapped form.
-    where = _unwrap_parens(_strip_comments(where))
-    branches = _split_or(where)
-    if len(branches) == 1:
-        groups = [_parse_skip_branch(snap, where)]
-    else:  # top-level OR
-        groups = []
-        for br in branches:
-            g = _parse_skip_branch(snap, _unwrap_parens(br))
-            if not (g[0] or g[1]):
-                groups = []  # unjudgeable branch: the OR can't prune
-                break
-            groups.append(g)
-    if not groups or all(not c and not nc for c, nc in groups):
+    jexpr, tree = _parsed(where)
+    types = {f.name: f.dataType for f in snap.schema.fields}
+    groups = [
+        _parse_skip_branch(b, types, jexpr) for b in _flatten("Or", tree)
+    ]
+    for conjuncts, _ in groups:
+        conjuncts.extend(_derived_bounds(snap, conjuncts))
+    if not all(c or nc for c, nc in groups):
         # items() takes _FileIndex's batched to_pylist route; dict(mapping)
         # on a MutableMapping would pay a per-row struct conversion.
         return dict(snap.files.items())
 
-    types = {f.name: f.dataType for f in snap.schema.fields}
-    ref_cols: set[str] = set()
-    for conjuncts, null_conjuncts in groups:
-        ref_cols |= (
-            {c for c, _, _ in conjuncts} | {c for c, _ in null_conjuncts}
-        )
-    phys = {c: snap.physical(c) for c in ref_cols}
+    phys = {
+        c: snap.physical(c) for cs, ncs in groups for c, *_ in cs + ncs
+    }
     part_cols = set(snap.partition_columns)
-    branch_evals = [
+    evals = [
         _build_may_match(c, nc, phys, part_cols, types) for c, nc in groups
     ]
-    if len(branch_evals) == 1:
-        may_match = branch_evals[0]
-    else:
-        def may_match(stats_raw, part_vals):
-            return any(e(stats_raw, part_vals) for e in branch_evals)
-
-    return _apply_skip_eval(snap, may_match)
-
-
-def _parse_skip_branch(
-    snap: "Snapshot", where: str
-) -> "tuple[list[tuple[str, str, Any]], list[tuple[str, bool]]]":
-    """Parse one conjunctive clause into (cmp conjuncts, null conjuncts),
-    including generated-column partition derivation. Unrecognized
-    conjuncts are dropped — which only widens the surviving file set."""
-    conjuncts = []
-    null_conjuncts: list[tuple[str, bool]] = []
-    for part in _split_and(where):
-        raw = part.strip()
-        stripped = raw.strip("()")
-        # a parenthesized conjunct "(id IN (5, 7))" unwraps ONE layer;
-        # naive strip("()") would eat the IN-list's own closing paren
-        inner = (
-            raw[1:-1].strip()
-            if raw.startswith("(") and raw.endswith(")")
-            else raw
-        )
-        m = _SKIP_CMP.match(stripped)
-        if m:
-            col = m.group("col") or m.group("col2")
-            op = m.group("op") or _FLIP[m.group("op2")]
-            lit = m.group("lit") or m.group("lit2")
-            conjuncts.append((col, op, _skip_lit(lit)))
-            continue
-        m = _SKIP_BETWEEN.match(stripped)
-        if m:
-            conjuncts.append((m.group("col"), ">=", _skip_lit(m.group("lo"))))
-            conjuncts.append((m.group("col"), "<=", _skip_lit(m.group("hi"))))
-            continue
-        m = _SKIP_LIKE.match(stripped)
-        if m:
-            pat = m.group("pat")
-            prefix = pat[:-1]
-            if (
-                pat.endswith("%")
-                and prefix
-                and not any(c in prefix for c in "%_\\")
-            ):
-                conjuncts.append((m.group("col"), ">=", prefix))
-                if ord(prefix[-1]) < 0x10FFFF:
-                    bump = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-                    conjuncts.append((m.group("col"), "<", bump))
-            continue
-        m = _SKIP_IN.match(raw) or _SKIP_IN.match(inner)
-        if m:
-            lits = [
-                v.strip() for v in m.group("vals").split(",") if v.strip()
-            ]
-            if all(
-                re.fullmatch(r"'[^']*'|-?\d+(?:\.\d+)?", v) for v in lits
-            ):
-                conjuncts.append(
-                    (m.group("col"), "in", [_skip_lit(v) for v in lits])
-                )
-            continue
-        m = _SKIP_NULL.match(stripped)
-        if m:
-            null_conjuncts.append((m.group("col"), bool(m.group("not"))))
-    # Generated-column partition pruning (delta-spark's optimization):
-    # a partition column generated as CAST(src AS DATE) or year(src) lets
-    # a predicate on the raw SOURCE column derive a partition bound —
-    # `ts >= '2024-03-05 10:00'` prunes to `event_date >= '2024-03-05'`.
-    # Strict inequalities widen to inclusive ones (same-day/-year rows
-    # may satisfy the original), so derivation is sound by construction.
-    gen_parts = {
-        f.name: (f.metadata or {}).get("delta.generationExpression")
-        for f in snap.schema.fields
-        if f.name in snap.partition_columns
-        and (f.metadata or {}).get("delta.generationExpression")
-    }
-    derived: list[tuple[str, str, Any]] = []
-    for pc, ge in gen_parts.items():
-        m_date = re.fullmatch(
-            r"\s*CAST\s*\(\s*`?(\w+)`?\s+AS\s+DATE\s*\)\s*", ge, re.I
-        )
-        m_year = re.fullmatch(r"\s*year\s*\(\s*`?(\w+)`?\s*\)\s*", ge, re.I)
-        src = (m_date or m_year) and (m_date or m_year).group(1)
-        if not src:
-            continue
-        for col, op, val in conjuncts:
-            # != / <> never derive: ts != '2024-03-05 10:00' is satisfied
-            # by rows at OTHER times of the same day, so a derived
-            # gd != '2024-03-05' would prune partitions holding matches.
-            if (
-                col != src or not isinstance(val, str)
-                or op in ("in", "!=", "<>")
-            ):
-                continue
-            widened = {">": ">=", "<": "<="}.get(op, op)
-            if m_date:
-                d = val[:10]
-                if re.fullmatch(r"\d{4}-\d{2}-\d{2}", d):
-                    derived.append((pc, widened, d))
-            else:
-                y = val[:4]
-                if y.isdigit():
-                    derived.append((pc, widened, int(y)))
-    conjuncts.extend(derived)
-    return conjuncts, null_conjuncts
-
-
-def _apply_skip_eval(snap: "Snapshot", may_match) -> dict[str, Any]:
-    """Run a (stats, partitionValues) -> bool evaluator over the file
-    set, distributed above the file-count threshold.
-
-    Above the threshold the eval runs as ONE Spark job over columnar
-    (path, stats, partitionValues) triples — at millions of adds the
-    driver loop below is the last O(files) planning cost (delta-spark
-    evaluates data skipping as a job over the state reconstruction for
-    the same reason). The driver sees only the surviving paths; the SAME
-    evaluator closure runs on both paths, so the two can never disagree.
-    """
-    spark = SparkSession.getActiveSession()
-    if (
-        spark is not None
-        and len(snap.files) >= _DISTRIBUTED_LISTING_MIN_FILES
-    ):
-        triples = (
-            snap.files.skip_triples()
-            if isinstance(snap.files, _FileIndex)
-            else [
-                (r, a.get("stats"), a.get("partitionValues") or {})
-                for r, a in snap.files.items()
-            ]
-        )
-
-        def _eval(batches):
-            import json as _json
-
-            import pandas as _pd
-
-            for pdf in batches:
-                keep = [
-                    p
-                    for p, s, pvj in zip(pdf["path"], pdf["stats"], pdf["pv"])
-                    if may_match(
-                        s if isinstance(s, str) else None, _json.loads(pvj)
-                    )
-                ]
-                yield _pd.DataFrame({"path": keep})
-
-        cand = spark.createDataFrame(
-            ((p, s, json.dumps(pv)) for p, s, pv in triples),
-            "path string, stats string, pv string",
-        )
-        survivors = {
-            r["path"] for r in cand.mapInPandas(_eval, "path string").collect()
-        }
-        return {r: snap.files[r] for r in snap.files if r in survivors}
-
+    may_match = evals[0] if len(evals) == 1 else (
+        lambda st, pv: any(e(st, pv) for e in evals)
+    )
+    files = snap.files
+    if isinstance(files, _FileIndex):
+        # judged from the checkpoint columns: only survivors materialize
+        keep = {p for p, st, pv in files.skip_triples() if may_match(st, pv)}
+        return {p: files[p] for p in files if p in keep}
     return {
-        r: a for r, a in snap.files.items()
+        r: a for r, a in files.items()
         if may_match(a.get("stats"), a.get("partitionValues"))
     }
 
@@ -1247,9 +1024,8 @@ def _build_may_match(
     part_cols: set[str],
     types: dict[str, Any],
 ):
-    """The one stats-pruning evaluator, closed over plain picklable state
-    so ``skip_files`` can run it in a driver loop OR ship it to a Spark
-    job unchanged. Takes (stats JSON or None, partitionValues dict)."""
+    """The one stats-pruning evaluator ``skip_files`` runs over the file
+    set. Takes (stats JSON or None, partitionValues dict)."""
 
     def may_match(stats_raw: "str | None", part_vals: "dict | None") -> bool:
         st = json.loads(stats_raw) if stats_raw else None
@@ -1549,10 +1325,8 @@ class _FileIndex(MutableMapping):
     def skip_triples(self):
         """``(path, stats JSON, partitionValues)`` per authoritative add —
         columnar for the checkpoint base (three child-column scans).
-        Feeds ``skip_files``' distributed pass. The driver still builds
-        the O(files) triple list to ship; what this avoids is the FULL
-        per-add dict materialization, and what the job moves off the
-        driver is the stats-JSON parse + predicate eval per file."""
+        Feeds ``skip_files``, which judges every file from these and
+        materializes only the surviving adds as dicts."""
         out: list[tuple[str, Any, dict[str, Any]]] = []
         for ai, arr in enumerate(self._arrays):
             names = {

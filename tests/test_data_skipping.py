@@ -1,9 +1,10 @@
 """File-level data skipping from Delta add-action min/max stats.
 
 delta-spark PrepareDeltaScan parity: eligible ``col <op> literal``
-conjuncts prune provably-dead files driver-side; everything else keeps
-files (soundness over aggressiveness). No reference analogue — the
-reference's scan layer is DataFusion's parquet pruning only.
+conjuncts of the predicate, as Spark's own parser reads it, prune
+provably-dead files driver-side; everything else keeps files (soundness
+over aggressiveness). No reference analogue — the reference's scan layer
+is DataFusion's parquet pruning only.
 """
 
 import pytest
@@ -297,16 +298,11 @@ def test_skip_files_soundness_sweep(spark, tmp_path):
         assert got == expect, f"pruned scan diverged for {pred!r}"
 
 
-def test_skip_files_distributed_pass_matches_driver_loop(
-    spark, tmp_path, monkeypatch,
-):
-    """Above ``_DISTRIBUTED_LISTING_MIN_FILES`` the stats-JSON parse +
-    predicate eval runs as a Spark job over columnar (path, stats,
-    partitionValues) triples instead of the driver loop — the last
-    O(files) planning cost at millions of adds. Same evaluator closure
-    on both paths, so results must be IDENTICAL; this pins that, over a
-    checkpointed table (columnar ``_FileIndex`` base + ``skip_triples``)
-    with a JSON-tail add and a partition column in play."""
+def test_skip_files_distributed_pass_matches_driver_loop(spark, tmp_path):
+    """A checkpointed table (columnar ``_FileIndex`` base judged through
+    ``skip_triples``) with a JSON-tail add and a partition column in play
+    must prune exactly like the same file set held as a plain dict, and
+    the pruned read must equal the full read plus filter."""
     from ballista_delta_spark.sources import delta as d
 
     tbl = str(tmp_path / "dist_skip")
@@ -329,20 +325,19 @@ def test_skip_files_distributed_pass_matches_driver_loop(
     )
     snap = _load_snapshot(tbl)
     assert isinstance(snap.files, d._FileIndex) and snap.files._overlay
+    as_dict = _load_snapshot(tbl)
+    as_dict.files = dict(as_dict.files.items())
     predicates = [
         "id < 40", "id >= 180", "p = 2", "p = 2 AND id < 100",
         "nv IS NULL", "nv IS NOT NULL", "ts >= '2024-01-25'",
-        "id IN (3, 210)", "id = 9999",
+        "ts >= TIMESTAMP '2024-01-25 00:00:00'", "id IN (3, 210)",
+        "id = 9999",
     ]
     for pred in predicates:
-        driver_result = skip_files(snap, pred)
-        monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 2)
-        dist_result = skip_files(snap, pred)
-        monkeypatch.undo()
-        assert list(dist_result) == list(driver_result), pred
-        assert dist_result == driver_result, pred
-    # and the job path genuinely prunes: a dead predicate keeps nothing
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 2)
+        # a fresh index: every stat is read from the checkpoint columns
+        columnar = skip_files(_load_snapshot(tbl), pred)
+        assert list(columnar) == list(skip_files(as_dict, pred)), pred
+        assert columnar == skip_files(as_dict, pred), pred
     assert skip_files(snap, "id = 9999") == {}
     assert 0 < len(skip_files(snap, "id < 40")) < len(snap.files)
     # end-to-end: pruned scan + residual filter == full scan + filter
@@ -353,6 +348,152 @@ def test_skip_files_distributed_pass_matches_driver_loop(
             tuple(r) for r in read_delta(spark, tbl, where=pred).collect()
         )
         assert got == expect, pred
+
+
+# One file per row: min == max, so every judged conjunct decides its file
+# exactly. Columns whose names contain AND / OR and string values that
+# look like predicate syntax catch any reading of the text other than
+# Spark's own.
+_POINT_ROWS = {
+    "f1": dict(a=1, b=0, c=0, j=2, k=1, m=2, priority=1, score=2,
+               sailORs=1, s="x AND y"),
+    "f2": dict(a=0, b=2, c=0, j=3, k=5, m=2, priority=0, score=0,
+               sailORs=0, s="straße"),
+    "f3": dict(a=0, b=0, c=3, j=0, k=9, m=9, priority=1, score=0,
+               sailORs=2, s="a OR b"),
+    "f4": dict(a=1, b=2, c=0, j=3, k=3, m=0, priority=2, score=2,
+               sailORs=0, s=")"),
+}
+_ALL = {"f1", "f2", "f3", "f4"}
+
+
+@pytest.mark.parametrize("pred, kept", [
+    # whitespace, tabs and newlines around AND / OR
+    ("a = 1 AND b = 2\nOR c = 3", {"f3", "f4"}),
+    ("a = 1\nOR b = 2", {"f1", "f2", "f4"}),
+    ("a = 1\tOR\tb = 2", {"f1", "f2", "f4"}),
+    ("a = 1\nAND b = 2", {"f4"}),
+    # operators next to parens, no spaces at all
+    ("(a = 1)OR(b = 2)", {"f1", "f2", "f4"}),
+    ("(a = 1)AND(b = 2)", {"f4"}),
+    ("(a = 1) OR (b = 2)", {"f1", "f2", "f4"}),
+    # identifiers containing the operator words
+    ("priority = 1 AND score = 2", {"f1"}),
+    ("sailORs = 1", {"f1"}),
+    ("x = orders", _ALL),
+    # quoted strings are opaque, in either quote style and with escapes
+    ("s = 'a OR b'", {"f3"}),
+    ("s = 'x AND y' AND k = 1", {"f1"}),
+    ('s = "x AND 9 > k AND y"', set()),
+    ('s = "a OR b"', {"f3"}),
+    ("s = 'x\\' AND 9 > k AND y\\''", set()),
+    # redundant parens, including parens inside literals
+    ("(a AND b)", _ALL),
+    ("((a))", _ALL),
+    ("(a) IN (b)", _ALL),
+    ("(s = ')' AND k = 1)", set()),
+    ("(s = '(' AND k = 1)", set()),
+    ('(s = ")" AND k = 1)', set()),
+    # non-ASCII literals ('ß'.upper() is longer than 'ß')
+    ("k = 5 AND s = 'straße' OR k = 9", {"f2", "f3"}),
+    ("s = 'straße' OR k = 9", {"f2", "f3"}),
+    ("s = 'straße' AND k = 9", set()),
+    # comments are token separators, never predicate text
+    ("k = 1 -- note AND m = 9", {"f1"}),
+    ("k = 1 /* OR m = 9 */", {"f1"}),
+    ("(k = 1 /* ) */ AND m = 2)", {"f1"}),
+    ("k = 1 /* AND m = 9 */ AND j = 2", {"f1"}),
+    ("k = 1 -- c\nAND m = 2", {"f1"}),
+    ("s = '--x' AND k = 1", set()),
+    # BETWEEN's own AND is not a conjunction; NOT BETWEEN is not judged
+    ("k BETWEEN 1 AND 5", {"f1", "f2", "f4"}),
+    ("k BETWEEN 1 AND 5 AND m = 2", {"f1", "f2"}),
+    ("m = 2 AND k NOT BETWEEN 1 AND 5 AND j = 3", {"f2"}),
+    # a multi-part name or a cast of a column is not judged
+    ("a.b = 1", _ALL),
+    ("CAST(k AS INT) = 1", _ALL),
+])
+def test_parsed_predicate_prunes_like_filter(spark, pred, kept):
+    """Predicate text means what Spark's parser says it means: each input
+    once broke a hand-rolled splitter, and each prunes exactly the files
+    whose row the judged conjuncts rule out."""
+    import json
+
+    from pyspark.sql import types as T
+
+    class _Snap:
+        schema = T.StructType([
+            T.StructField(c, T.StringType() if c == "s" else T.LongType())
+            for c in _POINT_ROWS["f1"]
+        ])
+        partition_columns: list = []
+        files = {
+            f: {"stats": json.dumps({
+                "numRecords": 1, "minValues": row, "maxValues": row,
+                "nullCount": {c: 0 for c in row},
+            })}
+            for f, row in _POINT_ROWS.items()
+        }
+
+        def physical(self, c):
+            return c
+
+    assert set(skip_files(_Snap(), pred)) == kept
+
+
+def test_typed_date_and_timestamp_literals_prune(spark, tmp_path):
+    """DATE '…', TIMESTAMP '…' and CAST('…' AS DATE|TIMESTAMP) literals
+    are judged against date and timestamp columns, and the pruned read
+    equals the full read plus filter."""
+    path = str(tmp_path / "t")
+    for lo in (0, 30, 60):  # one file per 30 days from 2024-01-01
+        write_delta(spark.sql(f"""
+            SELECT DATE'2024-01-01' + CAST(id AS INT) AS d,
+                   TIMESTAMP'2024-01-01 00:00:00'
+                     + make_dt_interval(CAST(id AS INT)) AS ts,
+                   id
+            FROM range({lo}, {lo + 30})
+        """).coalesce(1), path, mode="append")
+    snap = _load_snapshot(path)
+    assert len(snap.files) == 3
+    full = read_delta(spark, path)
+    for pred in (
+        "d >= DATE '2024-03-01'",
+        "ts < TIMESTAMP '2024-01-20 00:00:00'",
+        "d = CAST('2024-02-10' AS DATE)",
+        "ts >= CAST('2024-03-05' AS TIMESTAMP)",
+        "DATE '2024-01-10' >= d",
+    ):
+        assert len(skip_files(snap, pred)) == 1, pred
+        expect = sorted(tuple(r) for r in full.filter(pred).collect())
+        got = sorted(
+            tuple(r) for r in read_delta(spark, path, where=pred).collect()
+        )
+        assert got == expect and got, pred
+    # a date column compared with a timestamp is cast the other way
+    # round: not judged
+    assert len(skip_files(snap, "d < TIMESTAMP '2024-01-20 00:00:00'")) == 3
+
+
+def test_optimize_where_unparseable_raises_and_commits_nothing(
+    spark, tmp_path,
+):
+    from pyspark.errors import ParseException
+
+    from ballista_delta_spark.sources.delta import optimize
+
+    path = str(tmp_path / "t")
+    for i in range(3):
+        write_delta(
+            spark.range(i * 10, i * 10 + 10).selectExpr("id AS k"), path,
+            mode="append",
+        )
+    before = _load_snapshot(path)
+    with pytest.raises(ParseException):
+        optimize(spark, path, where="k = = 3")
+    after = _load_snapshot(path)
+    assert after.version == before.version
+    assert set(after.files) == set(before.files)
 
 
 def test_long_string_stats_truncate_but_still_prune(spark, tmp_path):

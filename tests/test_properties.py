@@ -1146,16 +1146,6 @@ class TestMaskLiterals:
             "k = 1 --xxxxxx\nAND m = 2"
         )
 
-    def test_strip_comments_is_lexer_whitespace(self):
-        from ballista_delta_spark.sources.delta import _strip_comments
-
-        assert _strip_comments("k = 1 -- note AND m = 9") == "k = 1  "
-        assert _strip_comments(
-            "k = 1 /* AND m = 9 */ AND j = 2"
-        ) == "k = 1   AND j = 2"
-        assert _strip_comments("k = 1 -- c\nAND m = 2") == "k = 1  \nAND m = 2"
-        assert _strip_comments("s = '--x' AND k = 1") == "s = '--x' AND k = 1"
-
 
 class TestFileStatsSoundness:
     """_file_stats claims must be SOUND for arbitrary data and row-group
@@ -1325,7 +1315,9 @@ class TestSkipDisjunctionSoundness:
         sep=st.sampled_from([" OR ", "\nOR ", "\n OR\t", " OR\n", ") OR ("]),
     )
     @settings(max_examples=150, deadline=None)
-    def test_every_matching_file_survives(self, files, branches, sep):
+    def test_every_matching_file_survives(
+        self, spark, files, branches, sep
+    ):
         import json as _json
 
         from pyspark.sql import types as T
@@ -1385,7 +1377,8 @@ class TestSkipFilesDifferentialFuzz:
 
     Predicates are generated as ASTs over the FULL accepted grammar —
     cmp (both operand orders, =/==/</<=/>/>= with int, float, string,
-    timestamp, and date literals), IN lists, IS [NOT] NULL, an opaque
+    timestamp, and date literals, the last two as strings or as typed
+    TIMESTAMP '…' / DATE '…' literals), IN lists, IS [NOT] NULL, an opaque
     unjudgeable leaf (length(s) >= n), AND/OR trees — then rendered with
     randomized whitespace/newlines, keyword case, single/double quotes
     with doubled AND backslash escapes, literal contents containing
@@ -1411,6 +1404,11 @@ class TestSkipFilesDifferentialFuzz:
 
     # --- AST leaves ("!=" renders as != or <> at random)
     _OPS = ("=", "==", "<", "<=", ">", ">=", "!=")
+    # the operator with its operands swapped: `lit < col` is `col > lit`
+    _MIRROR = {
+        "<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "=", "==": "==",
+        "!=": "!=", "<>": "<>",
+    }
 
     @classmethod
     def _leaf_strategy(cls):
@@ -1510,9 +1508,12 @@ class TestSkipFilesDifferentialFuzz:
                 d.strftime("%Y-%m-%d %H:%M:%S"),
                 d.strftime("%Y-%m-%dT%H:%M:%S"),
             ])
-            return "'" + form + "'"
+            # a typed literal is one more input form of the same value
+            return rnd.choice(["", "", "TIMESTAMP "]) + "'" + form + "'"
         if col == "d":
             d = self._dt(val)
+            if rnd.random() < 0.3:
+                return "DATE '" + d.strftime("%Y-%m-%d") + "'"
             form = rnd.choice([
                 d.strftime("%Y-%m-%d"),
                 d.strftime("%Y-%m-%d %H:%M:%S"),
@@ -1548,9 +1549,7 @@ class TestSkipFilesDifferentialFuzz:
             lit = self._render_lit(col, val, rnd)
             op_txt = rnd.choice(["!=", "<>"]) if op == "!=" else op
             if rnd.random() < 0.25 and col != "s":
-                from ballista_delta_spark.sources.delta import _FLIP
-
-                out = lit + sep() + _FLIP[op_txt] + sep() + col
+                out = lit + sep() + self._MIRROR[op_txt] + sep() + col
             else:
                 out = col + sep() + op_txt + sep() + lit
         elif kind == "between":
@@ -1564,9 +1563,12 @@ class TestSkipFilesDifferentialFuzz:
             )
         elif kind == "like":
             _, pat, neg = ast
+            # a backslash is escaped so the pattern Spark reads holds it
+            # (an unescaped one would escape the closing quote)
             out = (
                 "s " + (self._kw("NOT", rnd) + " " if neg else "")
-                + self._kw("LIKE", rnd) + sep() + "'" + pat + "'"
+                + self._kw("LIKE", rnd) + sep()
+                + "'" + pat.replace("\\", "\\\\") + "'"
             )
         elif kind == "in":
             _, col, vals = ast
@@ -1592,7 +1594,7 @@ class TestSkipFilesDifferentialFuzz:
             for child in ast[1]:
                 r = self._render(child, rnd, depth + 1)
                 # children of a mixed tree must keep their own grouping;
-                # wrap (sometimes doubly) to exercise _unwrap_parens
+                # wrap (sometimes doubly) to exercise redundant parens
                 wrap = (
                     child[0] in ("and", "or")
                     or rnd.random() < 0.5
@@ -1734,7 +1736,7 @@ class TestSkipFilesDifferentialFuzz:
         deadline=None,
     )
     def test_no_pruned_file_contains_a_matching_row(
-        self, data, seed, n_files
+        self, spark, data, seed, n_files
     ):
         import random as _random
 
@@ -1842,9 +1844,7 @@ class TestSkipFilesDifferentialFuzz:
             sep = self._sep(rnd)
             op_txt = rnd.choice(["!=", "<>"]) if op == "!=" else op
             if rnd.random() < 0.25:
-                from ballista_delta_spark.sources.delta import _FLIP
-
-                return lit + sep + _FLIP[op_txt] + sep + col
+                return lit + sep + self._MIRROR[op_txt] + sep + col
             return col + sep + op_txt + sep + lit
         if kind in ("in", "null", "opaque", "between"):
             return self._render(ast, rnd, depth)  # int/ts literal forms
@@ -1909,7 +1909,7 @@ class TestSkipFilesDifferentialFuzz:
         deadline=None,
     )
     def test_partition_and_generated_column_pruning_is_sound(
-        self, data, seed, n_files
+        self, spark, data, seed, n_files
     ):
         import json as _json
         import random as _random

@@ -216,36 +216,7 @@ def test_append_after_compaction_cleanup_does_not_reuse_versions(
     assert got == list(range(12))
 
 
-# ----------------------------- 6. whitespace-robust AND/OR splitting
-def test_split_top_handles_newlines_tabs_parens_and_identifiers():
-    from ballista_delta_spark.sources.delta import (
-        _split_and,
-        _split_or,
-    )
-
-    # newline / tab separated operators are real operators
-    assert _split_and("a = 1 AND b = 2\nOR c = 3") == []
-    assert len(_split_or("a = 1\nOR b = 2")) == 2
-    assert len(_split_or("a = 1\tOR\tb = 2")) == 2
-    assert [p.strip() for p in _split_and("a = 1\nAND b = 2")] == [
-        "a = 1", "b = 2"
-    ]
-    # paren-adjacent operators, no spaces at all
-    assert len(_split_or("(a = 1)OR(b = 2)")) == 2
-    assert _split_and("(a = 1)AND(b = 2)") == ["(a = 1)", "(b = 2)"]
-    # identifiers CONTAINING the operator words never split
-    assert [p.strip() for p in _split_and("priority = 1 AND score = 2")] == [
-        "priority = 1", "score = 2"
-    ]
-    assert len(_split_or("sailORs = 1")) == 1
-    assert len(_split_or("x = orders")) == 1
-    # quoted strings are opaque
-    assert len(_split_or("s = 'a OR b'")) == 1
-    assert [p.strip() for p in _split_and("s = 'x AND y' AND k = 1")] == [
-        "s = 'x AND y'", "k = 1"
-    ]
-
-
+# ----------------------------- 6. whitespace-robust AND/OR pruning
 def test_multiline_or_predicate_stays_exact_end_to_end(spark, tmp_path):
     """The review repro: a newline-separated OR used to be mis-split into
     AND conjuncts, pruning files unsoundly and silently dropping rows."""
@@ -335,32 +306,7 @@ def test_protocol_and_config_checkpoint_fallbacks(spark, tmp_path):
         D._protocol_and_config(tbl)
 
 
-def test_unwrap_parens_is_quote_aware():
-    from ballista_delta_spark.sources.delta import _unwrap_parens
-
-    assert _unwrap_parens("(a AND b)") == "a AND b"
-    assert _unwrap_parens("((a))") == "a"
-    assert _unwrap_parens("(a) IN (b)") == "(a) IN (b)"
-    # parens inside string literals must not end the wrap early
-    assert _unwrap_parens("(s = ')' AND k = 1)") == "s = ')' AND k = 1"
-    assert _unwrap_parens("(s = '(' AND k = 1)") == "s = '(' AND k = 1"
-    assert _unwrap_parens("(a = 1) OR (b = 2)") == "(a = 1) OR (b = 2)"
-
-
 # ------------------------- 8. second review pass (r12) regression pins
-def test_split_top_survives_unicode_case_expansion():
-    """str.upper() can CHANGE LENGTH ('ß' -> 'SS'); a pre-uppercased
-    whole-string copy shifted every index after such a char and hid real
-    operators — making the conjunctive path prune unsoundly."""
-    from ballista_delta_spark.sources.delta import _split_and, _split_or
-
-    assert _split_and("k = 5 AND s = 'straße' OR k = 9") == []
-    assert len(_split_or("s = 'straße' OR k = 9")) == 2
-    assert [p.strip() for p in _split_and("s = 'straße' AND k = 9")] == [
-        "s = 'straße'", "k = 9"
-    ]
-
-
 def test_case_folded_views_init_and_ior_fold():
     from ballista_delta_spark.session import _CaseFoldedViews
 
@@ -391,31 +337,6 @@ def test_malformed_compaction_name_is_ignored_not_fatal(spark, tmp_path):
 
 
 # ------------------------- 9. third review pass (r12) regression pins
-def test_splitters_use_the_real_literal_lexer():
-    """Predicate structure is detected on the _mask_literals mask, so
-    double-quoted literals and backslash-escaped quotes are opaque —
-    the hand-rolled single-quote-only scanner manufactured conjuncts
-    from literal text and pruned files unsoundly."""
-    from ballista_delta_spark.sources.delta import (
-        _split_and,
-        _split_or,
-        _unwrap_parens,
-    )
-
-    assert len(_split_and('s = "x AND 9 > k AND y"')) == 1
-    assert len(_split_or('s = "a OR b"')) == 1
-    assert len(_split_and("s = 'x\\' AND 9 > k AND y\\''")) == 1
-    assert _unwrap_parens('(s = ")" AND k = 1)') == 's = ")" AND k = 1'
-    # comment text is not syntax (ADVICE r12): the AND lives inside a
-    # '--' comment, so Spark filters as k = 1 — splitting there would
-    # manufacture a required 'm = 9' conjunct and prune unsoundly
-    assert len(_split_and("k = 1 -- note AND m = 9")) == 1
-    assert len(_split_or("k = 1 /* OR m = 9 */")) == 1
-    assert _unwrap_parens("(k = 1 /* ) */ AND m = 2)") == (
-        "k = 1 /* ) */ AND m = 2"
-    )
-
-
 def test_double_quoted_literal_predicate_stays_exact(spark, tmp_path):
     """End-to-end: a predicate whose double-quoted literal CONTAINS
     'AND <cmp>' text must not prune the files holding its matches."""

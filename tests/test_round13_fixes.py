@@ -443,21 +443,10 @@ def test_not_equal_prunes_constant_chunks_only(spark):
 
 
 def test_between_prunes_and_not_between_stays_sound(spark):
-    """BETWEEN (r13): the splitter must not break 'a BETWEEN 1 AND 5' at
-    its own AND, and the clause judges as two range conjuncts — pruning,
-    not merely staying sound. NOT BETWEEN is dropped (widening)."""
-    from ballista_delta_spark.sources.delta import (
-        _split_and,
-        skip_files,
-    )
-
-    assert _split_and("k BETWEEN 1 AND 5") == ["k BETWEEN 1 AND 5"]
-    parts = _split_and("k BETWEEN 1 AND 5 AND m = 2")
-    assert [p.strip() for p in parts] == ["k BETWEEN 1 AND 5", "m = 2"]
-    parts = _split_and("m = 2 AND k NOT BETWEEN 1 AND 5 AND j = 3")
-    assert [p.strip() for p in parts] == [
-        "m = 2", "k NOT BETWEEN 1 AND 5", "j = 3"
-    ]
+    """BETWEEN (r13): 'a BETWEEN 1 AND 5' judges as two range conjuncts
+    — pruning, not merely staying sound. NOT BETWEEN is dropped
+    (widening)."""
+    from ballista_delta_spark.sources.delta import skip_files
 
     snap = _snap_of({
         "low": _file(0, 9), "mid": _file(40, 60), "high": _file(100, 109)
@@ -480,7 +469,7 @@ def test_between_prunes_and_not_between_stays_sound(spark):
 def test_like_prefix_prunes(spark):
     """LIKE 'prefix%' (r13): judged as the [prefix, bump) range; every
     other pattern shape (interior wildcards, leading %, _, escapes, NOT
-    LIKE, no trailing %) drops — widening, sound."""
+    LIKE, no trailing %) and any ESCAPE clause drops — widening, sound."""
     import json as _json
 
     from pyspark.sql import types as T
@@ -514,5 +503,6 @@ def test_like_prefix_prunes(spark):
     for pred in (
         "s LIKE '%m'", "s LIKE 'm_%'", "s LIKE 'm'", "s LIKE '%'",
         "s NOT LIKE 'm%'", "s LIKE 'a%b%'", "s LIKE 'a\\\\%'",
+        "s LIKE 'm%' ESCAPE '#'",
     ):
         assert set(skip_files(snap, pred)) == {"ab", "mq", "xz"}, pred

@@ -62,7 +62,9 @@ class TestNaNFractionalPruning:
         "x != 5.0", "x <> 5.0", "x > 9.0", "x >= 9.0",
         "f != 5.0", "f > 9.0", "f >= 5.5",
     ])
-    def test_fractional_ne_gt_ge_never_prune_on_file_stats(self, pred):
+    def test_fractional_ne_gt_ge_never_prune_on_file_stats(
+        self, spark, pred
+    ):
         from ballista_delta_spark.sources.delta import skip_files
 
         kept = skip_files(self._snap(), pred)
@@ -71,7 +73,7 @@ class TestNaNFractionalPruning:
     @pytest.mark.parametrize("pred", [
         "x < 1.0", "x <= 1.0", "x = 9.0", "x in (1.0, 2.0)",
     ])
-    def test_fractional_lt_le_eq_still_prune(self, pred):
+    def test_fractional_lt_le_eq_still_prune(self, spark, pred):
         # NaN never satisfies < / <= / = / IN for a non-NaN literal, so
         # these stay judgeable — the fix must not widen them.
         from ballista_delta_spark.sources.delta import skip_files
@@ -80,13 +82,13 @@ class TestNaNFractionalPruning:
         assert "const" not in kept, pred
 
     @pytest.mark.parametrize("pred", ["k != 5", "k > 9", "k >= 9"])
-    def test_integer_columns_keep_judging(self, pred):
+    def test_integer_columns_keep_judging(self, spark, pred):
         from ballista_delta_spark.sources.delta import skip_files
 
         kept = skip_files(self._snap(), pred)
         assert "const" not in kept, pred
 
-    def test_fractional_partition_values_stay_judgeable(self):
+    def test_fractional_partition_values_stay_judgeable(self, spark):
         # Partition values carry the exact value (no NaN blindness), so
         # x > / != on a PARTITION double still prunes.
         from ballista_delta_spark.sources.delta import skip_files

@@ -215,7 +215,7 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
 def test_salted_join_matches_plain_join_and_partitions_on_salt(spark, sf_dir):
     """salted_join must return exactly the plain join's rows while
     shuffling on (key, salt) — the hot key spreads over n_salts tasks."""
-    from ballista_delta_spark.operators import salted_join
+    from ballista_delta_spark.queries.joins import salted_join
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
