@@ -759,11 +759,12 @@ def read_delta_with_row_ids(
     return _row_lineage_df(spark, path, DeltaTable(path, version=version))
 
 
-def _temporal_key(s: Any) -> float | None:
-    """Date/timestamp string -> epoch seconds (UTC), or None when not
-    parseable. Stats spell timestamps ISO with 'T' and an offset while
-    predicates usually use 'YYYY-MM-DD HH:MM:SS' — comparing those as
-    raw strings mis-orders at the separator byte, so BOTH sides must
+def _temporal_key(s: Any, zone: Any = None) -> float | None:
+    """Date/timestamp string -> epoch seconds, or None when not parseable.
+    A value without an offset is wall-clock time in ``zone`` (a tzinfo;
+    UTC when None). Stats spell timestamps ISO with 'T' and an offset
+    while predicates usually use 'YYYY-MM-DD HH:MM:SS' — comparing those
+    as raw strings mis-orders at the separator byte, so BOTH sides must
     normalize to one numeric domain before any pruning judgment."""
     import datetime as _dt
 
@@ -772,9 +773,41 @@ def _temporal_key(s: Any) -> float | None:
         d = _dt.datetime.fromisoformat(t)
     except ValueError:
         return None
-    if d.tzinfo is not None:
-        d = d.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return (d - _dt.datetime(1970, 1, 1)).total_seconds()
+    if d.tzinfo is None:
+        d = d.replace(tzinfo=zone or _dt.timezone.utc)
+    return d.timestamp()
+
+
+def _session_zone() -> Any:
+    """The active session's ``spark.sql.session.timeZone`` as a tzinfo:
+    the zone Spark reads a naive literal compared with a TIMESTAMP column
+    in, and casts a timestamp to a date in. None when Python cannot
+    resolve the name (a region id or a ``+HH:MM`` offset resolve), so
+    nothing is judged in a zone that might be wrong."""
+    import datetime as _dt
+    from zoneinfo import ZoneInfo
+
+    name = SparkSession.active().conf.get("spark.sql.session.timeZone")
+    try:
+        return ZoneInfo(name)
+    except (ValueError, KeyError):  # ZoneInfoNotFoundError is a KeyError
+        pass
+    try:
+        return _dt.datetime.strptime(name, "%z").tzinfo
+    except ValueError:
+        return None
+
+
+def _zone_for(dtype: Any, session_zone: Any) -> Any:
+    """The zone naive values of a column of ``dtype`` are read in: the
+    session's for TIMESTAMP (None when unresolvable: judge nothing), UTC
+    for DATE and TIMESTAMP_NTZ, whose values carry no zone on either side
+    of a comparison."""
+    import datetime as _dt
+
+    if isinstance(dtype, T.TimestampType):
+        return session_zone
+    return _dt.timezone.utc
 
 
 def _parsed(text: str):
@@ -924,7 +957,8 @@ def _parse_skip_branch(branch, types: dict[str, Any], jexpr):
 
 
 def _derived_bounds(
-    snap: "Snapshot", conjuncts: "list[tuple[str, str, Any]]"
+    snap: "Snapshot", conjuncts: "list[tuple[str, str, Any]]",
+    session_zone: Any = None,
 ) -> "list[tuple[str, str, Any]]":
     """Generated-column partition pruning (delta-spark's optimization): a
     partition column generated as ``CAST(src AS DATE)`` or ``year(src)``
@@ -935,6 +969,7 @@ def _derived_bounds(
     derivation is sound by construction."""
     import datetime as _dt
 
+    types = {f.name: f.dataType for f in snap.schema.fields}
     derived = []
     for f in snap.schema.fields:
         expr = (f.metadata or {}).get("delta.generationExpression")
@@ -948,14 +983,19 @@ def _derived_bounds(
         src = _column(kids[0]) if len(kids) == 1 else None
         if not (is_date or is_year) or src is None:
             continue
+        # Spark casts a TIMESTAMP to a date (and takes its year) in the
+        # session zone: the literal is read and the day taken there.
+        zone = _zone_for(types.get(src), session_zone)
+        if zone is None:
+            continue
         for col, op, val in conjuncts:
             # != never derives: ts != '2024-03-05 10:00' is satisfied by
             # rows at OTHER times of the same day, so a derived
             # gd != '2024-03-05' would prune partitions holding matches.
-            key = _temporal_key(val) if isinstance(val, str) else None
+            key = _temporal_key(val, zone) if isinstance(val, str) else None
             if col != src or key is None or op in ("in", "!="):
                 continue
-            d = _dt.datetime.fromtimestamp(key, _dt.timezone.utc)
+            d = _dt.datetime.fromtimestamp(key, zone)
             derived.append((
                 f.name, {">": ">=", "<": "<="}.get(op, op),
                 d.date().isoformat() if is_date else d.year,
@@ -986,11 +1026,12 @@ def skip_files(snap: "Snapshot", where: str) -> dict[str, Any]:
     """
     jexpr, tree = _parsed(where)
     types = {f.name: f.dataType for f in snap.schema.fields}
+    zone = _session_zone()
     groups = [
         _parse_skip_branch(b, types, jexpr) for b in _flatten("Or", tree)
     ]
     for conjuncts, _ in groups:
-        conjuncts.extend(_derived_bounds(snap, conjuncts))
+        conjuncts.extend(_derived_bounds(snap, conjuncts, zone))
     if not all(c or nc for c, nc in groups):
         # items() takes _FileIndex's batched to_pylist route; dict(mapping)
         # on a MutableMapping would pay a per-row struct conversion.
@@ -1001,7 +1042,8 @@ def skip_files(snap: "Snapshot", where: str) -> dict[str, Any]:
     }
     part_cols = set(snap.partition_columns)
     evals = [
-        _build_may_match(c, nc, phys, part_cols, types) for c, nc in groups
+        _build_may_match(c, nc, phys, part_cols, types, zone)
+        for c, nc in groups
     ]
     may_match = evals[0] if len(evals) == 1 else (
         lambda st, pv: any(e(st, pv) for e in evals)
@@ -1023,9 +1065,12 @@ def _build_may_match(
     phys: dict[str, str],
     part_cols: set[str],
     types: dict[str, Any],
+    session_zone: Any = None,
 ):
     """The one stats-pruning evaluator ``skip_files`` runs over the file
-    set. Takes (stats JSON or None, partitionValues dict)."""
+    set. Takes (stats JSON or None, partitionValues dict). Naive
+    timestamp literals and partition values are read in
+    ``session_zone``, as Spark reads them (:func:`_zone_for`)."""
 
     def may_match(stats_raw: "str | None", part_vals: "dict | None") -> bool:
         st = json.loads(stats_raw) if stats_raw else None
@@ -1084,8 +1129,11 @@ def _build_may_match(
                     # comparing (truncating the time); keying the full
                     # timestamp would prune files whose rows DO match
                     vals = [str(v)[:10] for v in vals]
-                keys = [_temporal_key(v) for v in vals]
-                mn_k, mx_k = _temporal_key(mn), _temporal_key(mx)
+                zone = _zone_for(types.get(col), session_zone)
+                if zone is None:
+                    continue
+                keys = [_temporal_key(v, zone) for v in vals]
+                mn_k, mx_k = _temporal_key(mn, zone), _temporal_key(mx, zone)
                 if mn_k is None or mx_k is None or None in keys:
                     continue  # can't judge — keep the file
                 mn, mx = mn_k, mx_k

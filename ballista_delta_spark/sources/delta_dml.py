@@ -1,4 +1,4 @@
-"""Delta DML — DELETE / UPDATE / MERGE as copy-on-write commits.
+"""Delta DML — DELETE / UPDATE / MERGE, copy-on-write or merge-on-read.
 
 Reference context: the reference's write surface is a factory that errors
 ("At the moment INSERT does not work", reference src/lib.rs:140-174;
@@ -11,11 +11,11 @@ Copy-on-write, the way delta-spark implements it:
 
 1. **Find affected files** — one distributed scan attributes every matching
    row to its parquet file (its ``_metadata.file_path`` key, mapped to the
-   add action on the driver once per file); only files that contain at
-   least one matching row are touched. Partition pruning applies to this
-   scan (a predicate on a partition column prunes directories before
-   listing), so a partition-aligned DELETE never reads non-matching
-   partitions at all.
+   add action on the driver once per file) and counts the matches per
+   file in the same action; only files that contain at least one
+   matching row are touched. Partition pruning applies to this scan (a
+   predicate on a partition column prunes directories before listing),
+   so a partition-aligned DELETE never reads non-matching partitions.
 2. **Metadata-only fast path (DELETE)** — a file whose every row matches
    (per-file matched-count == the add action's ``numRecords`` stat) is
    dropped with a ``remove`` action and never read again; zero rewrite I/O.
@@ -26,29 +26,42 @@ Copy-on-write, the way delta-spark implements it:
    the commit pairs their ``remove`` actions with the new ``add`` actions,
    all under the same optimistic-concurrency version claim.
 
-Scale note: steps 1 and 3 are Spark jobs over only the relevant files; the
-driver handles O(#affected-files) bookkeeping — identical cost shape to
+MERGE is two Spark actions, the Delta Lake paper's scan for touched files
+followed by one rewrite. Action 1 left-joins the target, scanned with its
+physical row identity (file key, parquet row index), to the source and
+collects one row per touched file: the largest number of modifying
+matches on any one row (the ambiguity check, raised before anything is
+written) and the per-clause row counts (:func:`_touched_files`, shared
+with the merge-on-read path, which also takes the deletion-vector row
+indexes from it). Action 2 rewrites the touched files and appends the
+inserted rows in ONE write; the inserted-row count is observed on that
+write. Rows are never grouped by value, so any column type merges.
+
+Scale note: the actions run over only the relevant files; the driver
+handles O(#affected-files) bookkeeping — identical cost shape to
 delta-spark's own DeleteCommand/UpdateCommand/MergeIntoCommand.
 """
 
 from __future__ import annotations
 
 import copy
+import functools
 import json
 import os
 import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from .delta import (
     DeltaTable,
     ENGINE_INFO,
     _file_key,
     _fs_join,
-    _fs_rel,
     _stage_adds,
     _strip_file_scheme,
     _try_commit,
@@ -157,8 +170,12 @@ def _canon_rels(dt: DeltaTable, keys) -> list[str]:
     return out
 
 
-def _subset_df(spark: SparkSession, dt: DeltaTable, rels: list[str]) -> DataFrame:
-    """Scan of only the given active files (partition columns included).
+def _subset_df(
+    spark: SparkSession, dt: DeltaTable, rels: list[str],
+    with_location: bool = False,
+) -> DataFrame:
+    """Scan of only the given active files (partition columns included;
+    ``with_location`` as in :meth:`DeltaTable.to_df`).
 
     Point lookups, not items(): a 2-file DELETE on a checkpoint-backed
     million-add table must materialize 2 add dicts, not all of them."""
@@ -166,7 +183,7 @@ def _subset_df(spark: SparkSession, dt: DeltaTable, rels: list[str]) -> DataFram
     sub.path = dt.path
     sub.snapshot = copy.copy(dt.snapshot)
     sub.snapshot.files = {r: dt.snapshot.files[r] for r in rels}
-    return sub.to_df(spark)
+    return sub.to_df(spark, with_location=with_location)
 
 
 def _sized(df: DataFrame, n_input_files: int) -> DataFrame:
@@ -474,9 +491,6 @@ def _dv_mark_rows(
     final (file -> sorted indexes) lists land on the driver, which
     serializes the bitmaps — the same driver-side metadata role it plays
     for the commit JSON itself. Returns ({}, 0) when nothing matched."""
-    from .delta import _as_dict
-    from . import dv as _dv
-
     per_file = (
         located
         .groupBy("__src_fp")
@@ -492,7 +506,17 @@ def _dv_mark_rows(
         )
     }
     n_marked = sum(len(v) for v in new_per_file.values())
-    # Merge with any existing DV on the same file (union of row indexes).
+    return _with_existing_dvs(dt, new_per_file), n_marked
+
+
+def _with_existing_dvs(
+    dt: DeltaTable, new_per_file: dict[str, list[int]]
+) -> dict[str, list[int]]:
+    """Union each file's newly marked row indexes with the rows its
+    current deletion vector already deletes (in place; returned)."""
+    from .delta import _as_dict
+    from . import dv as _dv
+
     for rel in new_per_file:
         old = dt.snapshot.files[rel].get("deletionVector")
         if old:
@@ -500,7 +524,7 @@ def _dv_mark_rows(
                 set(new_per_file[rel])
                 | set(_dv.read_deletion_vector(dt.path, _as_dict(old)))
             )
-    return new_per_file, n_marked
+    return new_per_file
 
 
 def _dv_protocol_and_file_actions(
@@ -746,12 +770,14 @@ def _update_once(
     part_updates = set(set_exprs) & set(dt.snapshot.partition_columns)
     cond = F.coalesce(F.expr(condition), F.lit(False))
 
-    affected = _canon_rels(dt, [
-        r[_FILE_COL]
-        for r in _attributed(spark, dt).filter(cond).select(_FILE_COL).distinct().collect()
-    ])
+    # One action: the touched files and how many rows each updates.
+    per_file = (
+        _attributed(spark, dt).filter(cond).groupBy(_FILE_COL).count().collect()
+    )
+    affected = _canon_rels(dt, [r[_FILE_COL] for r in per_file])
     if not affected:
         return {"version": dt.version, "numUpdatedRows": 0, "numRewrittenFiles": 0}
+    n_updated = sum(r["count"] for r in per_file)
 
     sub = _subset_df(spark, dt, affected)
     # All SET expressions see the pre-update row: compute them in ONE select.
@@ -772,7 +798,6 @@ def _update_once(
         typ = dict((f.name, f.dataType) for f in dt.snapshot.schema.fields)[c]
         updated = updated.withColumn(c, F.col(c).cast(typ))
 
-    n_updated = sub.filter(cond).count()
     # Only rows the SET actually touched can newly violate a constraint.
     # Filter on PRE-update values (cond references those), THEN apply the
     # SET projection unconditionally.
@@ -895,69 +920,250 @@ def _validate_insert_spec(
         )
 
 
-def _merge_insert_rows(
-    dt: DeltaTable,
-    src: DataFrame,
-    anti_base: DataFrame,
-    on_expr,
-    not_matched_clauses: list[tuple[str | None, dict[str, str] | bool]],
-    tcols: list[str],
+def _first_clause(clauses, guard: Column) -> Column:
+    """Index of the first clause (``(condition | None, ...)``) whose
+    condition holds on a row where ``guard`` holds, else -1: the
+    first-match-wins rule. A NULL condition counts as false."""
+    act = F.lit(-1)
+    for i in reversed(range(len(clauses))):
+        cond_sql = clauses[i][0]
+        cc = guard & (F.expr(cond_sql) if cond_sql is not None else F.lit(True))
+        act = F.when(cc, F.lit(i)).otherwise(act)
+    return act
+
+
+def _ids(clauses, kind: str) -> list[int]:
+    return [i for i, c in enumerate(clauses) if c[1] == kind]
+
+
+def _acting(matched_clauses, by_source_clauses, kind: str) -> Column:
+    """True on a joined row whose applying clause (matched or by-source)
+    is of ``kind`` (``"update"`` / ``"delete"``)."""
+    out = F.lit(False)
+    for col, clauses in (
+        ("__act", matched_clauses), ("__bsact", by_source_clauses)
+    ):
+        ids = _ids(clauses, kind)
+        if ids:
+            out = out | F.col(col).isin(ids)
+    return out
+
+
+def _merge_join(
+    tgt: DataFrame, src: DataFrame, on_expr: Column,
+    matched_clauses, by_source_clauses,
 ) -> DataFrame:
-    """Source rows qualifying for a WHEN NOT MATCHED clause (first-match-
-    wins; a row qualifying for none is not inserted), projected and cast to
-    the target schema."""
-    unmatched = src.join(anti_base, on_expr, "left_anti")
-    iact = F.lit(-1)
-    for i in reversed(range(len(not_matched_clauses))):
-        cond_sql, _spec = not_matched_clauses[i]
-        cc = F.expr(cond_sql) if cond_sql is not None else F.lit(True)
-        iact = F.when(cc, F.lit(i)).otherwise(iact)
-    unmatched = (
-        unmatched.withColumn("__iact", iact).filter(F.col("__iact") >= 0)
+    """Target rows (alias ``t``) left-joined to the source (``src``: alias
+    ``s``, carrying the ``__s_hit`` marker) with ``__act``, the row's
+    first applying matched clause, and ``__bsact``, its first applying
+    not-matched-by-source clause (-1: none). By-source conditions see only
+    ``t`` (the ``s`` side of an unmatched row is all null)."""
+    hit = F.col("__s_hit").isNotNull()
+    return (
+        tgt.alias("t").join(src, on_expr, "left")
+        .withColumn("__act", _first_clause(matched_clauses, hit))
+        .withColumn("__bsact", _first_clause(by_source_clauses, ~hit))
     )
+
+
+def _touched_files(
+    joined: DataFrame, matched_clauses, by_source_clauses,
+    row_indexes: bool = False,
+) -> tuple[list, int, int]:
+    """ONE Spark action over a located :func:`_merge_join` (its target
+    scanned ``with_location``): the rows some clause modifies, grouped by
+    physical row identity ``(__src_fp, __src_ri)``, then by file.
+
+    Raises when the MERGE is ambiguous, by delta-spark's cardinality
+    rule: a target row that MORE THAN ONE source row would modify. A
+    match that fails every conditional clause is a no-op and never
+    counts. Returns ``(per-file rows, updated rows, deleted rows)``; each
+    per-file row carries the file key ``__src_fp`` and, with
+    ``row_indexes``, the sorted modified row indexes ``__idxs``."""
+    act, bsact = F.col("__act"), F.col("__bsact")
+    per_row = (
+        joined.filter((act >= 0) | (bsact >= 0))
+        # Hash-partitioned on the file key, both groupings below run in
+        # the one shuffle: (key, index) groups are clustered by key.
+        .repartition("__src_fp")
+        .groupBy("__src_fp", "__src_ri")
+        .agg(
+            F.sum((act >= 0).cast("int")).alias("__k"),
+            F.max(act).alias("__a"),
+            F.max(bsact).alias("__b"),
+        )
+    )
+    aggs = [F.sum((F.col("__k") > 1).cast("int")).alias("__dups")]
+    aggs += [
+        F.sum((F.col("__a") == i).cast("int")).alias(f"__n{i}")
+        for i in range(len(matched_clauses))
+    ]
+    aggs += [
+        F.sum((F.col("__b") == i).cast("int")).alias(f"__b{i}")
+        for i in range(len(by_source_clauses))
+    ]
+    if row_indexes:
+        aggs.append(F.sort_array(F.collect_list("__src_ri")).alias("__idxs"))
+    rows = per_row.groupBy("__src_fp").agg(*aggs).collect()
+    dups = sum(r["__dups"] for r in rows)
+    if dups:
+        raise ValueError(
+            f"MERGE is ambiguous: {dups} target row(s) would be modified "
+            "by multiple source rows"
+        )
+
+    def total(kind: str) -> int:
+        return sum(
+            r[f"__n{i}"] for r in rows for i in _ids(matched_clauses, kind)
+        ) + sum(
+            r[f"__b{i}"] for r in rows for i in _ids(by_source_clauses, kind)
+        )
+
+    return rows, total("update"), total("delete")
+
+
+def _nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every nested nullability flag set. A scan reads
+    every parquet value as nullable and Spark refuses a cast that narrows
+    nullability, so DML casts values to this form of a declared type."""
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            _nullable(dtype.keyType), _nullable(dtype.valueType), True
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dtype.fields
+        ])
+    return dtype
+
+
+def _set_columns(snap, matched_clauses, by_source_clauses) -> list[Column]:
+    """The post-image projection of a :func:`_merge_join` row: a column
+    some update clause SETs takes the SET expression of the row's
+    applying clause, cast to its declared type; every other column is
+    the target value as read."""
     out = []
-    for c in tcols:
+    for f in snap.schema.fields:
+        col = F.col(f"t.{f.name}")
+        sets = [
+            (act, i, clauses[i][2][f.name])
+            for act, clauses in (
+                ("__act", matched_clauses), ("__bsact", by_source_clauses)
+            )
+            for i in _ids(clauses, "update") if f.name in clauses[i][2]
+        ]
+        for act, i, expr in sets:
+            col = F.when(F.col(act) == i, F.expr(expr)).otherwise(col)
+        if sets:
+            col = col.cast(_nullable(f.dataType))
+        out.append(col.alias(f.name))
+    return out
+
+
+def _merge_insert_rows(
+    snap,
+    src: DataFrame,
+    anti_base: DataFrame | None,
+    on_expr: Column,
+    not_matched_clauses: list[tuple[str | None, dict[str, str] | bool]],
+) -> DataFrame:
+    """Source rows matching no ``anti_base`` row (every source row when it
+    is None) that qualify for a WHEN NOT MATCHED clause (first-match-wins;
+    a row qualifying for none is not inserted), projected and cast to the
+    target schema."""
+    unmatched = (
+        src if anti_base is None
+        else src.join(anti_base.alias("t"), on_expr, "left_anti")
+    )
+    unmatched = unmatched.withColumn(
+        "__iact", _first_clause(not_matched_clauses, F.lit(True))
+    ).filter(F.col("__iact") >= 0)
+    out = []
+    for f in snap.schema.fields:
         col = F.lit(None)
         for i, (_c0, spec) in enumerate(not_matched_clauses):
             val = (
-                F.col(f"s.{c}") if spec is True
-                else (F.expr(spec[c]) if c in spec else F.lit(None))
+                F.col(f"s.{f.name}") if spec is True
+                else (F.expr(spec[f.name]) if f.name in spec else F.lit(None))
             )
             col = F.when(F.col("__iact") == i, val).otherwise(col)
-        out.append(col.alias(c))
-    ins = unmatched.select(*out)
-    typed = dict((f.name, f.dataType) for f in dt.snapshot.schema.fields)
-    return ins.select(*[F.col(c).cast(typed[c]).alias(c) for c in tcols])
+        out.append(col.cast(_nullable(f.dataType)).alias(f.name))
+    return unmatched.select(*out)
 
 
-def _stage_insert_adds(
-    dt: DeltaTable, ins: DataFrame
+def _insert_base(
+    spark: SparkSession, dt: DeltaTable, matched_clauses, touched: list[str],
+    sub: DataFrame | None = None,
+) -> DataFrame | None:
+    """The target rows an insert candidate must not match. A matched
+    clause without a condition modifies every row it matches, so then
+    every file holding a match is among the ``touched`` files (``sub``,
+    their scan, when the caller has one): a source row matching none of
+    their rows matches no target row. Otherwise the whole target."""
+    if any(c is None for c, _k, _u in matched_clauses):
+        if not touched:
+            return None
+        return sub if sub is not None else _subset_df(spark, dt, touched)
+    return dt.to_df(spark) if dt.snapshot.files else None
+
+
+def _stage_merge_adds(
+    dt: DeltaTable, kept: DataFrame | None, ins: DataFrame | None,
+    n_files: int,
 ) -> tuple[list[dict[str, Any]], int]:
-    """Stage insert rows and read numTargetRowsInserted off the add-action
-    stats (every add carries numRecords) instead of running a separate
-    count() job first — one Spark job instead of two per MERGE. File sizing
-    is delegated to AQE partition coalescing (the insert set is post-join
-    shuffle output, so AQE already packs it into advisory-sized
-    partitions); zero-row part files are dropped from the commit and the
-    table dir."""
-    if active_constraints(dt.snapshot):
-        enforce_constraints(ins, dt.snapshot)
-    ins_adds = _stage_adds(
-        ins, dt.path, dt.snapshot.partition_columns, dt.snapshot.schema, snap=dt.snapshot
+    """The rewritten or post-image rows (``kept``) and the inserted rows
+    in ONE write, bounded to ``n_files`` output files when non-zero (an
+    insert-only write is left to AQE's partition coalescing). Returns the
+    adds and the inserted-row count, observed on the write itself: no
+    count job. The union is observed, not ``ins``, so the observation
+    lives in the session that runs the write (inside ``foreachBatch`` the
+    source, and so ``ins``, belongs to the micro-batch's session)."""
+    snap = dt.snapshot
+    parts = [
+        df.withColumn("__ins", F.lit(flag))
+        for df, flag in ((kept, 0), (ins, 1)) if df is not None
+    ]
+    obs = Observation()
+    out = functools.reduce(DataFrame.unionByName, parts).observe(
+        obs, F.sum("__ins").alias("n")
+    ).drop("__ins")
+    if active_constraints(snap):
+        enforce_constraints(out, snap)
+    if n_files:
+        out = _sized(out, n_files)
+    adds = _stage_adds(
+        out, dt.path, snap.partition_columns, snap.schema, snap=snap
     )
-    adds: list[dict[str, Any]] = []
-    n_inserted = 0
-    for a in ins_adds:
-        n_rec = json.loads(a.get("stats") or "{}").get("numRecords", 0)
-        if n_rec:
-            n_inserted += n_rec
-            adds.append(a)
-        else:
-            try:
-                os.remove(os.path.join(dt.path, _fs_rel(a["path"])))
-            except OSError:
-                pass
-    return adds, n_inserted
+    return adds, obs.get["n"] or 0
+
+
+def _stage_merge_cdc(
+    dt: DeltaTable, joined: DataFrame, matched_clauses, by_source_clauses,
+    ins: DataFrame | None,
+) -> list[dict[str, Any]]:
+    """CDF rows of a MERGE commit in one write: update pre/post-images
+    and deleted rows out of the :func:`_merge_join` of the touched files,
+    plus the inserted rows (a commit mixing inserts with updates or
+    deletes is read exclusively through its cdc files)."""
+    snap = dt.snapshot
+    pre = [F.col(f"t.{f.name}").alias(f.name) for f in snap.schema.fields]
+    upd = joined.filter(_acting(matched_clauses, by_source_clauses, "update"))
+    dele = joined.filter(_acting(matched_clauses, by_source_clauses, "delete"))
+    images = [
+        upd.select(*pre).withColumn("_change_type", F.lit("update_preimage")),
+        upd.select(*_set_columns(snap, matched_clauses, by_source_clauses))
+        .withColumn("_change_type", F.lit("update_postimage")),
+        dele.select(*pre).withColumn("_change_type", F.lit("delete")),
+    ]
+    if ins is not None:
+        images.append(ins.withColumn("_change_type", F.lit("insert")))
+    return _stage_cdc(
+        functools.reduce(DataFrame.unionByName, images),
+        dt.path, snap.partition_columns, snap=snap,
+    )
 
 
 def merge_delta(
@@ -1026,15 +1232,15 @@ def merge_delta(
     the normal conflict detection). Nested-struct evolution is out of
     scope.
 
-    Plan shape: target rows never leave executors except per-file match
-    counts; the target side of every join is only the AFFECTED-file subset;
-    the source is typically the small side (broadcast candidate). Identical
-    target rows are merged via a (row-values, multiplicity) representation —
-    groupBy all columns — so the duplicate-source check needs no synthetic
-    row id and stays a plain aggregate. When EVERY matched clause is
-    conditional, the affected-file scan predicate is narrowed to
-    ``on AND (cond1 OR cond2 ...)`` so files whose matches all fail the
-    conditions are never rewritten.
+    Plan shape (copy-on-write): two Spark actions. The first scans the
+    target with its physical row identity, left-joins the source, and
+    collects per touched file the ambiguity count and the per-clause row
+    counts; a file is touched when some row in it takes a clause, so a
+    file whose matches all fail every conditional clause is never
+    rewritten. The second rewrites the touched files (the target side of
+    its join is only that subset) plus the inserted rows in one write,
+    bounded to as many files as it replaces. Spark's own size estimate
+    decides whether the source is broadcast.
     """
     if matched_clauses is None:
         if matched_update and matched_delete:
@@ -1127,365 +1333,108 @@ def _merge_once(
     ) = (),
 ) -> dict[str, Any]:
     dt = DeltaTable(path)
+    snap = dt.snapshot
     # Insert-only MERGE removes no files — legal on appendOnly tables.
     _check_writable(
         dt,
         removes_files=bool(matched_clauses or by_source_clauses),
         cdf_capable=True,
     )
-    cdf = cdf_enabled(dt.snapshot)
-    cdc_actions: list[dict[str, Any]] = []
-    tcols = [f.name for f in dt.snapshot.schema.fields]
+    cdf = cdf_enabled(snap)
+    tcols = [f.name for f in snap.schema.fields]
     on_expr = F.expr(on)
     _validate_merge_clauses(
         dt, source, matched_clauses, not_matched_clauses, tcols,
         by_source_clauses=by_source_clauses,
     )
-
-    # Insert-only MERGE (no matched/by-source clauses) never touches
-    # existing rows: skip the affected-file scan AND the rewrite — matched
-    # target rows are left in place (so no spurious dataChange add/remove
-    # actions for CDC readers to misread), and duplicate source matches
-    # are NOT ambiguous (delta-spark semantics: ambiguity only applies to
-    # update/delete).
-    insert_only = not matched_clauses and not by_source_clauses
-    # All-conditional matched clauses narrow the affected-file predicate:
-    # a file whose matches all fail every clause condition is untouched.
-    affected_pred = on_expr
-    m_conds = [c for c, _k, _u in matched_clauses]
-    if matched_clauses and all(c is not None for c in m_conds):
-        any_cond = " OR ".join(f"({c})" for c in m_conds)
-        affected_pred = F.expr(f"({on}) AND ({any_cond})")
-    affected_matched = [] if not matched_clauses else _canon_rels(dt, [
-        r[_FILE_COL]
-        for r in (
-            _attributed(spark, dt)
-            .alias("t")
-            .join(source.alias("s"), affected_pred, "left_semi")
-            .select(_FILE_COL)
-            .distinct()
-            .collect()
-        )
-    ])
-    # WHEN NOT MATCHED BY SOURCE touches target rows with NO source match:
-    # its affected files come from an ANTI-join (narrowed by the clause
-    # conditions when all are conditional — t-side expressions, legal on
-    # the anti-join result where only t is in scope).
-    affected_bs: list[str] = []
-    if by_source_clauses:
-        bs_scan = (
-            _attributed(spark, dt)
-            .alias("t")
-            .join(source.alias("s"), on_expr, "left_anti")
-        )
-        bs_conds = [c for c, _k, _u in by_source_clauses]
-        if all(c is not None for c in bs_conds):
-            bs_scan = bs_scan.filter(
-                F.expr(" OR ".join(f"({c})" for c in bs_conds))
-            )
-        affected_bs = _canon_rels(dt, [
-            r[_FILE_COL]
-            for r in bs_scan.select(_FILE_COL).distinct().collect()
-        ])
-    affected = sorted(set(affected_matched) | set(affected_bs))
-
-    now_ms = int(time.time() * 1000)
     # Alias AFTER adding the match marker: withColumn would drop the alias.
     src = source.withColumn("__s_hit", F.lit(True)).alias("s")
+    now_ms = int(time.time() * 1000)
+
+    # Action 1: which files some clause modifies, the ambiguity check and
+    # the per-clause row counts. An insert-only MERGE never touches
+    # existing rows (and duplicate source matches are not ambiguous for
+    # it), so it skips this scan and the rewrite.
+    affected: list[str] = []
     n_updated = n_deleted = 0
-    adds: list[dict[str, Any]] = []
-    removes: list[dict[str, Any]] = []
+    if (matched_clauses or by_source_clauses) and snap.files:
+        rows, n_updated, n_deleted = _touched_files(
+            _merge_join(
+                dt.to_df(spark, with_location=True), src, on_expr,
+                matched_clauses, by_source_clauses,
+            ),
+            matched_clauses, by_source_clauses,
+        )
+        affected = _canon_rels(dt, [r["__src_fp"] for r in rows])
 
+    # Action 2: the touched files rewritten and the inserted rows, one
+    # write. With a matched clause that has no condition, every match
+    # modifies its row, so after the ambiguity check each target row has
+    # at most one match. Otherwise a row can carry no-op matches next to
+    # the applying one (or only no-op matches): keep one joined row per
+    # physical row, the applying one first.
+    unconditional = any(c is None for c, _k, _u in matched_clauses)
+    joined = sub = kept = ins = None
     if affected:
-        from pyspark.sql import types as _T
-
-        map_cols = [
-            f.name for f in dt.snapshot.schema.fields
-            if isinstance(f.dataType, _T.MapType)
-        ]
-        if map_cols:
-            raise ValueError(
-                "copy-on-write MERGE with matched clauses cannot group on "
-                f"map-typed column(s) {map_cols} — use mode='dv' (row "
-                "identity is (file, index), no grouping on values)"
-            )
-        # Distinct target rows + multiplicity: m identical rows merge to m
-        # identical outputs, so (values, count) is a lossless representation
-        # that gives every target row a usable identity for the dup check.
-        tgt = (
-            _subset_df(spark, dt, affected)
-            .groupBy(*tcols)
-            .agg(F.count(F.lit(1)).alias("__m"))
-            .alias("t")
+        sub = _subset_df(spark, dt, affected, with_location=not unconditional)
+        joined = _merge_join(
+            sub, src, on_expr, matched_clauses, by_source_clauses
         )
-        # First-match-wins clause id per row: __act = index of the first
-        # clause whose condition holds (for a matched row), -1 = no clause
-        # applies (row kept as-is). Computed BEFORE cache so every
-        # downstream job sees one consistent assignment.
-        hit = F.col("__s_hit").isNotNull()
-        act = F.lit(-1)
-        for i in reversed(range(len(matched_clauses))):
-            cond_sql, _kind, _upd = matched_clauses[i]
-            cc = hit & (F.expr(cond_sql) if cond_sql is not None else F.lit(True))
-            act = F.when(cc, F.lit(i)).otherwise(act)
-        # First-match-wins BY-SOURCE action for UNMATCHED rows (s side all
-        # null, so conditions may only reference t — Spark resolves the
-        # usual way and a null condition is simply false).
-        bsact = F.lit(-1)
-        for i in reversed(range(len(by_source_clauses))):
-            cond_sql, _kind, _upd = by_source_clauses[i]
-            cc = (~hit) & (
-                F.expr(cond_sql) if cond_sql is not None else F.lit(True)
+        if not unconditional:
+            w = Window.partitionBy("__src_fp", "__src_ri").orderBy(
+                F.col("__act").desc()
             )
-            bsact = F.when(cc, F.lit(i)).otherwise(bsact)
-        joined = (
-            tgt.join(src, on_expr, "left")
-            .withColumn("__act", act)
-            .withColumn("__bsact", bsact)
-            .cache()
-        )
-        try:
-            # ONE job: per-target-row match counts roll up into the
-            # ambiguity count and the per-clause matched-row totals.
-            per_clause = [
-                F.sum(
-                    F.when(F.col("__a") == i, F.col("__m")).otherwise(0)
-                ).alias(f"n{i}")
-                for i in range(len(matched_clauses))
-            ]
-            delete_ids = [
-                i for i, (_c, k, _u) in enumerate(matched_clauses)
-                if k == "delete"
-            ]
-            n_updated = n_deleted = 0
-            if matched_clauses:
-                # Group on target identity ONLY (a row matched by two
-                # source rows must land in one group for the dup check);
-                # __k == 1 after the check, so max(__act) IS the row's
-                # single act.
-                stats = (
-                    joined.filter(hit)
-                    .groupBy(*[F.col(f"t.{c}") for c in tcols], "__m")
-                    .agg(
-                        # delta-spark's cardinality rule: multiple matches
-                        # are ambiguous only when MORE THAN ONE of them
-                        # would modify the row (some clause applies,
-                        # __act >= 0); matches that fail every conditional
-                        # clause are no-ops and never nondeterministic.
-                        F.sum(
-                            F.when(F.col("__act") >= 0, 1).otherwise(0)
-                        ).alias("__k"),
-                        F.max("__act").alias("__a"),
-                    )
-                    .agg(
-                        F.sum(
-                            F.when(F.col("__k") > 1, 1).otherwise(0)
-                        ).alias("dups"),
-                        *per_clause,
-                    )
-                    .collect()[0]
-                )
-                if stats["dups"]:
-                    raise ValueError(
-                        f"MERGE is ambiguous: {stats['dups']} target row(s) "
-                        "would be modified by multiple source rows"
-                    )
-                n_updated = sum(
-                    int(stats[f"n{i}"] or 0)
-                    for i, (_c, k, _u) in enumerate(matched_clauses)
-                    if k == "update"
-                )
-                n_deleted = sum(int(stats[f"n{i}"] or 0) for i in delete_ids)
-            bs_delete_ids = [
-                i for i, (_c, k, _u) in enumerate(by_source_clauses)
-                if k == "delete"
-            ]
-            if by_source_clauses:
-                # Unmatched rows join to at most one (null) source row —
-                # no ambiguity; one small agg yields per-clause counts.
-                bs_stats = joined.filter(~hit).agg(*[
-                    F.sum(
-                        F.when(F.col("__bsact") == i, F.col("__m"))
-                        .otherwise(0)
-                    ).alias(f"b{i}")
-                    for i in range(len(by_source_clauses))
-                ]).collect()[0]
-                n_updated += sum(
-                    int(bs_stats[f"b{i}"] or 0)
-                    for i, (_c, k, _u) in enumerate(by_source_clauses)
-                    if k == "update"
-                )
-                n_deleted += sum(
-                    int(bs_stats[f"b{i}"] or 0) for i in bs_delete_ids
-                )
-            survivors = joined
-            # Dedup to ONE joined row per target when no-op matched copies
-            # can coexist with an applying one (conditional clauses), and
-            # whenever by-source clauses forced by-source-only files into
-            # the rewrite (a matched row there may carry several no-op
-            # matches that would otherwise duplicate it).
-            if by_source_clauses or any(
-                c0 is not None for c0, _k, _u in matched_clauses
-            ):
-                # Conditional clauses allow a target row to carry BOTH an
-                # applying match (__act >= 0, exactly one post-check) and
-                # no-op matches (__act = -1): keep one joined row per
-                # target — the highest-action one — or the no-op copies
-                # would duplicate the row in the rewrite.
-                from pyspark.sql.window import Window as _W
-
-                w = _W.partitionBy(
-                    *[F.col(f"t.{c}") for c in tcols], "__m"
-                ).orderBy(F.col("__act").desc())
-                survivors = (
-                    joined.filter(hit)
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                    # positional union: both branches are the same joined
-                    # projection, whose t/s sides share column names —
-                    # unionByName cannot resolve duplicates
-                    .union(joined.filter(~hit))
-                )
-            if delete_ids:
-                survivors = survivors.filter(~F.col("__act").isin(delete_ids))
-            if bs_delete_ids:
-                survivors = survivors.filter(
-                    ~F.col("__bsact").isin(bs_delete_ids)
-                )
-            out_cols = []
-            typed = dict((f.name, f.dataType) for f in dt.snapshot.schema.fields)
-            for c in tcols:
-                col = F.col(f"t.{c}")
-                # Chain per-clause updates innermost-last so clause order is
-                # irrelevant (each row carries exactly one __act/__bsact).
-                for i, (_c0, kind, upd) in enumerate(matched_clauses):
-                    if kind == "update" and c in upd:
-                        col = F.when(
-                            F.col("__act") == i, F.expr(upd[c])
-                        ).otherwise(col)
-                for i, (_c0, kind, upd) in enumerate(by_source_clauses):
-                    if kind == "update" and c in upd:
-                        col = F.when(
-                            F.col("__bsact") == i, F.expr(upd[c])
-                        ).otherwise(col)
-                out_cols.append(col.cast(typed[c]).alias(c))
-            rewritten = (
-                survivors.select(*out_cols, "__m")
-                # Re-expand multiplicities dropped by the groupBy.
-                .withColumn("__i", F.explode(F.expr("sequence(1, __m)")))
-                .select(*tcols)
-            )
-            if active_constraints(dt.snapshot):
-                enforce_constraints(rewritten, dt.snapshot)
-            adds += _stage_adds(
-                _sized(rewritten, len(affected)),
-                dt.path, dt.snapshot.partition_columns, dt.snapshot.schema, snap=dt.snapshot
-            )
-            if cdf:
-                # CDF images for the matched side, staged while ``joined``
-                # is still cached: update pre/post pairs and delete rows,
-                # multiplicities re-expanded like the rewrite.
-                def _img(frame, ct, cols_sel):
-                    return (
-                        frame.select(*cols_sel, "__m")
-                        .withColumn("__i", F.explode(F.expr("sequence(1, __m)")))
-                        .select(*tcols)
-                        .withColumn("_change_type", F.lit(ct))
-                    )
-
-                t_cols_sel = [F.col(f"t.{c}").alias(c) for c in tcols]
-                upd_ids = [
-                    i for i, (_c1, k, _u) in enumerate(matched_clauses)
-                    if k == "update"
-                ]
-                parts = []
-                if upd_ids:
-                    hit_upd = joined.filter(F.col("__act").isin(upd_ids))
-                    parts.append(_img(hit_upd, "update_preimage", t_cols_sel))
-                    parts.append(_img(hit_upd, "update_postimage", out_cols))
-                if delete_ids:
-                    parts.append(_img(
-                        joined.filter(F.col("__act").isin(delete_ids)),
-                        "delete", t_cols_sel,
-                    ))
-                bs_upd_ids = [
-                    i for i, (_c1, k, _u) in enumerate(by_source_clauses)
-                    if k == "update"
-                ]
-                if bs_upd_ids:
-                    bs_upd = joined.filter(F.col("__bsact").isin(bs_upd_ids))
-                    parts.append(_img(bs_upd, "update_preimage", t_cols_sel))
-                    parts.append(_img(bs_upd, "update_postimage", out_cols))
-                if bs_delete_ids:
-                    parts.append(_img(
-                        joined.filter(F.col("__bsact").isin(bs_delete_ids)),
-                        "delete", t_cols_sel,
-                    ))
-                if parts:
-                    u = parts[0]
-                    for p_df in parts[1:]:
-                        u = u.unionByName(p_df)
-                    cdc_actions += _stage_cdc(
-                        u, dt.path, dt.snapshot.partition_columns, snap=dt.snapshot
-                    )
-        finally:
-            joined.unpersist()
-        removes = _removes(dt, affected, now_ms)
-
-    n_inserted = 0
+            joined = joined.withColumn(
+                "__rn", F.row_number().over(w)
+            ).filter(F.col("__rn") == 1)
+        if cdf:
+            joined = joined.cache()
+        kept = joined.filter(
+            ~_acting(matched_clauses, by_source_clauses, "delete")
+        ).select(*_set_columns(snap, matched_clauses, by_source_clauses))
     if not_matched_clauses:
-        # Anti-join base: when affected == every file with ANY match, a
-        # source row matching any target row matches an affected-file row,
-        # so the (small) affected subset suffices. When the affected scan
-        # was narrowed by clause conditions that guarantee no longer holds
-        # — fall back to the full target.
-        # The subset shortcut requires affected ⊇ every file with a match,
-        # which only the UNnarrowed matched-clause semi-join guarantees —
-        # a by-source-only affected set comes from an anti-join and would
-        # treat matched source rows as unmatched (spurious inserts).
-        narrowed = affected_pred is not on_expr
-        anti_base = (
-            _subset_df(spark, dt, affected).alias("t")
-            if affected_matched and not narrowed
-            else dt.to_df(spark).alias("t")
-        )
         ins = _merge_insert_rows(
-            dt, src, anti_base, on_expr, not_matched_clauses, tcols
+            snap, src,
+            _insert_base(spark, dt, matched_clauses, affected, sub),
+            on_expr, not_matched_clauses,
         )
-        ins_adds, n_inserted = _stage_insert_adds(dt, ins)
-        adds += ins_adds
 
-    if not removes and not adds:
+    adds: list[dict[str, Any]] = []
+    n_inserted = 0
+    cdc_actions: list[dict[str, Any]] = []
+    try:
+        if kept is not None or ins is not None:
+            adds, n_inserted = _stage_merge_adds(
+                dt, kept, ins, len(affected)
+            )
+        if cdf and affected:
+            cdc_actions = _stage_merge_cdc(
+                dt, joined, matched_clauses, by_source_clauses, ins
+            )
+    finally:
+        if cdf and joined is not None:
+            joined.unpersist()
+
+    if not affected and not adds:
         return {
             "version": dt.version,
             "numTargetRowsUpdated": 0,
             "numTargetRowsDeleted": 0,
             "numTargetRowsInserted": 0,
         }
-
     metrics = {
         "numTargetRowsUpdated": n_updated,
         "numTargetRowsDeleted": n_deleted,
         "numTargetRowsInserted": n_inserted,
-        "numRemovedFiles": len(removes),
+        "numRemovedFiles": len(affected),
         "numAddedFiles": len(adds),
     }
-    if cdf and n_inserted and (removes or cdc_actions):
-        # A commit that mixes inserts with removes/updates is read
-        # exclusively through cdc — the inserted rows must be in it too.
-        # (A pure-insert MERGE commit stays derivable; no cdc needed.)
-        cdc_actions += _stage_cdc(
-            ins.withColumn("_change_type", F.lit("insert")),
-            dt.path, dt.snapshot.partition_columns, snap=dt.snapshot
-        )
     actions = [_commit_info("MERGE", {"predicate": on}, metrics, now_ms)]
-    actions += removes
+    actions += _removes(dt, affected, now_ms)
     actions += [{"add": a} for a in adds]
     actions += [{"cdc": c} for c in cdc_actions]
     version = _try_commit(
-        dt.path, actions, adds, enable_ict=ict_enabled(dt.snapshot),
-        snap=dt.snapshot,
+        dt.path, actions, adds, enable_ict=ict_enabled(snap), snap=snap,
     )
     return {"version": version, **metrics}
 
@@ -1501,16 +1450,15 @@ def _merge_dv_once(
         list[tuple[str | None, str, dict[str, str] | None]] | tuple
     ) = (),
 ) -> dict[str, Any]:
-    """Merge-on-read MERGE: matched update/delete pre-images die via
-    per-file deletion vectors; updated post-images and inserts are
-    appended as new files. No data file is rewritten.
-
-    The physical row identity (``__src_fp``, ``__src_ri``) the DV path
-    needs anyway doubles as the duplicate-match key, so the ambiguity
-    check is a plain groupBy — no (values, multiplicity) representation
-    like the copy-on-write path."""
+    """Merge-on-read MERGE: the pre-images of every row an update or
+    delete clause (matched or by-source) modifies die via per-file
+    deletion vectors; updated post-images and inserts are appended as new
+    files in one write. No data file is rewritten. The modified row
+    indexes come out of the same action as the ambiguity check and the
+    counts (:func:`_touched_files`)."""
     dt = DeltaTable(path)
-    if not dt.snapshot.files:
+    snap = dt.snapshot
+    if not snap.files:
         # zero-file table: no matched work is possible; the cow path
         # already handles the insert-only outcome (and the with_location
         # scan refuses an empty snapshot), so delegate
@@ -1524,258 +1472,72 @@ def _merge_dv_once(
         removes_files=bool(matched_clauses or by_source_clauses),
         cdf_capable=True,
     )
-    cdf = cdf_enabled(dt.snapshot)
-    cdc_actions: list[dict[str, Any]] = []
-    tcols = [f.name for f in dt.snapshot.schema.fields]
-    typed = dict((f.name, f.dataType) for f in dt.snapshot.schema.fields)
+    cdf = cdf_enabled(snap)
+    tcols = [f.name for f in snap.schema.fields]
     on_expr = F.expr(on)
     _validate_merge_clauses(
         dt, source, matched_clauses, not_matched_clauses, tcols,
         by_source_clauses=by_source_clauses,
     )
-
     now_ms = int(time.time() * 1000)
     src = source.withColumn("__s_hit", F.lit(True)).alias("s")
-    n_updated = n_deleted = 0
-    adds: list[dict[str, Any]] = []
+
     new_per_file: dict[str, list[int]] = {}
-
-    if matched_clauses:
-        tgt = dt.to_df(spark, with_location=True).alias("t")
-        hit = F.col("__s_hit").isNotNull()
-        # First-match-wins clause id per row (-1 = no clause applies, row
-        # kept as-is), computed BEFORE cache for one consistent assignment.
-        act = F.lit(-1)
-        for i in reversed(range(len(matched_clauses))):
-            cond_sql, _kind, _upd = matched_clauses[i]
-            cc = hit & (
-                F.expr(cond_sql) if cond_sql is not None else F.lit(True)
-            )
-            act = F.when(cc, F.lit(i)).otherwise(act)
-        joined = (
-            tgt.join(src, on_expr, "left").withColumn("__act", act).cache()
+    n_updated = n_deleted = 0
+    if matched_clauses or by_source_clauses:
+        rows, n_updated, n_deleted = _touched_files(
+            _merge_join(
+                dt.to_df(spark, with_location=True), src, on_expr,
+                matched_clauses, by_source_clauses,
+            ),
+            matched_clauses, by_source_clauses, row_indexes=True,
         )
-        try:
-            per_clause = [
-                F.sum(
-                    F.when(F.col("__a") == i, 1).otherwise(0)
-                ).alias(f"n{i}")
-                for i in range(len(matched_clauses))
-            ]
-            stats = (
-                joined.filter(hit)
-                .groupBy("t.__src_fp", "t.__src_ri")
-                .agg(
-                    # Same cardinality rule as the cow path: only matches
-                    # that MODIFY the row (__act >= 0) count toward
-                    # ambiguity; the DV path needs no survivor dedupe —
-                    # untouched rows simply stay in their data files.
-                    F.sum(
-                        F.when(F.col("__act") >= 0, 1).otherwise(0)
-                    ).alias("__k"),
-                    F.max("__act").alias("__a"),
-                )
-                .agg(
-                    F.sum(
-                        F.when(F.col("__k") > 1, 1).otherwise(0)
-                    ).alias("dups"),
-                    *per_clause,
-                )
-                .collect()[0]
+        new_per_file = _with_existing_dvs(dt, {
+            rel: list(r["__idxs"])
+            for r, rel in zip(
+                rows, _canon_rels(dt, [r["__src_fp"] for r in rows])
             )
-            if stats["dups"]:
-                raise ValueError(
-                    f"MERGE is ambiguous: {stats['dups']} target row(s) "
-                    "would be modified by multiple source rows"
-                )
-            upd_ids = [
-                i for i, (_c, k, _u) in enumerate(matched_clauses)
-                if k == "update"
-            ]
-            delete_ids = [
-                i for i, (_c, k, _u) in enumerate(matched_clauses)
-                if k == "delete"
-            ]
-            n_updated = sum(int(stats[f"n{i}"] or 0) for i in upd_ids)
-            n_deleted = sum(int(stats[f"n{i}"] or 0) for i in delete_ids)
-            # Every row a clause touched (update OR delete) dies in a DV;
-            # updates come back as appended post-images.
-            touched = joined.filter(F.col("__act") >= 0)
-            new_per_file, _n = _dv_mark_rows(
-                spark, dt,
-                touched.select("t.__src_fp", "t.__src_ri"),
-            )
-            # n_updated gates the staging: with zero clause-touched rows
-            # (every match failed every condition) an unconditional
-            # _stage_adds would still write a 0-row part-file and commit
-            # a spurious version.
-            if upd_ids and n_updated:
-                out_cols = []
-                for c in tcols:
-                    col = F.col(f"t.{c}")
-                    for i, (_c0, kind, upd) in enumerate(matched_clauses):
-                        if kind == "update" and c in upd:
-                            col = F.when(
-                                F.col("__act") == i, F.expr(upd[c])
-                            ).otherwise(col)
-                    out_cols.append(col.cast(typed[c]).alias(c))
-                hit_upd = joined.filter(F.col("__act").isin(upd_ids))
-                post = hit_upd.select(*out_cols)
-                if active_constraints(dt.snapshot):
-                    enforce_constraints(post, dt.snapshot)
-                adds += _stage_adds(
-                    _sized(post, max(len(new_per_file), 1)),
-                    dt.path, dt.snapshot.partition_columns,
-                    dt.snapshot.schema, snap=dt.snapshot
-                )
-                if cdf:
-                    t_sel = [F.col(f"t.{c}").alias(c) for c in tcols]
-                    pre = hit_upd.select(*t_sel).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post_img = post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    cdc_actions += _stage_cdc(
-                        pre.unionByName(post_img), dt.path,
-                        dt.snapshot.partition_columns, snap=dt.snapshot
-                    )
-            if cdf and delete_ids and n_deleted:
-                t_sel = [F.col(f"t.{c}").alias(c) for c in tcols]
-                cdc_actions += _stage_cdc(
-                    joined.filter(F.col("__act").isin(delete_ids))
-                    .select(*t_sel)
-                    .withColumn("_change_type", F.lit("delete")),
-                    dt.path, dt.snapshot.partition_columns, snap=dt.snapshot
-                )
-        except BaseException:
-            joined.unpersist()  # by-source never runs on a raise
-            raise
-        finally:
-            if not by_source_clauses:
-                joined.unpersist()
-            # else: the by-source block reads unmatched rows out of this
-            # same cached join — it unpersists in its own finally.
+        })
 
-    if by_source_clauses:
-        bs = None
-        try:
-            # WHEN NOT MATCHED BY SOURCE, merge-on-read: unmatched target
-            # rows taking a clause die in deletion vectors; by-source
-            # UPDATEs come back as appended post-images (same shape as
-            # matched updates). When the matched path already paid for
-            # the target-left-join, the unmatched rows are its
-            # null-source slice — one target scan serves both clause
-            # families (delta-spark's full-outer shape) instead of a
-            # second full anti-join scan.
-            if matched_clauses:
-                unmatched = (
-                    joined.filter(F.col("__s_hit").isNull())
-                    .select("t.*").alias("t")
-                )
-            else:
-                unmatched = (
-                    dt.to_df(spark, with_location=True).alias("t")
-                    .join(src, on_expr, "left_anti")
-                )
-            bsact = F.lit(-1)
-            for i in reversed(range(len(by_source_clauses))):
-                cond_sql, _kind, _upd = by_source_clauses[i]
-                cc = (
-                    F.expr(cond_sql) if cond_sql is not None else F.lit(True)
-                )
-                bsact = F.when(cc, F.lit(i)).otherwise(bsact)
-            bs = (
-                unmatched.withColumn("__bsact", bsact)
-                .filter(F.col("__bsact") >= 0)
-                .cache()
-            )
-            bs_upd_ids = [
-                i for i, (_c, k, _u) in enumerate(by_source_clauses)
-                if k == "update"
-            ]
-            bs_counts = bs.agg(*[
-                F.sum(
-                    F.when(F.col("__bsact") == i, 1).otherwise(0)
-                ).alias(f"b{i}")
-                for i in range(len(by_source_clauses))
-            ]).collect()[0]
-            bs_upd = sum(int(bs_counts[f"b{i}"] or 0) for i in bs_upd_ids)
-            bs_del = sum(
-                int(bs_counts[f"b{i}"] or 0)
-                for i, (_c, k, _u) in enumerate(by_source_clauses)
-                if k == "delete"
-            )
-            n_updated += bs_upd
-            n_deleted += bs_del
-            if bs_upd or bs_del:
-                bs_per_file, _n = _dv_mark_rows(
-                    spark, dt, bs.select("__src_fp", "__src_ri"),
-                )
-                # Matched rows and unmatched rows are disjoint, but one
-                # FILE can carry both kinds: union the per-file indexes
-                # (each call already folds in the file's pre-existing DV).
-                for f, idxs in bs_per_file.items():
-                    if f in new_per_file:
-                        new_per_file[f] = sorted(
-                            set(new_per_file[f]) | set(idxs)
-                        )
-                    else:
-                        new_per_file[f] = idxs
-            if bs_upd:
-                out_cols = []
-                for c in tcols:
-                    col = F.col(f"t.{c}")
-                    for i, (_c0, kind, upd) in enumerate(by_source_clauses):
-                        if kind == "update" and c in upd:
-                            col = F.when(
-                                F.col("__bsact") == i, F.expr(upd[c])
-                            ).otherwise(col)
-                    out_cols.append(col.cast(typed[c]).alias(c))
-                bs_upd_rows = bs.filter(F.col("__bsact").isin(bs_upd_ids))
-                post_bs = bs_upd_rows.select(*out_cols)
-                if active_constraints(dt.snapshot):
-                    enforce_constraints(post_bs, dt.snapshot)
-                adds += _stage_adds(
-                    _sized(post_bs, 1), dt.path,
-                    dt.snapshot.partition_columns, dt.snapshot.schema,
-                    snap=dt.snapshot,
-                )
-                if cdf:
-                    t_sel = [F.col(f"t.{c}").alias(c) for c in tcols]
-                    pre = bs_upd_rows.select(*t_sel).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post_img = post_bs.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    cdc_actions += _stage_cdc(
-                        pre.unionByName(post_img), dt.path,
-                        dt.snapshot.partition_columns, snap=dt.snapshot
-                    )
-            if cdf and bs_del:
-                t_sel = [F.col(f"t.{c}").alias(c) for c in tcols]
-                cdc_actions += _stage_cdc(
-                    bs.filter(~F.col("__bsact").isin(bs_upd_ids))
-                    .select(*t_sel)
-                    .withColumn("_change_type", F.lit("delete")),
-                    dt.path, dt.snapshot.partition_columns, snap=dt.snapshot
-                )
-        finally:
-            if bs is not None:
-                bs.unpersist()
-            if matched_clauses:
-                joined.unpersist()
-
-    n_inserted = 0
-    ins = None
+    # Post-images (and CDF images) from a second scan of the DV'd files
+    # only. Each modified row has exactly one applying joined row (the
+    # ambiguity check), so no dedupe: no-op matches simply never pass
+    # the filter, and untouched rows stay in their data files.
+    touched = list(new_per_file)
+    joined = sub = post = ins = None
+    if touched and (n_updated or cdf):
+        sub = _subset_df(spark, dt, touched)
+        joined = _merge_join(
+            sub, src, on_expr, matched_clauses, by_source_clauses
+        )
+        if cdf:
+            joined = joined.cache()
+        if n_updated:
+            post = joined.filter(
+                _acting(matched_clauses, by_source_clauses, "update")
+            ).select(*_set_columns(snap, matched_clauses, by_source_clauses))
     if not_matched_clauses:
         ins = _merge_insert_rows(
-            dt, src, dt.to_df(spark).alias("t"), on_expr,
-            not_matched_clauses, tcols,
+            snap, src,
+            _insert_base(spark, dt, matched_clauses, touched, sub),
+            on_expr, not_matched_clauses,
         )
-        ins_adds, n_inserted = _stage_insert_adds(dt, ins)
-        adds += ins_adds
+
+    adds: list[dict[str, Any]] = []
+    n_inserted = 0
+    cdc_actions: list[dict[str, Any]] = []
+    try:
+        if post is not None or ins is not None:
+            adds, n_inserted = _stage_merge_adds(
+                dt, post, ins, len(touched) if post is not None else 0
+            )
+        if cdf and touched:
+            cdc_actions = _stage_merge_cdc(
+                dt, joined, matched_clauses, by_source_clauses, ins
+            )
+    finally:
+        if cdf and joined is not None:
+            joined.unpersist()
 
     if not new_per_file and not adds:
         return {
@@ -1785,7 +1547,6 @@ def _merge_dv_once(
             "numTargetRowsInserted": 0,
             "numDeletionVectorsAdded": 0,
         }
-
     metrics = {
         "numTargetRowsUpdated": n_updated,
         "numTargetRowsDeleted": n_deleted,
@@ -1797,16 +1558,8 @@ def _merge_dv_once(
     if new_per_file:
         actions += _dv_protocol_and_file_actions(dt, new_per_file, now_ms)
     actions += [{"add": a} for a in adds]
-    if cdf and n_inserted and (new_per_file or cdc_actions):
-        # A commit that mixes inserts with DV'd updates/deletes is read
-        # exclusively through cdc — the inserted rows must be in it too.
-        cdc_actions += _stage_cdc(
-            ins.withColumn("_change_type", F.lit("insert")),
-            dt.path, dt.snapshot.partition_columns, snap=dt.snapshot
-        )
     actions += [{"cdc": c} for c in cdc_actions]
     version = _try_commit(
-        dt.path, actions, adds, enable_ict=ict_enabled(dt.snapshot),
-        snap=dt.snapshot,
+        dt.path, actions, adds, enable_ict=ict_enabled(snap), snap=snap,
     )
     return {"version": version, **metrics}

@@ -475,6 +475,76 @@ def test_typed_date_and_timestamp_literals_prune(spark, tmp_path):
     assert len(skip_files(snap, "d < TIMESTAMP '2024-01-20 00:00:00'")) == 3
 
 
+def test_naive_timestamp_literals_read_in_session_zone(spark, tmp_path):
+    """Spark reads a naive literal compared with a TIMESTAMP column in
+    the session time zone, and casts a timestamp to a date there. The
+    skipper must do both, or a non-UTC session silently loses rows."""
+    import json as _json
+    import os
+
+    path = str(tmp_path / "t")
+    for lo in (0, 12):  # 00:00-04:00 and 12:00-16:00 UTC on 2024-01-01
+        write_delta(spark.sql(f"""
+            SELECT timestamp_seconds(1704067200 + (id + {lo}) * 3600) AS ts, id
+            FROM range(5)
+        """).coalesce(1), path, mode="append")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        full = read_delta(spark, path)
+        for pred in (
+            "ts < '2024-01-01 08:00:00'",  # 16:00 UTC: both files
+            "ts < TIMESTAMP '2023-12-31 20:00:00'",  # 04:00 UTC
+            "ts < CAST('2023-12-31 20:00:00' AS TIMESTAMP)",
+            "ts > '2024-01-01 03:30:00'",  # 11:30 UTC
+        ):
+            expect = full.filter(pred).count()
+            assert expect, pred
+            assert read_delta(spark, path, where=pred).count() == expect, pred
+        # still prunes, in the right zone: 17:00 PST is 01:00 UTC
+        snap = _load_snapshot(path)
+        assert len(skip_files(snap, "ts < '2023-12-31 17:00:00'")) == 1
+        assert len(skip_files(snap, "ts >= '2024-01-01 04:00:00'")) == 1
+
+        # A date partition generated as CAST(ts AS DATE), written in
+        # this zone: 48 hourly rows from 2024-01-01 00:00 UTC fall on
+        # three Los Angeles days.
+        gen = str(tmp_path / "gen")
+        write_delta(spark.sql("""
+            SELECT timestamp_seconds(1704067200 + id * 3600) AS ts,
+                   CAST(timestamp_seconds(1704067200 + id * 3600) AS DATE)
+                     AS event_date
+            FROM range(48)
+        """).coalesce(1), gen, partition_by=["event_date"])
+        log0 = os.path.join(gen, "_delta_log", f"{0:020d}.json")
+        with open(log0) as fh:
+            acts = [_json.loads(line) for line in fh]
+        for a in acts:
+            if "metaData" in a:
+                schema = _json.loads(a["metaData"]["schemaString"])
+                for f in schema["fields"]:
+                    if f["name"] == "event_date":
+                        f["metadata"] = {
+                            "delta.generationExpression": "CAST(ts AS DATE)"
+                        }
+                a["metaData"]["schemaString"] = _json.dumps(schema)
+        with open(log0, "w") as fh:
+            fh.writelines(_json.dumps(a) + "\n" for a in acts)
+        full = read_delta(spark, gen)
+        for pred in (
+            # 03:00 UTC on 01-02 is 19:00 on 01-01 in Los Angeles
+            "ts >= '2024-01-02T03:00:00Z'",
+            "ts >= '2024-01-01 20:00:00'",
+            "ts < '2024-01-01 02:00:00'",
+        ):
+            expect = full.filter(pred).count()
+            assert expect, pred
+            assert read_delta(spark, gen, where=pred).count() == expect, pred
+        assert len(skip_files(_load_snapshot(gen), "ts < '2023-12-31 20:00:00'")) == 1
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
 def test_optimize_where_unparseable_raises_and_commits_nothing(
     spark, tmp_path,
 ):

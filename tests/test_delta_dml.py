@@ -475,19 +475,35 @@ def test_dv_merge_zero_clause_matches_is_noop(spark, tmp_path):
     assert DeltaTable(tbl).snapshot.version == v_before  # no commit
 
 
-def test_cow_merge_on_map_column_refused(spark, tmp_path):
-    from ballista_delta_spark.sources.delta import write_delta
+def test_cow_merge_on_map_column_matches_dv(spark, tmp_path):
+    """Copy-on-write MERGE keys target rows by physical identity (file,
+    row index), never by value, so a map column (which Spark can neither
+    group nor compare) merges like any other: updates and inserts land,
+    untouched rows keep their maps, and the result equals mode="dv"."""
+    from ballista_delta_spark.sources.delta import read_delta, write_delta
     from ballista_delta_spark.sources.delta_dml import merge_delta
 
-    tbl = str(tmp_path / "maps")
-    write_delta(
-        spark.sql("SELECT id, map('k', id) AS m FROM range(5)"), tbl
-    )
-    src = spark.sql("SELECT id, map('k', id * 2) AS m FROM range(3)")
-    with pytest.raises(ValueError, match="map-typed"):
-        merge_delta(
-            spark, tbl, src, "t.id = s.id", matched_update={"id": "s.id"},
+    out = {}
+    for mode in ("cow", "dv"):
+        tbl = str(tmp_path / f"maps_{mode}")
+        write_delta(
+            spark.sql("SELECT id, map('k', id) AS m FROM range(5)"), tbl
         )
+        src = spark.sql("SELECT id, map('k', id * 10) AS m FROM range(3, 7)")
+        m = merge_delta(
+            spark, tbl, src, "t.id = s.id", matched_update={"m": "s.m"},
+            not_matched_insert=True, mode=mode,
+        )
+        assert m["numTargetRowsUpdated"] == 2
+        assert m["numTargetRowsInserted"] == 2
+        out[mode] = sorted(
+            (r["id"], r["m"]) for r in read_delta(spark, tbl).collect()
+        )
+    assert out["cow"] == [
+        (0, {"k": 0}), (1, {"k": 1}), (2, {"k": 2}), (3, {"k": 30}),
+        (4, {"k": 40}), (5, {"k": 50}), (6, {"k": 60}),
+    ]
+    assert out["cow"] == out["dv"]
 
 
 # ------------------------------------------------------- replaceWhere
@@ -843,3 +859,180 @@ def test_merge_by_source_dv_mode(spark, tmp_path):
     assert data_files <= set(_glob.glob(os.path.join(tbl, "*.parquet")))
     rows = sorted((r.id, r.v) for r in read_delta(spark, tbl).collect())
     assert rows == [(1, 111), (2, 200), (4, 40), (9, 999)]
+
+
+# ------------------------------------------- MERGE plan shape and metrics
+def _ranged_table(spark, path, files, rows_per_file):
+    """``files`` one-file appends of ``id`` (and ``v`` = ``id``)."""
+    for i in range(files):
+        write_delta(
+            spark.range(
+                i * rows_per_file, (i + 1) * rows_per_file, 1, 1
+            ).selectExpr("id", "id AS v"),
+            path, mode="append",
+        )
+
+
+def test_cow_merge_update_insert_is_two_actions(spark, tmp_path):
+    """A copy-on-write UPDATE + INSERT MERGE is two Spark actions: one
+    collect of the touched files, the ambiguity check and the per-clause
+    counts, then one write of the rewritten file plus the inserted rows
+    (their count observed on that write). On an 8-file table that is 6
+    jobs: each action's source broadcast, the collect's shuffle stage and
+    result, the anti-join's broadcast of the touched file, and the write.
+    The (values, multiplicity) design ran 10."""
+    tbl = str(tmp_path / "eight")
+    _ranged_table(spark, tbl, 8, 2000)
+    # 240 keys in the newest file, 60 new ones
+    src = spark.range(15_760, 16_060, 1, 1).selectExpr("id", "-1L AS v")
+    sc = spark.sparkContext
+    sc.setJobGroup("cow-merge", "update + insert MERGE")
+    try:
+        m = merge_delta(
+            spark, tbl, src, "t.id = s.id", matched_update={"v": "s.v"},
+            not_matched_insert=True,
+        )
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("cow-merge")
+    assert len(jobs) == 6, f"expected 6 jobs, got {len(jobs)}"
+    assert m["numTargetRowsUpdated"] == 240
+    assert m["numTargetRowsInserted"] == 60
+    # the rewrite and the inserts share one output file
+    assert (m["numRemovedFiles"], m["numAddedFiles"]) == (1, 1)
+    got = read_delta(spark, tbl)
+    assert got.count() == 16_060
+    assert got.filter("v = -1").count() == 300
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+def test_ambiguous_merge_stages_nothing(spark, tmp_path, mode):
+    """The ambiguity check is part of the first action, before anything
+    is written: an ambiguous MERGE with an insert clause leaves no file or
+    staging directory behind in the table and commits nothing."""
+    tbl = str(tmp_path / "amb")
+    _ranged_table(spark, tbl, 2, 10)
+
+    def listing():
+        return sorted(
+            os.path.join(root, n)
+            for root, dirs, names in os.walk(tbl) for n in dirs + names
+        )
+
+    before, v0 = listing(), DeltaTable(tbl).version
+    src = spark.createDataFrame(
+        [(5, 1), (5, 2), (999, 3)], "id long, v long"
+    )
+    with pytest.raises(ValueError, match="ambiguous"):
+        merge_delta(
+            spark, tbl, src, "t.id = s.id", matched_update={"v": "s.v"},
+            not_matched_insert=True, mode=mode,
+        )
+    assert listing() == before
+    assert DeltaTable(tbl).version == v0
+
+
+def _changes_seen(spark, tbl, v0):
+    """What a fresh read shows a commit did: rows updated (value
+    changed), deleted and inserted by ``id``; files removed and added."""
+    before = {r.id: r.v for r in read_delta(spark, tbl, version=v0).collect()}
+    after = {r.id: r.v for r in read_delta(spark, tbl).collect()}
+    files0 = set(DeltaTable(tbl, version=v0).snapshot.files)
+    files1 = set(DeltaTable(tbl).snapshot.files)
+    return {
+        "numTargetRowsUpdated": sum(
+            before[k] != after[k] for k in before.keys() & after.keys()
+        ),
+        "numTargetRowsDeleted": len(before.keys() - after.keys()),
+        "numTargetRowsInserted": len(after.keys() - before.keys()),
+        "numRemovedFiles": len(files0 - files1),
+        "numAddedFiles": len(files1 - files0),
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["conditional", "by_source", "cdf", "constrained"]
+)
+def test_merge_commit_metrics_match_fresh_read(spark, tmp_path, case):
+    """The MERGE commit's operationMetrics (rows updated, deleted and
+    inserted, files removed and added) equal what a fresh read shows;
+    with a CHECK constraint, whose check is the first action over the
+    rows the MERGE writes, too."""
+    from ballista_delta_spark.sources.delta import (
+        alter_constraints,
+        alter_properties,
+        read_delta_changes,
+    )
+
+    tbl = str(tmp_path / case)
+    _ranged_table(spark, tbl, 4, 10)
+    # every SET changes its row's value, so a fresh read sees it
+    src = spark.range(20, 60).selectExpr("id", "id * 100 + 7 AS v")
+    kw: dict = {}
+    if case == "by_source":
+        src = src.filter("id < 30")
+        kw = dict(
+            matched_clauses=[(None, "update", {"v": "s.v"})],
+            not_matched_clauses=[],
+            not_matched_by_source_clauses=[
+                ("t.id >= 15", "delete", None),
+                ("t.id % 2 = 0", "update", {"v": "t.v + 1000"}),
+            ],
+        )
+    else:
+        # some matches take no clause: no-op matches beside applying ones
+        kw = dict(
+            matched_clauses=[
+                ("s.id % 2 = 0", "update", {"v": "s.v"}),
+                ("s.id % 3 = 0", "delete", None),
+            ],
+            not_matched_clauses=[("s.id % 5 != 0", True)],
+        )
+        if case == "cdf":
+            alter_properties(
+                spark, tbl, {"delta.enableChangeDataFeed": "true"}
+            )
+        if case == "constrained":
+            alter_constraints(spark, tbl, add={"nonneg": "v >= 0"})
+    v0 = DeltaTable(tbl).version
+    merge_delta(spark, tbl, src, "t.id = s.id", **kw)
+    commit = DeltaTable(tbl).history()[-1]
+    assert commit["version"] == v0 + 1 and commit["operation"] == "MERGE"
+    metrics = {k: int(v) for k, v in commit["operationMetrics"].items()}
+    seen = _changes_seen(spark, tbl, v0)
+    assert metrics == seen
+    # every kind of change the clauses allow happened
+    assert all(v for k, v in seen.items() if k != "numTargetRowsInserted")
+    assert seen["numTargetRowsInserted"] or case == "by_source"
+    if case == "cdf":
+        kinds = {
+            r["_change_type"]: r["count"]
+            for r in read_delta_changes(spark, tbl, v0, v0 + 1)
+            .groupBy("_change_type").count().collect()
+        }
+        assert kinds == {
+            "update_preimage": seen["numTargetRowsUpdated"],
+            "update_postimage": seen["numTargetRowsUpdated"],
+            "delete": seen["numTargetRowsDeleted"],
+            "insert": seen["numTargetRowsInserted"],
+        }
+
+
+def test_cow_update_counts_rows_in_the_touched_file_collect(spark, tmp_path):
+    """Copy-on-write UPDATE takes its per-file updated-row counts from the
+    touched-file collect, so it runs no separate count: 3 jobs on a
+    2-file table (the collect's shuffle stage and result, and the
+    rewrite's write) where a distinct() collect plus a count(), two jobs
+    each under AQE, and the write ran 5."""
+    tbl = str(tmp_path / "upd")
+    _ranged_table(spark, tbl, 2, 1000)
+    sc = spark.sparkContext
+    sc.setJobGroup("cow-update", "UPDATE")
+    try:
+        m = update_delta(spark, tbl, "id % 10 = 0", {"v": "-v"})
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("cow-update")
+    assert len(jobs) == 3, f"expected 3 jobs, got {len(jobs)}"
+    assert (m["numUpdatedRows"], m["numRewrittenFiles"]) == (200, 2)
+    assert read_delta(spark, tbl).filter("v < 0").count() == 199  # -0 = 0
