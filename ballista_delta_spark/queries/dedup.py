@@ -538,11 +538,8 @@ _PROBE_BITS = tuple(1 << k for k in range(_EMB_N_PLANES))
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import dot_expr
 
-    # NO higher-order functions: transform()/aggregate() are CodegenFallback
-    # and one in the corpus projection knocks the whole join stage — the
-    # 100k+-pair cosine hot loop — out of whole-stage codegen (measured 0
-    # codegen spans, ~2x end-to-end). Cast + unrolled dot keep identical
-    # values and fold order, fully codegen'd.
+    # The bucket is a per-vector fold (lsh_bucket_expr); the 100k+-pair
+    # cosine below is the unrolled pair-loop kernel (dot_expr).
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )

@@ -9,11 +9,12 @@ Scale shapes, per operator:
   ``posexplode`` (no shuffle — output partitioning inherits the scan).
   At 100 TB chunking is embarrassingly parallel; the only cost is the
   write amplification of overlap, which is the configured 16/64 = 25%.
-- ``text_tfidf_topk``: the classic two-shuffle shape — one exchange keyed
-  by term (document frequencies; vocabulary-sized, NOT corpus-sized,
-  thanks to map-side partial aggregation) and one keyed by doc (per-doc
-  top-k via window). The df relation is broadcast back (vocabulary ≪
-  corpus), so the big side is shuffled ONCE.
+- ``text_tfidf_topk``: one exchange keyed by doc spreads the documents;
+  tokenizing, the exact per-(doc, term) counts and the per-doc top-k
+  window all ride it. Document frequencies come from those counts over
+  one exchange keyed by the 64-bit term fingerprint (the term itself
+  stays part of the group), and are broadcast back (vocabulary ≪
+  corpus), so the counted side is never reshuffled.
 - ``corpus_mix``: pure hash arithmetic — a codegen'd filter (downsample)
   plus a per-row ``explode(sequence())`` (upsample/epochs); zero joins,
   zero pre-aggregation shuffles. Exactly how production mixture recipes
@@ -110,6 +111,11 @@ def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TFIDF_K = 3
 
 
+def _term_fingerprint(term):
+    """64-bit xxhash64 fingerprint of a term column: the shuffle key."""
+    return F.xxhash64(term)
+
+
 @_q(
     "text_tfidf_topk",
     f"""
@@ -153,22 +159,27 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_docs = d.count()
         if nk is not None:
             _VSIZE_CACHE[("n_docs", nk)] = n_docs
-    terms = d.select(
-        "doc_id", F.explode(F.split("text", _WS)).alias("term")
-    ).select("doc_id", "term", F.xxhash64("term").alias("th"))
-    # The corpus-grain tf exchange routes AND pays by the 8-byte term
-    # fingerprint (r15, guide §2.3): the raw term string never crosses
-    # it — the output/tie-break string is re-attached from the broadcast
-    # vocabulary relation, which carries each distinct term exactly once
-    # (min == the term itself; oracle-checked at every SF).
-    tf = terms.groupBy("doc_id", "th").agg(F.count("*").alias("tf"))
-    df_rel = terms.groupBy("th").agg(
-        F.countDistinct("doc_id").alias("df"),
-        F.min("term").alias("term"),
+    # Tokenize on every core: a small corpus file is a single split, so
+    # spread the documents by doc_id first. tf groups on the exact term
+    # and rides that partitioning with no exchange; df counts tf's rows
+    # per term, shuffled on the 8-byte fingerprint only; the window below
+    # rides doc_id too. Two terms sharing a fingerprint stay two terms.
+    d = d.repartition(
+        spread_width(spark, sf_dir) or spark.sparkContext.defaultParallelism,
+        "doc_id",
+    )
+    tf = (
+        d.select("doc_id", F.explode(F.split("text", _WS)).alias("term"))
+        .groupBy("doc_id", _term_fingerprint(F.col("term")).alias("th"), "term")
+        .agg(F.count("*").alias("tf"))
+    )
+    df_rel = (
+        tf.select("th", "term").repartition("th")
+        .groupBy("th", "term").agg(F.count("*").alias("df"))
     )
     # vocabulary ≪ corpus: broadcast the df relation so the tf side (the
     # big one) is never reshuffled for the join
-    scored = tf.join(F.broadcast(df_rel), "th").select(
+    scored = tf.join(F.broadcast(df_rel), ["th", "term"]).select(
         "doc_id",
         "term",
         F.round(

@@ -58,25 +58,54 @@ def _planes(n_planes: int = _N_PLANES) -> list[list[int]]:
     ]
 
 
+def _sql_double(x: float) -> str:
+    """One DOUBLE literal for an inline VALUES table. repr() round-trips
+    every finite double bit-for-bit; non-finite values have no bare SQL
+    literal (repr -> 'inf'/'nan' would be a ParseException), so they
+    render as the explicit string cast Spark defines for them."""
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x == float("inf"):
+        return "CAST('Infinity' AS DOUBLE)"
+    if x == float("-inf"):
+        return "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def _lit_array(c: list[float]) -> str:
+    return "array(" + ", ".join(_sql_double(x) for x in c) + ")"
+
+
+def _fold(left: str, right: str, term: str = "x * y") -> str:
+    """``term(left[0], right[0]) + term(left[1], right[1]) + ...`` as ONE
+    ``aggregate(zip_with(...))`` fold: the form of every per-vector sum
+    (norm, centroid dots, squared distances, LSH planes). Catalyst parses,
+    analyses and generates code for a 64-term chain on every frame build;
+    the fold is one lambda over the arrays. Seeding with -0.0 keeps it
+    bit-identical to the left-associative chain, because -0.0 + t == t
+    bitwise for every double t. Only the pair-loop cosine stays unrolled
+    (``dot_expr``): it runs per pair, not per vector."""
+    return (
+        f"aggregate(zip_with({left}, {right}, (x, y) -> {term}), "
+        "-0.0D, (a, v) -> a + v)"
+    )
+
+
 def lsh_bucket_expr(n_planes: int = _N_PLANES, *, dialect: str = "spark") -> str:
-    """Sign-LSH bucket id over an `emb: array<double>` column, as a flat
-    generated expression: bucket = sum_k (plane_k . emb > 0) << k.
-
-    Generated UNROLLED (64 multiply-adds per plane, zero-weight terms
-    skipped) instead of folding over a literal plane matrix: both engines
-    then evaluate a plain left-to-right double chain — identical IEEE
-    result, and ~10x faster than re-materializing a 4x64 array literal per
-    row (measured 8.4s -> <1s on the DuckDB side at sf0.01).
-
-    The same Python loop emits both dialects, so the Spark query and the
-    DuckDB oracle agree term-for-term (fold order included).
-    """
+    """Sign-LSH bucket id over an `emb: array<double>` column:
+    bucket = sum_k (plane_k . emb > 0) << k. Both dialects sum each plane's
+    nonzero-weight terms left to right in double precision, so the Spark
+    query and the DuckDB oracle agree term for term (non-finite inputs
+    included): Spark as one ``_fold`` per plane, DuckDB as an unrolled
+    chain (~10x faster there than a fold over a plane-matrix literal)."""
     if dialect not in ("spark", "duckdb"):
         raise ValueError(f"unknown dialect {dialect!r} (spark | duckdb)")
     terms = []
     for k, row in enumerate(_planes(n_planes)):
         if dialect == "spark":
-            dot = " + ".join(f"emb[{d}] * ({w}.0D)" for d, w in enumerate(row) if w)
+            ds = [d for d, w in enumerate(row) if w]
+            dot = _fold(f"array({', '.join(map(str, ds))})",
+                        _lit_array([float(row[d]) for d in ds]), "emb[x] * y")
             terms.append(
                 f"(CASE WHEN ({dot}) > 0D THEN CAST({1 << k} AS BIGINT) "
                 f"ELSE CAST(0 AS BIGINT) END)"
@@ -87,18 +116,11 @@ def lsh_bucket_expr(n_planes: int = _N_PLANES, *, dialect: str = "spark") -> str
     return "(" + " + ".join(terms) + ")"
 
 
-# Normalized corpus with per-row norm, shared by both queries.
-# NO higher-order functions anywhere: transform()/aggregate() are
-# CodegenFallback expressions, and ONE of them in a projection knocks the
-# whole downstream stage (including the pair join's cosine loop) out of
-# whole-stage codegen — measured 0 codegen spans and ~10x slowdown. The
-# array cast and the unrolled dot are plain codegen expressions with the
-# same values and fold order.
+# Corpus as array<double> with its per-row L2 norm, shared by every query.
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    return e.withColumn("nrm", F.sqrt(F.expr(dot_expr("emb", "emb"))))
+    return load(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS emb"
+    ).withColumn("nrm", F.sqrt(F.expr(_fold("emb", "emb"))))
 
 
 _CORPUS_ORACLE = """
@@ -117,13 +139,11 @@ _COS_ORACLE = """
 
 
 def dot_expr(left: str, right: str, dim: int = _DIM) -> str:
-    """Unrolled left-to-right dot product over two array<double> columns.
-
-    Same IEEE fold order as both the previous zip_with/aggregate form and
-    the oracle's list_sum comprehension — but fully inside whole-stage
-    codegen (GetArrayItem chains), where the higher-order-function form is
-    interpreted expression evaluation. Per-pair cosine is the hot loop of
-    every similarity join: measured ~10x on the blocked embedding dedup."""
+    """Unrolled left-to-right dot product over two array<double> columns:
+    the pair-loop kernel. The cosine of a similarity join runs once per
+    candidate pair, where a plain GetArrayItem chain inside whole-stage
+    codegen beats the interpreted ``_fold``; per-vector sums use the fold.
+    Same IEEE fold order as ``_fold`` and the oracle's list_sum."""
     return " + ".join(f"{left}[{i}] * {right}[{i}]" for i in range(dim))
 
 
@@ -302,20 +322,6 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     return cents
 
 
-def _sql_double(x: float) -> str:
-    """One DOUBLE literal for an inline VALUES table. repr() round-trips
-    every finite double bit-for-bit; non-finite values have no bare SQL
-    literal (repr -> 'inf'/'nan' would be a ParseException), so they
-    render as the explicit string cast Spark defines for them."""
-    if x != x:
-        return "CAST('NaN' AS DOUBLE)"
-    if x == float("inf"):
-        return "CAST('Infinity' AS DOUBLE)"
-    if x == float("-inf"):
-        return "CAST('-Infinity' AS DOUBLE)"
-    return f"{x!r}D"
-
-
 def _probe_values_df(
     spark: SparkSession, probe_rows: list[tuple]
 ) -> DataFrame:
@@ -350,40 +356,32 @@ def _probe_values_df(
 
 def _sqdist_cols(cents: list[list[float]]) -> list:
     """``__d0..__d{K-1}`` = squared L2 distance to each literal centroid,
-    as K separate unrolled codegen chains (same janino-size reasoning as
-    _with_centroid_dots). ONE definition for every K-centroid consumer
-    (kmeans step, outlier detect, k-center step, cluster purity): a chain
-    fix applied here lands in all of them at once."""
+    one ``_fold`` per centroid. ONE definition for every K-centroid
+    consumer (kmeans step, outlier detect, k-center step, cluster
+    purity)."""
     return [
-        F.expr(" + ".join(
-            f"(emb[{d}] - {c[d]!r}D) * (emb[{d}] - {c[d]!r}D)"
-            for d in range(_DIM)
-        )).alias(f"__d{i}")
+        F.expr(_fold("emb", _lit_array(c), "(x - y) * (x - y)")).alias(f"__d{i}")
         for i, c in enumerate(cents)
     ]
 
 
 def _with_centroid_dots(df: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """Add ``__d0..__d{K-1}`` = dot(emb, c)/|c| per literal centroid.
-
-    One column per centroid, NOT one K-wide array expression: a single
-    512-term array literal blows janino's generated-method size (observed:
-    whole-stage codegen compile errors + interpreted fallback), while K
-    separate 64-term chains are each the shape ``dot_expr`` already
-    compiles. CollapseProject keeps the aliases as a separate projection
-    when they're re-referenced (non-cheap, multi-use), so downstream argmax
-    reads plain column refs. Fold order matches the oracle's cross-join
-    computation exactly: dots left-to-right over d, |c| = sqrt of the
-    left-to-right (NOT fsum) sum of squares; repr() round-trips doubles, so
-    the literals ARE the stored float32 values."""
+    """Add ``__d0..__d{K-1}`` = dot(emb, c)/|c| per literal centroid, one
+    ``_fold`` per centroid. CollapseProject keeps the aliases as their own
+    projection when they are re-referenced (non-cheap, multi-use), so the
+    argmax downstream reads plain column refs. Same fold order as the
+    oracle: dots left to right over d, |c| = sqrt of the left-to-right
+    (NOT fsum) sum of squares; repr() round-trips doubles, so the
+    literals ARE the stored float32 values."""
     import math
 
-    dcols = []
-    for i, c in enumerate(cents):
-        dot = " + ".join(f"emb[{d}] * {c[d]!r}D" for d in range(_DIM))
-        nrm = math.sqrt(sum((x * x for x in c), 0.0))
-        dcols.append(F.expr(f"({dot}) / {nrm!r}D").alias(f"__d{i}"))
-    return df.select("*", *dcols)
+    return df.select("*", *[
+        F.expr(
+            f"{_fold('emb', _lit_array(c))} / "
+            + _sql_double(math.sqrt(sum((x * x for x in c), 0.0)))
+        ).alias(f"__d{i}")
+        for i, c in enumerate(cents)
+    ])
 
 
 def _dots_arr(k: int) -> str:
@@ -446,8 +444,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _corpus(spark, sf_dir)
     # Cell assignment: map-side projections over literal centroids; the
     # argmax reads the K dot COLUMNS (cheap refs), 1-based array_position
-    # tie-breaks to the lowest centroid id -> cid = i-1. The K x 64-term
-    # chains run on however many tasks the corpus scan produced (ONE for
+    # tie-breaks to the lowest centroid id -> cid = i-1. The K centroid
+    # folds run on however many tasks the corpus scan produced (ONE for
     # a single-row-group file) — spread to cluster width under the guard
     # (no-op once the corpus scans wide); per-row math, order-proof.
     from ._tables import spread_width
@@ -646,9 +644,8 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # strata, IVF index training): assign every vector to its nearest of
 # K=8 literal seed centroids (squared-L2, first-on-tie), then emit the
 # RECOMPUTED per-cluster means. Scale shape mirrors sim_ivf_topk's
-# assignment: per-centroid distance columns as K separate 64-term
-# codegen'd chains (one 512-term expression would blow janino), argmin
-# as a pure projection — the corpus is touched by exactly ONE narrow
+# assignment: one squared-distance fold per centroid (`_sqdist_cols`),
+# argmin as a pure projection — the corpus is touched by exactly ONE narrow
 # pass and the only shuffle carries (cluster, dim) partial sums, K*DIM
 # groups regardless of corpus size. A full k-means run is this query
 # iterated with the driver feeding back the new centroids as literals.
@@ -817,9 +814,8 @@ def emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lookups instead of DIM multiplies.
 #
 # Index build (one narrow pass, materialized ONCE): per sub-space
-# squared-L2 to each codebook entry as M*KC separate 8-term codegen'd
-# chains (one fused expression would blow janino's 64 KB method — same
-# pin as emb_kmeans_step), argmin per sub-space as a pure projection,
+# squared-L2 to each codebook entry as one transform/aggregate fold per
+# sub-space, argmin per sub-space as a pure projection,
 # then localCheckpoint — the compressed code table IS the artifact a
 # production pipeline writes to disk; both the checkpoint and the
 # narrow-scan shape are pinned. Codebook entries are deterministic
@@ -1225,11 +1221,11 @@ def emb_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the next greedy picks under the standard independent-batch
 # approximation; exact greedy iterates with the driver feeding each pick
 # back — the emb_kmeans_step contract). Scale shape: ONE narrow corpus
-# pass, K separate 64-term codegen'd distance chains (one 512-term
-# expression would blow janino), least() for the nearest-center fold, and
-# the global cut is a distributed TakeOrderedAndProject — the corpus-wide
-# sort never happens (pinned); the rank window runs AFTER the 16-row cut.
-# Engine parity: distances are identical left-to-right double chains in
+# pass, one squared-distance fold per center (`_sqdist_cols`), least()
+# for the nearest center, and the global cut is a distributed
+# TakeOrderedAndProject — the corpus-wide sort never happens (pinned);
+# the rank window runs AFTER the 16-row cut.
+# Engine parity: distances are identical left-to-right double sums in
 # both engines (the kmeans construction), ranking uses the RAW doubles
 # with vec_id as tie-break, rounding to 6dp is display-only.
 _KCENTER_TOPN = 16
@@ -1498,9 +1494,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_embedding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    # _corpus, not a transform() re-implementation: one higher-order
-    # function in this projection is CodegenFallback and knocks the
-    # corpus-wide norm loop out of whole-stage codegen (module header).
+    # _corpus: the audit profiles the very norm every cosine divides by.
     e = _corpus(spark, sf_dir).select("vec_id", "nrm")
     j = d.join(e, d.doc_id == e.vec_id, "left").select(
         "lang", F.col("nrm").alias("yy")

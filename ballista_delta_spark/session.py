@@ -481,7 +481,7 @@ def build_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Whole-stage-codegen class cache (default 100 entries): this
         # engine's query surface compiles far more than 100 distinct
-        # codegen units (the unrolled 64-dim embedding chains alone are
+        # codegen units (the unrolled 64-dim pair-cosine chains alone are
         # hundreds of KB of generated Java per plan), so a session running
         # many queries thrashes the cache and re-pays janino compilation
         # + a cold JIT on every execution — measured 2-4 s spikes on the
