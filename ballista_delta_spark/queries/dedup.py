@@ -536,14 +536,15 @@ _PROBE_BITS = tuple(1 << k for k in range(_EMB_N_PLANES))
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import dot_expr
+    from .similarity import _fold, dot_expr
 
-    # The bucket is a per-vector fold (lsh_bucket_expr); the 100k+-pair
-    # cosine below is the unrolled pair-loop kernel (dot_expr).
+    # The norm and the bucket are per-vector folds (_fold, lsh_bucket_expr);
+    # the 100k+-pair cosine below is the unrolled pair-loop kernel
+    # (dot_expr).
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    e = e.withColumn("nrm", F.sqrt(F.expr(dot_expr("emb", "emb")))).withColumn(
+    e = e.withColumn("nrm", F.sqrt(F.expr(_fold("emb", "emb")))).withColumn(
         "bucket", F.expr(_EMB_BUCKET_SPARK)
     )
     probes = " , ".join(["bucket"] + [f"bucket ^ {b}" for b in _PROBE_BITS])
@@ -804,25 +805,23 @@ _SEM_TAU = 0.4
     """,
 )
 def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _ivf_centroids, dot_expr
+    from .similarity import (
+        _dots_arr,
+        _fold,
+        _ivf_centroids,
+        _sqdist_cols,
+        dot_expr,
+    )
 
     cents = _ivf_centroids(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    e = e.withColumn("nrm", F.sqrt(F.expr(dot_expr("emb", "emb"))))
-    # Literal-centroid squared-L2 assignment, one alias per centroid so
-    # each stays under janino's method limit (same pin as emb_kmeans_step).
-    dcols = []
-    for i, c in enumerate(cents):
-        terms = " + ".join(
-            f"(emb[{d}] - {c[d]!r}D) * (emb[{d}] - {c[d]!r}D)"
-            for d in range(len(c))
-        )
-        dcols.append(F.expr(terms).alias(f"__d{i}"))
-    arr = "array(" + ", ".join(f"__d{i}" for i in range(len(cents))) + ")"
+    e = e.withColumn("nrm", F.sqrt(F.expr(_fold("emb", "emb"))))
+    # Literal-centroid squared-L2 assignment, one fold per centroid.
+    arr = _dots_arr(len(cents))
     ec = (
-        e.select("vec_id", "emb", "nrm", *dcols)
+        e.select("vec_id", "emb", "nrm", *_sqdist_cols(cents))
         # first index of the min -> ties break to the lowest centroid id,
         # matching the oracle's (dist, cid) order
         .withColumn(
@@ -833,11 +832,10 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "emb", "nrm", "cluster_id")
         # Materialize the assignment ONCE (lazy — folds into this job):
-        # the self-join would otherwise recompute the 512-term distance
-        # chains on BOTH sides AND fuse them with the cosine into one
-        # whole-stage method, which blows janino's 64 KB processNext()
-        # limit and silently drops the join stage to interpreted
-        # evaluation (same pin as dedup_minhash_lsh's signature reuse).
+        # the self-join would otherwise recompute the K distance folds
+        # on BOTH sides AND fuse them with the 64-term cosine into one
+        # whole-stage method (same pin as dedup_minhash_lsh's signature
+        # reuse).
         .localCheckpoint(eager=False)
     )
     a, b = ec.alias("a"), ec.alias("b")

@@ -358,7 +358,7 @@ def _sqdist_cols(cents: list[list[float]]) -> list:
     """``__d0..__d{K-1}`` = squared L2 distance to each literal centroid,
     one ``_fold`` per centroid. ONE definition for every K-centroid
     consumer (kmeans step, outlier detect, k-center step, cluster
-    purity)."""
+    purity, semdedup)."""
     return [
         F.expr(_fold("emb", _lit_array(c), "(x - y) * (x - y)")).alias(f"__d{i}")
         for i, c in enumerate(cents)
@@ -1438,7 +1438,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label",
         F.col("embedding").cast("array<double>").alias("emb"),
-    ).withColumn("nrm", F.sqrt(F.expr(dot_expr("emb", "emb"))))
+    ).withColumn("nrm", F.sqrt(F.expr(_fold("emb", "emb"))))
     q = F.broadcast(e.filter(F.col("vec_id") < _N_QUERIES)).alias("q")
     c = e.alias("c")
     scored = q.join(

@@ -1,17 +1,22 @@
-"""SparkSession construction + SQL entry point with Delta DDL support.
+"""SparkSession construction + SQL entry point with Delta DDL and DML.
 
 Reference parity: ``custom_session_state`` (reference src/lib.rs:30-42) builds a
 session with information_schema, a custom object-store registry, and DELTA /
-DELTA_INSERT table factories. In Spark all of that is configuration plus a thin
-DDL interceptor:
+DELTA_INSERT table factories, and every statement goes through DataFusion's
+own parser. In Spark that is configuration plus a thin router, :func:`sql`:
 
 - information_schema      -> ``SHOW TABLES`` / ``spark.catalog`` (built in)
 - object store registry   -> Hadoop FS URIs (``file://``) + the pyarrow
   native S3 path (``register_s3_parquet``/``register_delta_s3``; the JVM
   ``s3a://`` route needs a real cluster's hadoop-aws jars — SURVEY §2.1 S6)
-- DELTA table factory     -> :func:`sql` intercepts
-  ``CREATE EXTERNAL TABLE ... STORED AS DELTA LOCATION ...`` (the reference's
-  DDL form, reference tests/local.rs:48) and registers a Delta-backed view.
+- DELTA table factory     -> ``CREATE EXTERNAL TABLE ... STORED AS DELTA
+  LOCATION ...`` (the reference's DDL form, reference tests/local.rs:48)
+  registers a Delta-backed view.
+- DELTA_INSERT and DML    -> DELETE, UPDATE, MERGE and INSERT on such a
+  view, and ``VERSION|TIMESTAMP AS OF`` anywhere in a query, are read from
+  Spark's own parse tree (``sqlParser().parsePlan``) and run by the Delta
+  engine. Regexes recognise only the Delta-only statements Spark's parser
+  does not know (OPTIMIZE, VACUUM, RESTORE, DESCRIBE HISTORY, ...).
 
 Scale notes: the session is tuned for local[N] testing but every knob is the
 one you would set on a 1000-executor cluster too — AQE (runtime replan, skew
@@ -21,11 +26,15 @@ Arrow on the Python boundary.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+
+# A table name in a Delta-only statement: `quoted` or dotted identifiers.
+_NAME = r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
 
 _DELTA_DDL = re.compile(
     r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
@@ -44,8 +53,7 @@ _DELTA_DDL = re.compile(
 #   [FORMAT_OPTIONS ('k' = 'v', ...)] [COPY_OPTIONS ('force' = 'true')]
 # — delta-spark's idempotent file-loading SQL.
 _DELTA_COPY_INTO = re.compile(
-    r"^\s*COPY\s+INTO\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*COPY\s+INTO\s+" + _NAME +
     r"\s+FROM\s+'(?P<src>[^']+)'"
     r"\s+FILEFORMAT\s*=\s*(?P<fmt>PARQUET|CSV|JSON)"
     r"(?:\s+FORMAT_OPTIONS\s*\(\s*(?P<fopts>(?:'[^']*'|[^)'])*?)\s*\))?"
@@ -59,53 +67,17 @@ def _parse_sql_options(raw: str | None) -> dict[str, str]:
     """``'k' = 'v', 'k2' = 'v2'`` option lists (FORMAT_OPTIONS /
     COPY_OPTIONS bodies)."""
     out: dict[str, str] = {}
-    for part in _split_top_level(raw or ""):
-        part = part.strip()
-        if not part:
-            continue
+    for part in filter(None, map(str.strip, _split_top_level(raw or ""))):
         mm = re.match(r"^'([^']+)'\s*=\s*'([^']*)'$", part)
         if not mm:
             raise ValueError(f"cannot parse option {part!r}")
         out[mm.group(1)] = mm.group(2)
     return out
 
-# INSERT INTO/OVERWRITE <name> [(col, ...)] <SELECT|VALUES|WITH|TABLE ...>
-# Name may be backquoted and/or qualified (catalog.db.table) — real users
-# write `INSERT INTO t VALUES (...)` constantly; the reference's factory
-# surface is shape-agnostic (src/lib.rs:140-174), so ours must be too.
-_DELTA_INSERT = re.compile(
-    r"^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
-    r"\s*(?:\((?P<cols>[^)]*)\)\s*)?"
-    # delta-spark: INSERT INTO t REPLACE WHERE <pred> SELECT ... — the
-    # predicate-overwrite form (routed to replace_where_delta).
-    r"(?:REPLACE\s+WHERE\s+(?P<rwpred>.+?)\s+"
-    r"(?=SELECT\b|VALUES\b|WITH\b|TABLE\b))?"
-    r"(?P<body>(?:SELECT|VALUES|WITH|TABLE)\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-# DELETE FROM <name> [WHERE cond] — no WHERE deletes every row (SQL).
-_DELTA_DELETE = re.compile(
-    r"^\s*DELETE\s+FROM\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
-    r"\s*(?:WHERE\s+(?P<cond>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-# UPDATE <name> SET col = expr[, ...] [WHERE cond]
-_DELTA_UPDATE = re.compile(
-    r"^\s*UPDATE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
-    r"\s+SET\s+(?P<sets>.+?)(?:\s+WHERE\s+(?P<cond>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
 # VACUUM <name> [RETAIN n HOURS] / OPTIMIZE <name> — delta-spark's
 # maintenance SQL, routed to the table-maintenance functions.
 _DELTA_VACUUM = re.compile(
-    r"^\s*VACUUM\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*VACUUM\s+" + _NAME +
     r"(?:\s+RETAIN\s+(?P<hours>\d+)\s+HOURS?)?"
     r"(?:\s+(?P<dry>DRY\s+RUN))?\s*;?\s*$",
     re.IGNORECASE,
@@ -115,15 +87,13 @@ _DELTA_VACUUM = re.compile(
 # (key, value) rows, plus the delta.minReader/WriterVersion protocol rows
 # delta-spark always includes.
 _DELTA_SHOW_PROPS = re.compile(
-    r"^\s*SHOW\s+TBLPROPERTIES\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*SHOW\s+TBLPROPERTIES\s+" + _NAME +
     r"(?:\s*\(\s*'(?P<key>[^']+)'\s*\))?"
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
 _DELTA_OPTIMIZE = re.compile(
-    r"^\s*OPTIMIZE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*OPTIMIZE\s+" + _NAME +
     r"(?:\s+(?P<full>FULL))?"
     r"(?:\s+WHERE\s+(?P<where>.+?))?"
     r"(?:\s+ZORDER\s+BY\s*\(\s*(?P<zcols>[^)]+)\s*\))?"
@@ -136,8 +106,7 @@ _DELTA_OPTIMIZE = re.compile(
 # the column fill it with the expression) and the typeWidening feature
 # (metadata-only lossless retype; narrow files read widened).
 _DELTA_COLUMN_DEFAULT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ALTER\s+TABLE\s+" + _NAME +
     r"\s+ALTER\s+COLUMN\s+(?P<col>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
     r"\s+(?:SET\s+DEFAULT\s+(?P<expr>.+?)|(?P<drop>DROP\s+DEFAULT)"
     r"|TYPE\s+(?P<newtype>.+?))"
@@ -148,8 +117,7 @@ _DELTA_COLUMN_DEFAULT = re.compile(
 # ALTER TABLE <name> CLUSTER BY (a, b) / CLUSTER BY NONE — liquid
 # clustering metadata; plain OPTIMIZE then clusters on the declared set.
 _DELTA_CLUSTER_BY = re.compile(
-    r"^\s*ALTER\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ALTER\s+TABLE\s+" + _NAME +
     r"\s+CLUSTER\s+BY\s*(?:\(\s*(?P<cols>[^)]+?)\s*\)|(?P<none>NONE))"
     r"\s*;?\s*$",
     re.IGNORECASE,
@@ -158,8 +126,7 @@ _DELTA_CLUSTER_BY = re.compile(
 # ALTER TABLE <name> DROP FEATURE <f> [TRUNCATE HISTORY] — protocol
 # downgrade once no trace of the feature remains (delta-spark parity).
 _DELTA_DROP_FEATURE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ALTER\s+TABLE\s+" + _NAME +
     r"\s+DROP\s+FEATURE\s+(?P<feature>`[^`]+`|[A-Za-z][A-Za-z0-9]*)"
     r"(?:\s+(?P<trunc>TRUNCATE\s+HISTORY))?"
     r"\s*;?\s*$",
@@ -177,8 +144,7 @@ _DELTA_CONVERT = re.compile(
 
 # FSCK REPAIR TABLE <name> [DRY RUN] — drop references to missing files.
 _DELTA_FSCK = re.compile(
-    r"^\s*FSCK\s+REPAIR\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*FSCK\s+REPAIR\s+TABLE\s+" + _NAME +
     r"(?:\s+(?P<dry>DRY\s+RUN))?"
     r"\s*;?\s*$",
     re.IGNORECASE,
@@ -189,8 +155,7 @@ _DELTA_FSCK = re.compile(
 # APPLY (COMPACT DELETION VECTORS) is the metadata-only sibling: re-pack
 # the active DVs of many point-DML commits into one bin, data untouched.
 _DELTA_REORG = re.compile(
-    r"^\s*REORG\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*REORG\s+TABLE\s+" + _NAME +
     r"\s+APPLY\s*\(\s*(?P<reorg_op>PURGE|COMPACT\s+DELETION\s+VECTORS)\s*\)"
     r"\s*;?\s*$",
     re.IGNORECASE,
@@ -199,8 +164,7 @@ _DELTA_REORG = re.compile(
 # ANALYZE TABLE <name> COMPUTE DELTA STATISTICS [FOR COLUMNS (c1, c2)] —
 # delta-spark's stats recompute (metadata-only, footer reads + one commit).
 _DELTA_ANALYZE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ANALYZE\s+TABLE\s+" + _NAME +
     r"\s+COMPUTE\s+DELTA\s+STATISTICS"
     r"(?:\s+FOR\s+COLUMNS\s*\(\s*(?P<cols>[^)]+)\s*\))?"
     r"\s*;?\s*$",
@@ -210,8 +174,7 @@ _DELTA_ANALYZE = re.compile(
 # ALTER TABLE <name> ADD CONSTRAINT <c> CHECK (<expr>) / DROP CONSTRAINT <c>
 # — delta-spark constraint DDL, routed to alter_constraints.
 _DELTA_ALTER_CONSTRAINT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ALTER\s+TABLE\s+" + _NAME +
     r"\s+(?P<op>ADD|DROP)\s+CONSTRAINT\s+(?P<cname>[A-Za-z_][A-Za-z0-9_]*)"
     r"(?:\s+CHECK\s*\((?P<expr>.+)\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -222,8 +185,7 @@ _DELTA_ALTER_CONSTRAINT = re.compile(
 # enableChangeDataFeed / enableInCommitTimestamps, routed to
 # alter_properties.
 _DELTA_TBLPROPS = re.compile(
-    r"^\s*ALTER\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ALTER\s+TABLE\s+" + _NAME +
     r"\s+(?P<op>SET|UNSET)\s+TBLPROPERTIES\s*\(\s*(?P<body>.+?)\s*\)"
     r"\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -234,8 +196,7 @@ _DELTA_TBLPROPS = re.compile(
 # to alter_columns (rename/drop auto-upgrade the table to
 # columnMapping=name, delta-spark parity; pure ADD stays plain).
 _DELTA_ALTER_COLUMN = re.compile(
-    r"^\s*ALTER\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*ALTER\s+TABLE\s+" + _NAME +
     r"\s+(?:RENAME\s+COLUMN\s+(?P<old>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
     r"\s+TO\s+(?P<new>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
     r"|DROP\s+COLUMNS?\s*\(?\s*(?P<dropcols>[^)]+?)\s*\)?"
@@ -261,8 +222,7 @@ _DELTA_CLONE = re.compile(
 
 # RESTORE [TABLE] <name> TO VERSION AS OF <n> — delta-spark rollback SQL.
 _DELTA_RESTORE = re.compile(
-    r"^\s*RESTORE\s+(?:TABLE\s+)?"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*RESTORE\s+(?:TABLE\s+)?" + _NAME +
     r"\s+TO\s+(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
     r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')\s*;?\s*$",
     re.IGNORECASE,
@@ -270,16 +230,14 @@ _DELTA_RESTORE = re.compile(
 
 # DESCRIBE HISTORY <name> — commitInfo per version.
 _DELTA_HISTORY = re.compile(
-    r"^\s*DESCRIBE\s+HISTORY\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*DESCRIBE\s+HISTORY\s+" + _NAME +
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
 
 # DESCRIBE DETAIL <name> — one row of table-level metadata.
 _DELTA_DETAIL = re.compile(
-    r"^\s*DESCRIBE\s+DETAIL\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*DESCRIBE\s+DETAIL\s+" + _NAME +
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -287,60 +245,10 @@ _DELTA_DETAIL = re.compile(
 # GENERATE symlink_format_manifest FOR TABLE <name> — delta-spark's
 # Presto/Trino compatibility export.
 _DELTA_GENERATE = re.compile(
-    r"^\s*GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
+    r"^\s*GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+" + _NAME +
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
-
-# <view> VERSION AS OF n / TIMESTAMP AS OF 'ts' inside any SELECT —
-# delta-spark's time-travel SQL. Rewritten to a snapshot temp view before
-# Spark parses the statement.
-_DELTA_ASOF_REF = re.compile(
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)\s+"
-    r"(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
-    r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')",
-    re.IGNORECASE,
-)
-
-
-def _rewrite_time_travel(spark: SparkSession, statement: str) -> str:
-    """Replace ``view VERSION|TIMESTAMP AS OF x`` references to registered
-    Delta views with temp views pinned to that snapshot.
-
-    Matches run against the literal-masked statement so a string like
-    'orders VERSION AS OF 2' inside a predicate is DATA, not syntax —
-    rewriting it would silently corrupt the comparison (and read a table
-    version as a side effect). Replacement values (the timestamp) are
-    sliced from the original by span."""
-    from .sources.delta import read_delta
-
-    masked = _mask_literals(statement)
-
-    def sub(m: re.Match) -> str:
-        name = _resolve_view(m.group("name"), spark)
-        if name is None:
-            return statement[m.start():m.end()]  # leave untouched
-        loc = _delta_views[name]
-        if m.group("v") is not None:
-            version = int(m.group("v"))
-            snap_name = f"{name}__asof_v{version}"
-            df = read_delta(spark, loc, version=version)
-        else:
-            ts_ms = _ts_to_epoch_ms(_g(statement, m, "ts"))
-            snap_name = f"{name}__asof_t{ts_ms}"
-            df = read_delta(spark, loc, timestamp_ms=ts_ms)
-        df.createOrReplaceTempView(snap_name)
-        return snap_name
-
-    # match on the mask, splice replacements into the original by span
-    out, last = [], 0
-    for m in _DELTA_ASOF_REF.finditer(masked):
-        out.append(statement[last:m.start()])
-        out.append(sub(m))
-        last = m.end()
-    out.append(statement[last:])
-    return "".join(out)
 
 class _CaseFoldedViews(dict):
     """Routing map keyed like Spark's temp-view catalog: view names are
@@ -401,17 +309,25 @@ _delta_views: dict[str, str] = _CaseFoldedViews()
 
 
 def _ts_to_epoch_ms(raw: str) -> int:
-    """SQL timestamp literal -> epoch millis (UTC when zone-less). The
-    one normalization every TIMESTAMP AS OF / RESTORE site shares: a 'T'
-    or space separator and a trailing 'Z' both parse on every supported
-    Python."""
-    from datetime import datetime, timezone
+    """SQL timestamp literal -> epoch millis. The one normalization every
+    TIMESTAMP AS OF / RESTORE site shares: a zone-less literal is
+    wall-clock time in ``spark.sql.session.timeZone``, as Spark reads it,
+    and one with an offset or a trailing 'Z' is that instant."""
+    from datetime import datetime
+
+    from .sources.delta import _session_zone
 
     dt = datetime.fromisoformat(
         raw.strip().replace("T", " ").replace("Z", "+00:00")
     )
     if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
+        zone = _session_zone()
+        if zone is None:
+            raise ValueError(
+                f"cannot read {raw!r} in the session time zone; "
+                "give the timestamp an offset"
+            )
+        dt = dt.replace(tzinfo=zone)
     return int(dt.timestamp() * 1000)
 
 
@@ -652,23 +568,30 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
     there; here we intercept the same statement shape and register a temp view
     backed by our Delta reader, then hand everything else to Spark SQL.
 
-    Matching discipline: every dialect regex runs against the
-    literal-MASKED statement (`_mask_literals`), so SQL keywords inside
-    string literals can never mis-route or mis-split a statement; groups
-    that may contain literals are sliced back out of the original by
-    span (`_g`).
+    Matching discipline: DELETE, UPDATE, MERGE, INSERT and
+    ``VERSION|TIMESTAMP AS OF`` are read from Spark's own parse tree
+    (`_routed`), never from the text: conditions and values are sliced
+    from the statement by each expression's parser origin. Regexes handle
+    only the Delta-only statements Spark cannot parse (OPTIMIZE, VACUUM,
+    RESTORE, DESCRIBE HISTORY/DETAIL, CONVERT, FSCK, REORG, GENERATE, COPY
+    INTO, ANALYZE … DELTA STATISTICS, CLONE, CREATE … STORED AS DELTA and
+    the ALTER/SHOW TBLPROPERTIES family). They run first, anchored, on the
+    literal-MASKED statement (`_mask_literals`), so keywords inside string
+    literals or comments never route a statement; groups that may hold
+    literals are sliced back out of the original by span (`_g`). Only a
+    statement opening with a DML keyword (or with WITH and holding an
+    INSERT), or whose masked text holds the keyword OF, pays the parse;
+    any other SELECT goes straight to ``spark.sql``.
     """
     statement = _strip_leading_comments(statement)
     masked = _mask_literals(statement)
     m = _DELTA_DDL.match(masked)
     if m:
-        import os as _os
-
         from .sources.delta import _strip_file_scheme, read_delta, write_delta
 
         name, body = m.group("name"), _g(statement, m, "body")
         loc = _strip_file_scheme(_g(statement, m, "loc"))
-        exists = _os.path.exists(_os.path.join(loc, "_delta_log"))
+        exists = os.path.exists(os.path.join(loc, "_delta_log"))
         if body is not None:
             # CTAS: materialize the query into a NEW Delta table. An
             # existing table refuses (IF NOT EXISTS skips the write and
@@ -698,9 +621,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from pyspark.sql import Row
-
-            from .sources.delta import copy_into, read_delta
+            from .sources.delta import copy_into
 
             copts = _parse_sql_options(_g(statement, m, "copts"))
             metrics = copy_into(
@@ -709,55 +630,12 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 format_options=_parse_sql_options(_g(statement, m, "fopts")),
                 force=str(copts.get("force", "false")).lower() == "true",
             )
-            read_delta(spark, _delta_views[name]).createOrReplaceTempView(
-                name
-            )
-            return spark.createDataFrame([Row(**metrics)])
-
-    m = _DELTA_INSERT.match(masked)
-    if m:
-        name = _resolve_view(m.group("name"), spark)
-        if name is not None:
-            return _delta_insert(
-                spark, name, m.group("cols"), _g(statement, m, "body"),
-                overwrite=m.group("mode").upper() == "OVERWRITE",
-                replace_where=_g(statement, m, "rwpred"),
-            )
-
-    m = _DELTA_DELETE.match(masked)
-    if m:
-        name = _resolve_view(m.group("name"), spark)
-        if name is not None:
-            return _delta_dml(
-                spark, name, "delete",
-                cond=_g(statement, m, "cond") or "true",
-            )
-
-    m = _DELTA_UPDATE.match(masked)
-    if m:
-        name = _resolve_view(m.group("name"), spark)
-        if name is not None:
-            sets_txt, cond_txt = _split_update_tail(
-                statement, masked, m.start("sets")
-            )
-            return _delta_dml(
-                spark, name, "update",
-                cond=cond_txt or "true",
-                sets=sets_txt,
-            )
-
-    m = _DELTA_MERGE_HEAD.match(masked)
-    if m:
-        name = _resolve_view(m.group("name"), spark)
-        if name is not None:
-            return _sql_merge(spark, statement, name, statement[m.end():])
+            return _committed(spark, name, **metrics)
 
     m = _DELTA_SHOW_PROPS.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from pyspark.sql import Row
-
             from .sources.delta import _load_snapshot
 
             snap = _load_snapshot(_delta_views[name])
@@ -766,16 +644,10 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             props["delta.minReaderVersion"] = str(snap.min_reader_version)
             props["delta.minWriterVersion"] = str(snap.min_writer_version)
             key = _g(statement, m, "key")
-            if key is not None:
-                val = props.get(key)
-                if val is None:
-                    return spark.createDataFrame(
-                        [], "key string, value string"
-                    )
-                return spark.createDataFrame([Row(key=key, value=val)])
-            return spark.createDataFrame(
-                [Row(key=k, value=v) for k, v in sorted(props.items())]
+            rows = sorted(props.items()) if key is None else (
+                [(key, props[key])] if key in props else []
             )
+            return spark.createDataFrame(rows, "key string, value string")
 
     m = _DELTA_VACUUM.match(masked)
     if m:
@@ -794,8 +666,6 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 would = vacuum(
                     _delta_views[name], dry_run=True, spark=spark, **kwargs
                 )
-                if not would:
-                    return spark.createDataFrame([], "path string")
                 return spark.createDataFrame(
                     [(p,) for p in would], "path string"
                 )
@@ -808,7 +678,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import optimize, read_delta
+            from .sources.delta import optimize
 
             loc = _delta_views[name]
             zcols = [
@@ -820,16 +690,13 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 where=_g(statement, m, "where"),
                 full=bool(m.group("full")),
             )
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_CLUSTER_BY.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import cluster_by, read_delta
+            from .sources.delta import cluster_by
 
             loc = _delta_views[name]
             cols = None if m.group("none") else [
@@ -837,16 +704,13 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 for c in m.group("cols").split(",") if c.strip()
             ]
             version = cluster_by(loc, cols)
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_DROP_FEATURE.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import drop_feature, read_delta
+            from .sources.delta import drop_feature
 
             loc = _delta_views[name]
             version = drop_feature(
@@ -854,20 +718,13 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 m.group("feature").strip("`"),
                 truncate_history=bool(m.group("trunc")),
             )
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_COLUMN_DEFAULT.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import (
-                alter_column_default,
-                alter_column_type,
-                read_delta,
-            )
+            from .sources.delta import alter_column_default, alter_column_type
 
             loc = _delta_views[name]
             if m.group("newtype"):
@@ -880,10 +737,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                     m.group("col").strip("`"),
                     None if m.group("drop") else _g(statement, m, "expr"),
                 )
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_CONVERT.match(masked)
     if m:
@@ -899,22 +753,21 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import fsck_repair, read_delta
+            from .sources.delta import fsck_repair
 
             loc = _delta_views[name]
             res = fsck_repair(loc, dry_run=bool(m.group("dry")), spark=spark)
-            if not m.group("dry"):
-                read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({res['version']} AS BIGINT) AS committed_version, "
-                f"CAST({res['numMissingFiles']} AS BIGINT) AS files_removed"
-            )
+            row = dict(committed_version=res["version"],
+                       files_removed=res["numMissingFiles"])
+            if m.group("dry"):  # nothing committed: the view stays put
+                return spark.createDataFrame([Row(**row)])
+            return _committed(spark, name, **row)
 
     m = _DELTA_ANALYZE.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import read_delta, recompute_stats
+            from .sources.delta import recompute_stats
 
             loc = _delta_views[name]
             cols = m.group("cols")
@@ -925,21 +778,16 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 else None,
                 spark=spark,
             )
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({res['version']} AS BIGINT) AS committed_version, "
-                f"CAST({res['numFilesRecomputed']} AS BIGINT) AS files_recomputed"
+            return _committed(
+                spark, name, committed_version=res["version"],
+                files_recomputed=res["numFilesRecomputed"],
             )
 
     m = _DELTA_REORG.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import (
-                compact_deletion_vectors,
-                read_delta,
-                reorg_purge,
-            )
+            from .sources.delta import compact_deletion_vectors, reorg_purge
 
             loc = _delta_views[name]
             if m.group("reorg_op").upper() == "PURGE":
@@ -948,17 +796,16 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             else:
                 metrics = compact_deletion_vectors(loc)
                 rewritten = metrics["numFilesRepointed"]
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({metrics['version']} AS BIGINT) AS committed_version, "
-                f"CAST({rewritten} AS BIGINT) AS files_rewritten"
+            return _committed(
+                spark, name, committed_version=metrics["version"],
+                files_rewritten=rewritten,
             )
 
     m = _DELTA_TBLPROPS.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import alter_properties, read_delta
+            from .sources.delta import alter_properties
 
             loc = _delta_views[name]
             body = _g(statement, m, "body")
@@ -978,16 +825,13 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                     for p in _split_top_level(body) if p.strip()
                 ]
                 version = alter_properties(spark, loc, unset_keys=keys)
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_ALTER_CONSTRAINT.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import alter_constraints, read_delta
+            from .sources.delta import alter_constraints
 
             loc = _delta_views[name]
             if m.group("op").upper() == "ADD":
@@ -1003,14 +847,11 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 version = alter_constraints(
                     spark, loc, drop=[m.group("cname")]
                 )
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_CLONE.match(masked)
     if m:
-        from .sources.delta import clone_delta, read_delta
+        from .sources.delta import clone_delta
 
         raw_src = _g(statement, m, "src")
         if raw_src.startswith("'"):
@@ -1029,15 +870,14 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             spark=spark,
         )
         name = m.group("name").strip("`")
-        read_delta(spark, dst).createOrReplaceTempView(name)
         _delta_views[name] = dst
-        return spark.sql("SELECT CAST(0 AS BIGINT) AS committed_version")
+        return _committed(spark, name, committed_version=0)
 
     m = _DELTA_ALTER_COLUMN.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from .sources.delta import alter_columns, read_delta
+            from .sources.delta import alter_columns
 
             loc = _delta_views[name]
             if m.group("old"):
@@ -1060,10 +900,8 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 addcols = _g(statement, m, "addcols").strip()
                 if addcols.startswith("(") and addcols.endswith(")"):
                     addcols = addcols[1:-1]
-                # split on commas outside BOTH parens and angle brackets
-                # so decimal(10,2) AND map<string,int>/struct<a:int,b:int>
-                # survive
-                for spec in _split_commas_outside_brackets(addcols):
+                # decimal(10,2) and map<string,int> survive the split
+                for spec in filter(str.strip, _split_top_level(addcols)):
                     parts = spec.strip().split(None, 1)
                     if len(parts) != 2:
                         raise ValueError(
@@ -1071,18 +909,13 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                         )
                     adds[parts[0].strip("`")] = parts[1]
                 version = alter_columns(loc, adds=adds)
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.sql(
-                f"SELECT CAST({version} AS BIGINT) AS committed_version"
-            )
+            return _committed(spark, name, committed_version=version)
 
     m = _DELTA_RESTORE.match(masked)
     if m:
         name = _resolve_view(m.group("name"), spark)
         if name is not None:
-            from pyspark.sql import Row
-
-            from .sources.delta import read_delta, restore_delta
+            from .sources.delta import restore_delta
 
             loc = _delta_views[name]
             if m.group("v") is not None:
@@ -1093,9 +926,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 target = version_at_timestamp(
                     loc, _ts_to_epoch_ms(_g(statement, m, "ts"))
                 )
-            metrics = restore_delta(loc, target)
-            read_delta(spark, loc).createOrReplaceTempView(name)
-            return spark.createDataFrame([Row(**metrics)])
+            return _committed(spark, name, **restore_delta(loc, target))
 
     m = _DELTA_DETAIL.match(masked)
     if m:
@@ -1112,8 +943,6 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             from .sources.delta import generate_symlink_manifest
 
             written = generate_symlink_manifest(_delta_views[name])
-            if not written:
-                return spark.createDataFrame([], "manifest string")
             return spark.createDataFrame(
                 [(p,) for p in written], "manifest string"
             )
@@ -1140,8 +969,9 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 "version bigint, timestamp bigint, operation string, "
                 "operationParameters string, operationMetrics string",
             )
-    if _DELTA_ASOF_REF.search(masked):
-        statement = _rewrite_time_travel(spark, statement)
+    time_travel = _OF.search(masked) is not None
+    if time_travel or _PARSED_FIRST.match(masked):
+        return _routed(spark, statement, time_travel)
     return spark.sql(statement)
 
 
@@ -1173,8 +1003,344 @@ def _resolve_view(raw: str, spark: SparkSession | None = None) -> str | None:
     return tail
 
 
+# The statements the router hands to Spark's parser: those whose first
+# keyword is a DML verb (or WITH, when the statement holds an INSERT it
+# may head), and those whose literal-masked text holds the keyword OF,
+# which every time-travel clause has. Every other statement goes to
+# spark.sql with no extra parse.
+_PARSED_FIRST = re.compile(
+    r"\s*(?:DELETE|UPDATE|MERGE|INSERT|WITH\b.*\bINSERT)\b", re.I | re.S
+)
+_OF = re.compile(r"\bOF\b", re.IGNORECASE)
+
+
+def _parse_plan(spark: SparkSession, statement: str):
+    """The session parser's unresolved Java ``LogicalPlan``; text it cannot
+    parse raises ``ParseException``, as ``spark.sql`` would."""
+    return spark._jsparkSession.sessionState().sqlParser().parsePlan(statement)
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _parts(jseq) -> list[str]:
+    """A Scala ``Seq[String]`` (name parts, a column list) in one call."""
+    joined = jseq.mkString("\x00")
+    return joined.split("\x00") if joined else []
+
+
+def _quoted(parts: list[str]) -> str:
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def _is_bool_literal(expr) -> bool:
+    return expr.nodeName() == "Literal" and expr.dataType().typeName() == "boolean"
+
+
+def _span(node) -> tuple[int, int]:
+    """``node``'s ``[start, end)`` in the parsed text (its parser origin)."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get() + 1
+
+
+class _Spliced:
+    """The parsed statement plus span replacements (a pinned snapshot view
+    for a time-travel reference, a requalified column); every slice taken
+    from it carries the replacements that fall inside the slice."""
+
+    def __init__(self, statement: str):
+        self.statement = statement
+        self.subs: list[tuple[int, int, str]] = []
+
+    @functools.cached_property
+    def masked(self) -> str:
+        return _mask_literals(self.statement)
+
+    def slice(self, start: int, end: int) -> str:
+        out, at = [], start
+        for s, e, rep in sorted(self.subs):
+            if start <= s and e <= end:
+                out += [self.statement[at:s], rep]
+                at = e
+        out.append(self.statement[at:end])
+        return "".join(out)
+
+    def of(self, expr) -> str:
+        """An expression's text as written. Two kinds of node carry no
+        origin of their own: EXISTS keeps its enclosing rule's, and the
+        parser hands out one shared TRUE and one shared FALSE literal whose
+        origin is wherever they were first built."""
+        if expr.nodeName() == "Exists":
+            return "EXISTS (" + self.slice(*_span(expr.plan())) + ")"
+        if _is_bool_literal(expr):
+            return expr.sql()
+        return self.slice(*self._extent(expr))
+
+    def _extent(self, expr) -> tuple[int, int]:
+        """``expr``'s ``[start, end)``. A predicate (IN, LIKE, BETWEEN, IS
+        NULL, ...) has the origin of the rule after its left operand, so a
+        node starts no later than its first child. A parenthesized operand
+        has the origin of what is inside the parentheses, so the start
+        then moves back over each '(' the slice leaves unmatched."""
+        start, end = _span(expr)
+        kids = _seq(expr.children())
+        if kids and not _is_bool_literal(kids[0]):
+            first = self._extent(kids[0])[0]
+            if first < start:
+                start = first
+                body = self.masked[start:end]
+                for _ in range(body.count(")") - body.count("(")):
+                    start = self.masked.rindex("(", 0, start)
+        return start, end
+
+    def requalify(self, exprs, prefixes: dict[str, str]) -> None:
+        """Replace every column reference in ``exprs`` whose qualifier is a
+        key of ``prefixes`` (lower-cased: SQL names are case-insensitive)
+        by the mapped prefix and the rest of its name ('' drops the
+        qualifier). One-part names are columns, never qualifiers."""
+        for expr in exprs:
+            for leaf in _seq(expr.collectLeaves()):
+                if leaf.nodeName() != "UnresolvedAttribute":
+                    continue
+                parts = _parts(leaf.nameParts())
+                new = prefixes.get(parts[0].lower())
+                if len(parts) > 1 and new is not None:
+                    self.subs.append((*_span(leaf), new + _quoted(parts[1:])))
+
+
+def _relation(node) -> tuple[list[str], str] | None:
+    """A DML target or MERGE source: (name parts, qualifier), where the
+    qualifier is its alias, else the last part of its name. None when
+    ``node`` is not a plain (optionally aliased) table name."""
+    alias = None
+    if node.nodeName() == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    if node.nodeName() != "UnresolvedRelation":
+        return None
+    parts = _parts(node.multipartIdentifier())
+    return parts, alias or parts[-1]
+
+
+# Commands that keep their query in a field outside the tree's children.
+_WRAPPED_QUERY = {"ExplainCommand": "logicalPlan", "DescribeQueryCommand": "plan"}
+
+
+def _pin_time_travel(spark: SparkSession, plan, text: _Spliced) -> None:
+    """Point every ``<view> VERSION|TIMESTAMP AS OF x`` on a registered
+    Delta view, anywhere in ``plan`` (CTE bodies and subqueries too), at a
+    temp view pinned to that snapshot; anything else is left for Spark."""
+    from .sources.delta import read_delta
+
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        stack += _seq(node.children()) + _seq(node.innerChildren())
+        kind = node.nodeName()
+        if kind in _WRAPPED_QUERY:
+            stack.append(getattr(node, _WRAPPED_QUERY[kind])())
+        if kind != "RelationTimeTravel":
+            continue
+        rel = node.relation()
+        target = _relation(rel)
+        name = target and _resolve_view(".".join(target[0]), spark)
+        if name is None:
+            continue
+        loc = _delta_views[name]
+        if node.version().isDefined():
+            version = int(node.version().get())
+            snap_name = f"{name}__asof_v{version}"
+            df = read_delta(spark, loc, version=version)
+        else:
+            ts = node.timestamp().get()
+            if not (ts.nodeName() == "Literal"
+                    and ts.dataType().typeName() == "string"):
+                raise ValueError(f"TIMESTAMP AS OF takes a string, got {ts}")
+            ts_ms = _ts_to_epoch_ms(ts.value().toString())
+            snap_name = f"{name}__asof_t{ts_ms}"
+            df = read_delta(spark, loc, timestamp_ms=ts_ms)
+        df.createOrReplaceTempView(snap_name)
+        text.subs.append((_span(rel)[0], _span(node)[1], snap_name))
+
+
+def _routed(spark: SparkSession, statement: str, time_travel: bool):
+    """Run ``statement`` from Spark's parse tree: DML on a registered
+    Delta view goes to its ``_ROUTES`` entry, anything else (time travel
+    pinned when ``time_travel``) to ``spark.sql``."""
+    if "${" in statement:  # origins index the text after substitution
+        sub = spark._jvm.org.apache.spark.sql.internal.VariableSubstitution()
+        statement = sub.substitute(statement)
+    plan = _parse_plan(spark, statement)
+    text = _Spliced(statement)
+    if time_travel:
+        _pin_time_travel(spark, plan, text)
+    cte = ""
+    if plan.nodeName() == "UnresolvedWith" and plan.child().nodeName() in (
+        "InsertIntoStatement", "OverwriteByExpression"
+    ):
+        cte = text.slice(_span(plan)[0], _span(plan.child())[0])
+        plan = plan.child()
+    route = _ROUTES.get(plan.nodeName())
+    if route is not None:
+        target = _relation(
+            plan.targetTable() if route is _merge else plan.table()
+        )
+        name = target and _resolve_view(".".join(target[0]), spark)
+        if name is not None:
+            return route(spark, name, target[1], plan, text, cte)
+    return spark.sql(text.slice(0, len(statement)))
+
+
+def _committed(spark: SparkSession, name: str, **row) -> DataFrame:
+    """Point view ``name`` at its table's new snapshot; ``row`` (the
+    operation's metrics, or its committed version) as a one-row frame.
+    An all-integer row is a SELECT of BIGINT literals: 4-5 ms on a 4-core
+    host, where ``createDataFrame`` of one Row takes 12-19 ms."""
+    from .sources.delta import read_delta
+
+    read_delta(spark, _delta_views[name]).createOrReplaceTempView(name)
+    if all(type(v) is int for v in row.values()):
+        return spark.sql("SELECT " + ", ".join(
+            f"CAST({v} AS BIGINT) AS `{k}`" for k, v in row.items()
+        ))
+    return spark.createDataFrame([Row(**row)])
+
+
+def _column(attr, qualifier: str) -> str:
+    """An assignment target's column name, its qualifier dropped."""
+    parts = _parts(attr.nameParts())
+    if len(parts) > 1 and parts[0].lower() == qualifier.lower():
+        parts = parts[1:]
+    return ".".join(parts)
+
+
+def _delete(spark, name, qualifier, plan, text, _cte) -> DataFrame:
+    from .sources.delta_dml import delete_delta
+
+    cond = plan.condition()  # the literal TRUE without a WHERE
+    text.requalify([cond], {qualifier.lower(): ""})
+    return _committed(
+        spark, name, **delete_delta(spark, _delta_views[name], text.of(cond))
+    )
+
+
+def _update_args(qualifier: str, plan, text: _Spliced):
+    """UPDATE's (condition, {column: value}) text, columns unqualified."""
+    assigns = _seq(plan.assignments())
+    cond = plan.condition()
+    cond = cond.get() if cond.isDefined() else None
+    exprs = [a.value() for a in assigns] + ([cond] if cond else [])
+    text.requalify(exprs, {qualifier.lower(): ""})
+    sets = {_column(a.key(), qualifier): text.of(a.value()) for a in assigns}
+    return ("true" if cond is None else text.of(cond)), sets
+
+
+def _update(spark, name, qualifier, plan, text, _cte) -> DataFrame:
+    from .sources.delta_dml import update_delta
+
+    cond, sets = _update_args(qualifier, plan, text)
+    return _committed(
+        spark, name, **update_delta(spark, _delta_views[name], cond, sets)
+    )
+
+
+def _merge(spark, name, talias, plan, text, _cte) -> DataFrame:
+    """MERGE INTO onto merge_delta, clauses in statement order. The target
+    and source qualifiers become merge_delta's fixed ``t`` and ``s`` (an
+    alias-less table's name is its qualifier)."""
+    from .sources.delta_dml import merge_delta
+
+    src = _relation(plan.sourceTable())
+    if src is not None:
+        source, salias = spark.table(_quoted(src[0])), src[1]
+    else:  # a subquery, its alias (if any) on a SubqueryAlias above it
+        node, salias = plan.sourceTable(), None
+        if node.nodeName() == "SubqueryAlias":
+            node, salias = node.child(), node.alias()
+        source = spark.sql(text.slice(*_span(node)))
+    lists = [_seq(getattr(plan, f)()) for f in (
+        "matchedActions", "notMatchedActions", "notMatchedBySourceActions"
+    )]
+    exprs = [plan.mergeCondition()]
+    for action in (a for lst in lists for a in lst):
+        if action.condition().isDefined():
+            exprs.append(action.condition().get())
+        if action.nodeName() in ("UpdateAction", "InsertAction"):
+            exprs += [x.value() for x in _seq(action.assignments())]
+    prefixes = {talias.lower(): "t."}
+    if salias:
+        prefixes[salias.lower()] = "s."
+    text.requalify(exprs, prefixes)
+
+    def clause(action):
+        kind = action.nodeName()
+        cond = action.condition()
+        cond = text.of(cond.get()) if cond.isDefined() else None
+        if kind == "DeleteAction":
+            return cond, "delete", None
+        if kind == "UpdateStarAction":
+            # UPDATE SET * (delta-spark): every SOURCE column to the
+            # same-named target column.
+            return cond, "update", {
+                c: "s." + _quoted([c]) for c in source.columns
+            }
+        if kind == "InsertStarAction":
+            return cond, True
+        sets = {
+            _column(x.key(), talias): text.of(x.value())
+            for x in _seq(action.assignments())
+        }
+        if kind == "UpdateAction":
+            return cond, "update", sets
+        if kind == "InsertAction":
+            return cond, sets
+        raise ValueError(f"unsupported MERGE clause: {kind}")
+
+    matched, not_matched, by_source = (
+        [clause(a) for a in lst] for lst in lists
+    )
+    return _committed(spark, name, **merge_delta(
+        spark, _delta_views[name], source, text.of(plan.mergeCondition()),
+        matched_clauses=matched,
+        not_matched_clauses=not_matched,
+        not_matched_by_source_clauses=by_source,
+        schema_evolution=plan.withSchemaEvolution(),
+    ))
+
+
+def _insert(spark, name, _qualifier, plan, text, cte) -> DataFrame:
+    """INSERT INTO / OVERWRITE [(cols)] and INSERT INTO … REPLACE WHERE.
+    The query is everything after the INSERT head's span, behind the
+    statement's CTEs when it has them."""
+    replace_where, overwrite, cols = None, False, None
+    if plan.nodeName() == "OverwriteByExpression":
+        replace_where = text.of(plan.deleteExpr())
+    else:
+        for clause, present in (
+            ("PARTITION (…)", not plan.partitionSpec().isEmpty()),
+            ("BY NAME", plan.byName()),
+        ):
+            if present:
+                raise ValueError(
+                    f"INSERT … {clause} is unsupported on Delta view {name}"
+                )
+        overwrite = plan.overwrite()
+        cols = _parts(plan.userSpecifiedCols()) or None
+    body = cte + text.slice(_span(plan)[1], len(text.statement))
+    return _delta_insert(spark, name, cols, body, overwrite, replace_where)
+
+
+_ROUTES = {
+    "DeleteFromTable": _delete,
+    "UpdateTable": _update,
+    "MergeIntoTable": _merge,
+    "InsertIntoStatement": _insert,
+    "OverwriteByExpression": _insert,
+}
+
+
 def _delta_insert(
-    spark: SparkSession, name: str, cols: str | None, body: str,
+    spark: SparkSession, name: str, cols: list[str] | None, body: str,
     overwrite: bool = False,
     replace_where: str | None = None,
 ) -> DataFrame:
@@ -1191,18 +1357,15 @@ def _delta_insert(
     """
     from pyspark.sql import functions as F
 
-    from .sources.delta import read_delta, write_delta
+    from .sources.delta import _load_snapshot, write_delta
 
     loc = _delta_views[name]
     # Spark SQL accepts top-level VALUES as an inline-table query, so every
-    # body shape (SELECT / VALUES / WITH / TABLE) runs as-is — routed
-    # through THE DIALECT so time-travel / Delta-view references inside
-    # an INSERT body work exactly like in CTAS.
-    rows = sql(spark, body.strip())
+    # body shape (SELECT / VALUES / WITH / TABLE) runs as-is; its
+    # time-travel references are already pinned.
+    rows = spark.sql(body.strip())
     # The SNAPSHOT schema keeps the field metadata (identity / generated /
     # CURRENT_DEFAULT) the scan's aliasing may drop.
-    from .sources.delta import _load_snapshot
-
     fields = _load_snapshot(loc).schema.fields
     # Positional mapping is the contract: rename the query's output to
     # placeholder names first, so duplicate output names (SELECT a.id,
@@ -1222,22 +1385,21 @@ def _delta_insert(
         )
 
     if cols is not None:
-        listed = [c.strip().strip("`") for c in cols.split(",") if c.strip()]
         by_lower = {f.name.lower(): f for f in fields}
-        unknown = [c for c in listed if c.lower() not in by_lower]
+        unknown = [c for c in cols if c.lower() not in by_lower]
         if unknown:
             raise ValueError(
                 f"INSERT column(s) {unknown} not in table {name} "
                 f"({[f.name for f in fields]})"
             )
-        if len(rows.columns) != len(listed):
+        if len(rows.columns) != len(cols):
             raise ValueError(
-                f"INSERT INTO {name} ({len(listed)} columns) but the query "
+                f"INSERT INTO {name} ({len(cols)} columns) but the query "
                 f"produced {len(rows.columns)} columns"
             )
         src = {
             by_lower[c.lower()].name: F.col(f"__ins_c{i}")
-            for i, c in enumerate(listed)
+            for i, c in enumerate(cols)
         }
         sel = []
         for f in fields:
@@ -1266,269 +1428,17 @@ def _delta_insert(
         version = write_delta(
             out, loc, mode="overwrite" if overwrite else "append"
         )
-    # Refresh the view to the new snapshot (the reference errors here:
-    # "Can't encode non-delta tables", tests/local.rs:100-103 — we commit).
-    read_delta(spark, loc).createOrReplaceTempView(name)
-    return spark.sql(f"SELECT CAST({version} AS BIGINT) AS committed_version")
-
-
-_DELTA_MERGE_HEAD = re.compile(
-    r"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
-    r"(?P<name>`[^`]+`|[A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)*)"
-    r"(?:\s+(?:AS\s+)?(?P<talias>[A-Za-z_][A-Za-z0-9_]*))?"
-    r"\s+USING\s+",
-    re.IGNORECASE,
-)
-
-
-def _sub_outside_literals(pattern: str, repl: str, text: str) -> str:
-    """re.sub that never fires inside string literals: matches run on the
-    literal-masked copy, replacements splice into the original by span."""
-    masked = _mask_literals(text)
-    out, last = [], 0
-    for m in re.finditer(pattern, masked):
-        out.append(text[last:m.start()])
-        out.append(repl)
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out)
-
-
-def _sql_merge(spark: SparkSession, statement: str, name: str, rest: str):
-    """Parse the canonical MERGE grammar and route to merge_delta:
-
-        MERGE INTO t USING (<subquery>)|<table> [AS] s ON <cond>
-          [WHEN MATCHED [AND <cond>] THEN
-               UPDATE SET c = e, ... | UPDATE SET * | DELETE]...
-          [WHEN NOT MATCHED [BY TARGET] [AND <cond>] THEN
-               INSERT * | INSERT (cols) VALUES (exprs)]...
-          [WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN
-               UPDATE SET c = e, ... | DELETE]...
-
-    Aliases are normalized to the engine's fixed ``t`` / ``s`` names by a
-    word-boundary rewrite in the condition and expressions. Clauses keep
-    statement order; delta-spark semantics (first matching clause wins, a
-    row qualifying for no clause is untouched / not inserted) are applied
-    by merge_delta. Known limitation: a ``WHEN`` inside a clause condition
-    (CASE WHEN ...) confuses the top-level clause split — use a subquery
-    column instead.
-    """
-    m = _DELTA_MERGE_HEAD.match(statement)
-    talias = m.group("talias")
-    if talias is None:
-        # No explicit alias: the table NAME is the implicit qualifier
-        # (delta-spark accepts MERGE INTO mrg USING k ON mrg.id = k.id).
-        talias = m.group("name").strip("`").split(".")[-1]
-    # USING source: balanced-paren subquery or a table/view name.
-    rest = rest.lstrip()
-    source_name = None
-    if rest.startswith("("):
-        depth, in_str, esc, i = 0, None, False, 0
-        for i, ch in enumerate(rest):
-            if in_str:
-                if esc:
-                    esc = False
-                elif ch == "\\":
-                    esc = True
-                elif ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        source = sql(spark, rest[1:i])  # dialect-routed: time travel,
-        rest = rest[i + 1:]             # registered views, nested forms
-    else:
-        mt = re.match(r"(`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)", rest)
-        source = spark.table(mt.group(1).strip("`"))
-        source_name = mt.group(1).strip("`").split(".")[-1]
-        rest = rest[mt.end():]
-    ma = re.match(r"\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s+(?=ON\b)", rest,
-                  re.IGNORECASE)
-    salias = None
-    if ma:
-        salias = ma.group(1)
-        rest = rest[ma.end():]
-    if salias is None:
-        # Alias-less table source: its name is the implicit qualifier.
-        salias = source_name
-    mo = re.match(r"\s*ON\s+", rest, re.IGNORECASE)
-    if not mo:
-        raise ValueError("MERGE: expected ON <condition>")
-    rest = rest[mo.end():]
-    # Condition runs until the first top-level WHEN — found on the
-    # literal-masked text so "... <> 'when matched'" can't split here.
-    masked_rest = _mask_literals(rest)
-    cut = [mm.span() for mm in re.finditer(r"(?i)\bWHEN\b", masked_rest)]
-    bounds = [0] + [c[0] for c in cut] + [len(rest)]
-    on = rest[bounds[0]:bounds[1]].strip().rstrip(";").strip()
-    clauses = [
-        rest[cut[k][1]:bounds[k + 2]].strip().rstrip(";").strip()
-        for k in range(len(cut))
-    ]
-
-    def norm(expr: str) -> str:
-        """Normalize user aliases to the engine's fixed t/s names —
-        two-phase through placeholders so an alias literally named 't'
-        or 's' (or fully crossed aliases) maps correctly instead of
-        colliding with the fixed names, and never inside string
-        literals."""
-        pairs = [
-            (alias, fixed)
-            for alias, fixed in ((talias, "t"), (salias, "s"))
-            if alias and alias.lower() != fixed
-        ]
-        for alias, fixed in pairs:
-            # (?i): SQL identifiers are case-insensitive — TGT./Tgt.
-            # qualify the same relation as tgt.
-            expr = _sub_outside_literals(
-                rf"(?i)\b{re.escape(alias)}\s*\.", f"\x00{fixed}\x00.", expr
-            )
-        for _alias, fixed in pairs:
-            expr = expr.replace(f"\x00{fixed}\x00.", f"{fixed}.")
-        return expr
-
-    matched_clauses: list[tuple[str | None, str, dict | None]] = []
-    not_matched_clauses: list[tuple[str | None, dict | bool]] = []
-    by_source_clauses: list[tuple[str | None, str, dict | None]] = []
-    for cl in clauses:
-        # Clause regexes run on the literal-masked clause (a 'then' or
-        # ')' inside a string must not terminate a lazy group); groups
-        # slice from the original.
-        mcl = _mask_literals(cl)
-        mu = re.match(
-            r"MATCHED\s+(?:AND\s+(?P<cond>.*?)\s+)?THEN\s+UPDATE\s+SET\s+"
-            r"(?P<sets>.*)$",
-            mcl, re.IGNORECASE | re.DOTALL,
-        )
-        md = re.match(
-            r"MATCHED\s+(?:AND\s+(?P<cond>.*?)\s+)?THEN\s+DELETE$",
-            mcl, re.IGNORECASE | re.DOTALL,
-        )
-        mi = re.match(
-            r"NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?"
-            r"(?:AND\s+(?P<cond>.*?)\s+)?THEN\s+INSERT\s*"
-            r"(?:(?P<star>\*)|(?:\((?P<cols>[^)]*)\)\s*)?"
-            r"VALUES\s*\((?P<vals>.*)\))\s*$",
-            mcl, re.IGNORECASE | re.DOTALL,
-        )
-        mbs = re.match(
-            r"NOT\s+MATCHED\s+BY\s+SOURCE\s*"
-            r"(?:AND\s+(?P<cond>.*?)\s+)?THEN\s+"
-            r"(?:(?P<del>DELETE)\s*$|UPDATE\s+SET\s+(?P<sets>.*)$)",
-            mcl, re.IGNORECASE | re.DOTALL,
-        )
-        if mbs:
-            raw_cond = _g(cl, mbs, "cond")
-            cond = norm(raw_cond) if raw_cond else None
-            if mbs.group("del"):
-                by_source_clauses.append((cond, "delete", None))
-            else:
-                tprefix = re.compile(
-                    rf"^(?:t|{re.escape(talias)})\." if talias else r"^t\.",
-                    re.IGNORECASE,
-                )
-                by_source_clauses.append((cond, "update", {
-                    tprefix.sub("", c): norm(e)
-                    for c, e in _split_set_clauses(
-                        _g(cl, mbs, "sets")
-                    ).items()
-                }))
-            continue
-        if mu:
-            raw_cond = _g(cl, mu, "cond")
-            cond = norm(raw_cond) if raw_cond else None
-            # SET targets may be alias-qualified (t.col = ...): strip the
-            # target prefix — merge_delta wants bare column names.
-            tprefix = re.compile(
-                rf"^(?:t|{re.escape(talias)})\." if talias else r"^t\.",
-                re.IGNORECASE,
-            )
-            sets_raw = _g(cl, mu, "sets").strip().rstrip(";").strip()
-            if sets_raw == "*":
-                # UPDATE SET * (delta-spark): assign every SOURCE column
-                # to the same-named target column.
-                matched_clauses.append((cond, "update", {
-                    c: f"s.`{c}`" for c in source.columns
-                }))
-                continue
-            matched_clauses.append((cond, "update", {
-                tprefix.sub("", c): norm(e)
-                for c, e in _split_set_clauses(_g(cl, mu, "sets")).items()
-            }))
-        elif md:
-            raw_cond = _g(cl, md, "cond")
-            matched_clauses.append(
-                (norm(raw_cond) if raw_cond else None, "delete", None)
-            )
-        elif mi:
-            raw_cond = _g(cl, mi, "cond")
-            cond = norm(raw_cond) if raw_cond else None
-            if mi.group("star"):
-                not_matched_clauses.append((cond, True))
-            else:
-                vals = _split_top_level(_g(cl, mi, "vals"))
-                if mi.group("cols") is None:
-                    raise ValueError(
-                        "MERGE INSERT without a column list requires INSERT *"
-                    )
-                cols = [
-                    c.strip().strip("`")
-                    for c in mi.group("cols").split(",") if c.strip()
-                ]
-                if len(cols) != len(vals):
-                    raise ValueError(
-                        f"MERGE INSERT: {len(cols)} columns vs {len(vals)} values"
-                    )
-                not_matched_clauses.append(
-                    (cond, {c: norm(v.strip()) for c, v in zip(cols, vals)})
-                )
-        else:
-            raise ValueError(f"unsupported MERGE clause: WHEN {cl[:60]}...")
-
-    from pyspark.sql import Row
-
-    from .sources.delta import read_delta
-    from .sources.delta_dml import merge_delta
-
-    loc = _delta_views[name]
-    metrics = merge_delta(
-        spark, loc, source, norm(on),
-        matched_clauses=matched_clauses,
-        not_matched_clauses=not_matched_clauses,
-        not_matched_by_source_clauses=by_source_clauses,
-        # MERGE WITH SCHEMA EVOLUTION INTO ... (delta-spark SQL form)
-        schema_evolution=m.group("evolve") is not None,
-    )
-    read_delta(spark, loc).createOrReplaceTempView(name)
-    return spark.createDataFrame([Row(**metrics)])
-
-
-def _split_commas_outside_brackets(text: str) -> list[str]:
-    """Split on commas not nested in () or <> — column-spec lists carry
-    both paren types (decimal(10,2)) and generic types (map<string,int>)."""
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(text):
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [p for p in parts if p.strip()]
+    # The reference errors here ("Can't encode non-delta tables",
+    # tests/local.rs:100-103); we commit.
+    return _committed(spark, name, committed_version=version)
 
 
 def _split_top_level(s: str) -> list[str]:
-    """Split on commas outside parens/brackets/string literals.
-    Backslash escapes inside literals ('O\\'Brien') are skipped, matching
-    _mask_literals — treating the escaped quote as a terminator would
-    leak the rest of the literal to top level and mis-split."""
+    """Split on commas outside parens, brackets, angle brackets (generic
+    types: map<string,int>) and string literals. Backslash escapes inside
+    literals ('O\\'Brien') are skipped, matching _mask_literals — treating
+    the escaped quote as a terminator would leak the rest of the literal
+    to top level and mis-split."""
     parts, depth, in_str, esc, cur = [], 0, None, False, []
     for ch in s:
         if in_str:
@@ -1542,9 +1452,9 @@ def _split_top_level(s: str) -> list[str]:
             continue
         if ch in ("'", '"'):
             in_str = ch
-        elif ch in "([":
+        elif ch in "([<":
             depth += 1
-        elif ch in ")]":
+        elif ch in ")]>":
             depth -= 1
         elif ch == "," and depth == 0:
             parts.append("".join(cur))
@@ -1553,65 +1463,3 @@ def _split_top_level(s: str) -> list[str]:
         cur.append(ch)
     parts.append("".join(cur))
     return parts
-
-
-def _split_update_tail(
-    statement: str, masked: str, start: int
-) -> tuple[str, str | None]:
-    """Split everything after UPDATE's SET keyword into (sets, cond) at
-    the first TOP-LEVEL ``WHERE`` — the regex's lazy split stops at the
-    first WHERE even inside a parenthesized subquery (``SET a = (SELECT
-    max(x) FROM u WHERE ...)``), which masking cannot hide. Scans the
-    MASKED text (keywords inside literals already hidden) and extracts
-    the spans from the original statement."""
-    stripped = masked.rstrip()
-    stop = len(stripped) - 1 if stripped.endswith(";") else len(stripped)
-    depth = 0
-    for mm in re.finditer(r"[()]|\bWHERE\b", masked[start:stop], re.IGNORECASE):
-        tok = mm.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            return (
-                statement[start:start + mm.start()].strip(),
-                statement[start + mm.end():stop].strip(),
-            )
-    return statement[start:stop].strip(), None
-
-
-def _split_set_clauses(sets: str) -> dict[str, str]:
-    """Parse ``col = expr, col2 = expr2`` splitting only at top-level commas
-    (commas inside parens or string literals belong to the expression)."""
-    out: dict[str, str] = {}
-    for p in _split_top_level(sets):
-        col, eq, expr = p.partition("=")
-        if not eq or not col.strip() or not expr.strip():
-            raise ValueError(f"malformed SET clause: {p.strip()!r}")
-        out[col.strip().strip("`")] = expr.strip()
-    return out
-
-
-def _delta_dml(
-    spark: SparkSession, name: str, op: str, cond: str, sets: str | None = None
-) -> DataFrame:
-    """Run DELETE/UPDATE SQL against the Delta table behind view ``name``
-    via the copy-on-write DML engine (sources/delta_dml), refresh the view,
-    and return the operation metrics as a one-row DataFrame. MERGE has no
-    SQL form here — use :func:`ballista_delta_spark.sources.delta_dml
-    .merge_delta` (its clause structure doesn't regex cleanly)."""
-    from pyspark.sql import Row
-
-    from .sources.delta import read_delta
-    from .sources import delta_dml
-
-    loc = _delta_views[name]
-    if op == "delete":
-        metrics = delta_dml.delete_delta(spark, loc, cond)
-    else:
-        metrics = delta_dml.update_delta(
-            spark, loc, cond, _split_set_clauses(sets or "")
-        )
-    read_delta(spark, loc).createOrReplaceTempView(name)
-    return spark.createDataFrame([Row(**metrics)])

@@ -286,10 +286,16 @@ def test_sql_merge_forms(spark, tmp_path):
 
     # Conditional clauses are supported since round 6
     # (TestConditionalMerge in test_delta_dml.py); a malformed clause is
-    # still a loud error with no commit.
-    with pytest.raises(ValueError, match="unsupported MERGE clause"):
+    # still a loud error (Spark's parser rejects it) with no commit.
+    from pyspark.errors import ParseException
+
+    from ballista_delta_spark.sources.delta import _load_snapshot
+
+    version = _load_snapshot(tbl).version
+    with pytest.raises(ParseException, match="FROBNICATE"):
         sql(spark, "MERGE INTO mrg t USING kill s ON t.id = s.id "
                    "WHEN MATCHED THEN FROBNICATE")
+    assert _load_snapshot(tbl).version == version
 
 
 def test_restore_to_version_is_metadata_only(spark, tmp_path):

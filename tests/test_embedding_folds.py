@@ -5,8 +5,11 @@ vector; only the pair-loop cosine stays an unrolled 64-term chain.
   are bit-identical to the left-associative chains they replace, on
   adversarial rows (signed zeros, subnormals, magnitudes near 1e308, mixed
   signs; NaN and infinities for the bucket).
-- Shape: the plans of ``sim_ivf_topk`` and ``emb_knn_graph`` carry that
-  math as folds, and the pair cosine is the one 64-term chain left.
+- Shape: the plans of ``sim_ivf_topk``, ``emb_knn_graph``,
+  ``dedup_embedding_cosine``, ``emb_semdedup`` and ``sim_hard_negatives``
+  carry that math as folds, and the pair cosine is the only 64-term chain
+  left. The last three return the same bits with every fold spelled as
+  the chain it replaced.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ballista_delta_spark.queries import dedup
 from ballista_delta_spark.queries import similarity as sim
 
 DIM = 64
@@ -176,3 +180,55 @@ def test_only_the_pair_cosine_is_an_unrolled_chain(spark, sf_dir, qid, monkeypat
     assert "aggregate(zip_with(" in plan, plan[:3000]
     # the only 64-term chain is the pair cosine: emb[63] of each side once
     assert len(re.findall(r"\[63\]", plan)) == 2, plan[:3000]
+
+
+_QUERIES = {**sim.QUERIES, **dedup.QUERIES}
+# Queries whose norm (and, for emb_semdedup, distance) folds sit beside an
+# unrolled pair cosine.
+_LATE_FOLDS = ["dedup_embedding_cosine", "emb_semdedup", "sim_hard_negatives"]
+
+
+@pytest.mark.parametrize("qid", _LATE_FOLDS)
+def test_late_fold_queries_unroll_only_pair_products(spark, sf_dir, qid, monkeypatch):
+    fn, _ = _QUERIES[qid]
+    plan = _plans_with_checkpoints(spark, lambda: fn(spark, sf_dir), monkeypatch)
+    assert "aggregate(zip_with(" in plan, plan[:3000]
+    # Every emb[63] is one side of a pair product (the cosine, which the
+    # dedup joins evaluate in both the join condition and the output);
+    # no norm or distance chain is left.
+    pairs = re.findall(r"(\w+#\d+)\[63\] \* (\w+#\d+)\[63\]", plan)
+    assert pairs and all(a != b for a, b in pairs), plan[:3000]
+    assert len(re.findall(r"\[63\]", plan)) == 2 * len(pairs), plan[:3000]
+
+
+def _chain_fold(left: str, right: str, term: str = "x * y") -> str:
+    """``sim._fold`` spelled as the left-to-right chain it replaces; an
+    ``array(...)`` literal operand contributes its elements."""
+
+    def operand(side: str):
+        if side.startswith("array("):
+            return side[len("array("):-1].split(", ")
+        return [f"{side}[{d}]" for d in range(DIM)]
+
+    xs, ys = operand(left), operand(right)
+    return "(" + " + ".join(
+        "(" + term.replace("x", x).replace("y", y) + ")" for x, y in zip(xs, ys)
+    ) + ")"
+
+
+@pytest.mark.parametrize("qid", _LATE_FOLDS)
+def test_late_fold_queries_return_the_chains_bits(spark, sf_dir, qid, monkeypatch):
+    fn, _ = _QUERIES[qid]
+
+    def rows():
+        return sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+
+    folded = rows()
+    monkeypatch.setattr(sim, "_fold", _chain_fold)
+    assert "aggregate(" not in sim._sqdist_cols([[1.0] * DIM])[0]._jc.toString()
+    chained = rows()
+    assert folded and [
+        tuple(_bits(v) if isinstance(v, float) else v for v in r) for r in folded
+    ] == [
+        tuple(_bits(v) if isinstance(v, float) else v for v in r) for r in chained
+    ]

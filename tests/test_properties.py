@@ -12,7 +12,7 @@ import os
 
 from hypothesis import given, settings, strategies as st
 
-from ballista_delta_spark.session import _split_set_clauses, _split_top_level
+from ballista_delta_spark.session import _split_top_level
 
 # Expression fragments that stress the splitter: nested calls, string
 # literals containing commas/parens, brackets.
@@ -30,13 +30,23 @@ class TestSplitTopLevel:
         joined = ",".join(parts)
         assert _split_top_level(joined) == parts
 
+    # UPDATE's SET map comes from Spark's parse tree, each value sliced
+    # from the statement by its origin: the same fragments, parsed only.
     @given(st.lists(_FRAGMENTS, min_size=1, max_size=4))
     @settings(max_examples=100, deadline=None)
-    def test_set_clause_parse_roundtrips(self, exprs):
+    def test_set_clause_parse_roundtrips(self, spark, exprs):
+        from ballista_delta_spark.session import (
+            _parse_plan,
+            _Spliced,
+            _update_args,
+        )
+
         cols = [f"c{i}" for i in range(len(exprs))]
-        sets = ", ".join(f"{c} = {e}" for c, e in zip(cols, exprs))
-        parsed = _split_set_clauses(sets)
-        assert parsed == dict(zip(cols, exprs))
+        stmt = "UPDATE t SET " + ", ".join(
+            f"{c} = {e}" for c, e in zip(cols, exprs)
+        )
+        cond, sets = _update_args("t", _parse_plan(spark, stmt), _Spliced(stmt))
+        assert sets == dict(zip(cols, exprs)) and cond == "true"
 
 
 class TestMangledPathDecode:

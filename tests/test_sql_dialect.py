@@ -353,3 +353,262 @@ def test_registry_register_delta_routes_dml(spark, tmp_path):
     got = [(r.id, r.s) for r in read_delta(spark, loc).collect()]
     assert got == [(2, "b")]
     spark.catalog.dropTempView("regd_view")
+
+
+# ---------------------------------------------------------------------------
+# DML and time travel are read from Spark's parse tree: forms a text
+# splitter got wrong.
+
+
+def test_merge_clause_condition_with_case_when(spark, view):
+    name, loc = view
+    sql(
+        spark,
+        f"MERGE INTO {name} AS t USING (SELECT 1 AS id UNION ALL SELECT 2) AS s "
+        "ON t.id = s.id "
+        "WHEN MATCHED AND CASE WHEN s.id > 1 THEN true ELSE false END "
+        "THEN UPDATE SET v = 0",
+    )
+    got = {r.id: r.v for r in read_delta(spark, loc).collect()}
+    assert got == {1: 10, 2: 0, 3: 30}
+
+
+def test_merge_insert_values_with_case_when(spark, view):
+    name, loc = view
+    sql(
+        spark,
+        f"MERGE INTO {name} tgt USING (SELECT 7 AS id, 70 AS nv) src "
+        "ON tgt.id = src.id "
+        "WHEN NOT MATCHED THEN INSERT (id, s, v) VALUES "
+        "(src.id, CASE WHEN src.nv > 50 THEN 'big' ELSE 'small' END, src.nv)",
+    )
+    got = {r.id: (r.s, r.v) for r in read_delta(spark, loc).collect()}
+    assert got[7] == ("big", 70) and len(got) == 4
+
+
+def test_aliased_delete_and_update(spark, view):
+    name, loc = view
+    sql(spark, f"DELETE FROM {name} AS x WHERE x.id = 1")
+    sql(spark, f"UPDATE {name} x SET v = 0 WHERE x.id = 2")
+    got = {r.id: r.v for r in read_delta(spark, loc).collect()}
+    assert got == {2: 0, 3: 30}
+
+
+def test_delete_with_comment_before_where(spark, view):
+    name, loc = view
+    sql(spark, f"DELETE FROM {name} /* c */ WHERE id = 3")
+    assert sorted(r.id for r in read_delta(spark, loc).collect()) == [1, 2]
+
+
+def test_time_travel_with_comment_before_clause(spark, view):
+    name, loc = view
+    sql(spark, f"DELETE FROM {name} WHERE id = 1")  # v1
+    rows = sql(
+        spark, f"SELECT count(*) AS n FROM {name} /* c */ VERSION AS OF 0"
+    ).collect()
+    assert rows[0].n == 3
+
+
+def test_explain_and_describe_query_pin_time_travel(spark, view):
+    """EXPLAIN and DESCRIBE QUERY keep their query outside the parse
+    tree's children; its time travel is pinned all the same."""
+    name, _ = view
+    sql(spark, f"DELETE FROM {name} WHERE id = 1")  # v1
+    q = f"SELECT * FROM {name} VERSION AS OF 0"
+    plan = sql(spark, f"EXPLAIN {q}").collect()[0][0]
+    assert "== Physical Plan ==" in plan and "Error" not in plan, plan
+    cols = [r.col_name for r in sql(spark, f"DESCRIBE QUERY {q}").collect()]
+    assert cols == ["id", "s", "v"]
+
+
+def test_cte_prefixed_insert(spark, view):
+    name, loc = view
+    sql(
+        spark,
+        "WITH q AS (SELECT 5 AS id, 'e' AS s, 50 AS v) "
+        f"INSERT INTO {name} SELECT id, s, v FROM q",
+    )
+    got = {r.id: (r.s, r.v) for r in read_delta(spark, loc).collect()}
+    assert got[5] == ("e", 50) and len(got) == 4
+
+
+def test_variable_substitution_before_sliced_spans(spark, view):
+    """Spark substitutes ${var} before it parses, so origins index the
+    substituted text: slices must come from that text."""
+    name, loc = view
+    spark.conf.set("bds_lim", "1")
+    try:
+        sql(spark, f"DELETE FROM {name} WHERE id > ${{bds_lim}} + 1")
+        n = sql(
+            spark,
+            "SELECT count(*) AS n FROM (SELECT ${bds_lim} AS x) q, "
+            f"{name} VERSION AS OF 0",
+        ).collect()[0].n
+    finally:
+        spark.conf.unset("bds_lim")
+    assert sorted(r.id for r in read_delta(spark, loc).collect()) == [1, 2]
+    assert n == 3
+
+
+def test_unsupported_insert_clause_names_it(spark, view):
+    from ballista_delta_spark.sources.delta import _load_snapshot
+
+    name, loc = view
+    version = _load_snapshot(loc).version
+    with pytest.raises(ValueError, match="PARTITION"):
+        sql(spark, f"INSERT INTO {name} PARTITION (s = 'z') SELECT 9, 90")
+    assert _load_snapshot(loc).version == version
+
+
+def test_plain_select_is_not_parsed_by_the_router(spark, view, monkeypatch):
+    """Only DML, WITH and statements holding the keyword OF pay the
+    router's parse; a plain SELECT goes straight to spark.sql."""
+    from ballista_delta_spark import session
+
+    name, _ = view
+    calls = []
+    real = session._parse_plan
+    monkeypatch.setattr(
+        session, "_parse_plan",
+        lambda spark, st: calls.append(st) or real(spark, st),
+    )
+    out = sql(spark, f"SELECT count(*) AS n FROM {name} WHERE s <> 'x of y'")
+    assert out.collect()[0].n == 3 and calls == []
+    out = sql(spark, f"WITH q AS (SELECT * FROM {name}) SELECT count(*) AS n FROM q")
+    assert out.collect()[0].n == 3 and calls == []
+    sql(spark, f"SELECT count(*) AS n FROM {name} VERSION AS OF 0").collect()
+    assert len(calls) == 1
+
+
+def test_update_extraction_reads_spark_parse_tree(spark):
+    """UPDATE's condition and SET text come from the parse tree: commas,
+    WHERE and quotes inside literals, calls and subqueries stay where
+    they belong, and qualifiers of the target are dropped."""
+    from ballista_delta_spark.session import _parse_plan, _Spliced, _update_args
+
+    st = (
+        "UPDATE t x SET x.a = f(1, 2), b = 'p, WHERE q' , c = true "
+        "WHERE x.id IN (SELECT id FROM u WHERE k = 'a') AND x.s <> 'it''s'"
+    )
+    cond, sets = _update_args("x", _parse_plan(spark, st), _Spliced(st))
+    assert sets == {"a": "f(1, 2)", "b": "'p, WHERE q'", "c": "true"}
+    assert cond == (
+        "`id` IN (SELECT id FROM u WHERE k = 'a') AND `s` <> 'it''s'"
+    )
+
+
+def test_predicate_and_exists_text_spans_the_whole_expression(spark):
+    """A predicate's parser origin starts at its keyword (IN, LIKE, IS
+    NULL, ...) and EXISTS has none of its own; the text handed to the
+    engine still spans the whole expression."""
+    from ballista_delta_spark.session import _parse_plan, _Spliced, _update_args
+
+    for e in [
+        "v IN (1, 2)",
+        "v NOT IN (SELECT v FROM u)",
+        "v BETWEEN 1 AND 2",
+        "s NOT LIKE 'a%' ESCAPE '!'",
+        "s IS NOT NULL",
+        "s IS DISTINCT FROM 'x'",
+        "NOT NOT v IN (1)",
+        "false OR v IN (1)",
+        "EXISTS (SELECT 1 FROM u WHERE u.k = v)",
+        "EXISTS (SELECT 1 FROM u WHERE s = ')')",
+        "v IN (1) OR NOT EXISTS (SELECT 1)",
+        "(v + 1) IN (1, 2)",
+        "(s) LIKE 'a%'",
+        "(v - 1) IS NULL",
+        "((v)) BETWEEN 1 AND 2",
+        "( /* c) */ v) IN (1)",
+        "(s || ')') LIKE 'a%'",
+        "(v) IN (1) AND (v + 1) IN (2)",
+    ]:
+        st = f"UPDATE t SET c = {e} WHERE {e}"
+        assert _update_args("t", _parse_plan(spark, st), _Spliced(st)) == (
+            e, {"c": e}
+        )
+
+
+def test_delete_and_update_with_a_predicate_condition(spark, view):
+    name, loc = view
+    sql(spark, f"UPDATE {name} SET v = -1 WHERE s LIKE 'c%'")
+    sql(spark, f"DELETE FROM {name} WHERE id IN (1, 2)")
+    assert [(r.id, r.v) for r in read_delta(spark, loc).collect()] == [(3, -1)]
+
+
+def test_delete_and_update_with_a_parenthesized_left_operand(spark, view):
+    name, loc = view
+    sql(spark, f"UPDATE {name} SET v = 0 WHERE (v - 10) IS NULL OR (s) LIKE 'c%'")
+    sql(spark, f"DELETE FROM {name} WHERE (v + 1) IN (11, 21)")
+    assert [(r.id, r.v) for r in read_delta(spark, loc).collect()] == [(3, 0)]
+
+
+def test_fsck_dry_run_reports_a_missing_file(spark, view):
+    """A dry run reports the missing file, commits nothing and leaves the
+    view on its snapshot (re-reading it would fail on the missing path)."""
+    import glob
+    import os
+
+    from ballista_delta_spark.sources.delta import DeltaTable
+
+    name, loc = view
+    sql(spark, f"INSERT INTO {name} VALUES (4, 'd', 40)")
+    version = DeltaTable(loc).version
+    os.remove(sorted(glob.glob(os.path.join(loc, "*.parquet")))[0])
+    out = sql(spark, f"FSCK REPAIR TABLE {name} DRY RUN").collect()[0]
+    assert out.files_removed == 1 and DeltaTable(loc).version == version
+    out = sql(spark, f"FSCK REPAIR TABLE {name}").collect()[0]
+    assert out.files_removed == 1 and out.committed_version == version + 1
+
+
+def test_timestamp_as_of_reads_in_session_time_zone(spark, tmp_path):
+    """A zone-less TIMESTAMP AS OF / RESTORE literal is wall-clock time in
+    spark.sql.session.timeZone, as Spark reads it."""
+    import json
+    import os
+
+    loc = str(tmp_path / "tz")
+    write_delta(spark.createDataFrame([(1,)], "id long"), loc)      # v0
+    write_delta(spark.createDataFrame([(2,)], "id long"), loc)      # v1
+    # Pin commit times: v0 at 00:16:40 UTC, v1 at 00:33:20 UTC.
+    for v, ts in {0: 1000_000, 1: 2000_000}.items():
+        fp = os.path.join(loc, "_delta_log", f"{v:020d}.json")
+        acts = [json.loads(line) for line in open(fp)]
+        for a in acts:
+            if "commitInfo" in a:
+                a["commitInfo"]["timestamp"] = ts
+        with open(fp, "w") as fh:
+            fh.writelines(json.dumps(a) + "\n" for a in acts)
+    name = f"tz_{abs(hash(loc)) % 10**8}"
+    sql(spark, f"CREATE EXTERNAL TABLE {name} STORED AS DELTA LOCATION '{loc}'")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")  # UTC+9
+    try:
+        # 09:25 in Tokyo is 00:25 UTC: after v0, before v1.
+        ts = "1970-01-01 09:25:00"
+        rows = sql(
+            spark, f"SELECT id FROM {name} TIMESTAMP AS OF '{ts}'"
+        ).collect()
+        assert [r.id for r in rows] == [1]
+        out = sql(
+            spark, f"RESTORE TABLE {name} TO TIMESTAMP AS OF '{ts}'"
+        ).collect()[0]
+        assert out.restoredVersion == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_timestamp_with_offset_needs_no_session_zone(spark):
+    """A literal with an offset or 'Z' is an instant whatever the session
+    zone; a zone-less one needs a session zone Python can resolve."""
+    from ballista_delta_spark.session import _ts_to_epoch_ms
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "GMT+08:00")  # Java-only
+    try:
+        assert _ts_to_epoch_ms("1970-01-01T00:00:01Z") == 1000
+        assert _ts_to_epoch_ms("1970-01-01 09:00:00+09:00") == 0
+        with pytest.raises(ValueError, match="session time zone"):
+            _ts_to_epoch_ms("1970-01-01 00:00:00")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
