@@ -287,11 +287,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # higher-order-function form (array_min×16 over a let-bound array) was
     # interpreted expression evaluation — measured ~9s of the query at
     # sf0.1 vs ~2s for this shape. Same mh/bsig values — oracle unchanged.
+    # One F.expr per column: as Column trees the 16 mins and 4 band sums
+    # took ~3,000 py4j round trips per build. The CAST literals keep the
+    # arithmetic BIGINT.
     mins = [
-        F.min(
-            (F.lit(2 * k + 1).cast("bigint") * F.col("shingle")
-             + F.lit(1299721 * k).cast("bigint")) % _P
-        ).alias(f"mh{k}")
+        F.expr(
+            f"min((CAST({2 * k + 1} AS BIGINT) * shingle"
+            f" + CAST({1299721 * k} AS BIGINT)) % {_P}) AS mh{k}"
+        )
         for k in range(_K)
     ]
     # ONE pass builds the whole per-doc signature table: 16 MinHash mins
@@ -320,10 +323,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     bsigs = [
-        sum(
-            F.col(f"mh{4 * band + j}") * F.lit(_BANDS_W[j]).cast("bigint")
-            for j in range(4)
-        ).alias(f"bsig{band}")
+        F.expr(" + ".join(
+            f"mh{4 * band + j} * CAST({w} AS BIGINT)"
+            for j, w in enumerate(_BANDS_W)
+        ) + f" AS bsig{band}")
         for band in range(_K // 4)
     ]
     bands = per_doc.select("doc_id", *bsigs).select(

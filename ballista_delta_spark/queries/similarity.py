@@ -97,15 +97,22 @@ def lsh_bucket_expr(n_planes: int = _N_PLANES, *, dialect: str = "spark") -> str
     nonzero-weight terms left to right in double precision, so the Spark
     query and the DuckDB oracle agree term for term (non-finite inputs
     included): Spark as one ``_fold`` per plane, DuckDB as an unrolled
-    chain (~10x faster there than a fold over a plane-matrix literal)."""
+    chain (~10x faster there than a fold over a plane-matrix literal).
+
+    The Spark fold keeps ``emb``'s nonzero-weight elements with a
+    ``filter`` over a constant mask, so no lambda body names ``emb``.
+    With a lambda that captured it, Catalyst inferred a filter over
+    ``emb`` onto ``emb_knn_graph``'s per-bucket count, which has no
+    ``emb`` column, and the first such plan of a session failed with
+    ``INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND``."""
     if dialect not in ("spark", "duckdb"):
         raise ValueError(f"unknown dialect {dialect!r} (spark | duckdb)")
     terms = []
     for k, row in enumerate(_planes(n_planes)):
         if dialect == "spark":
-            ds = [d for d, w in enumerate(row) if w]
-            dot = _fold(f"array({', '.join(map(str, ds))})",
-                        _lit_array([float(row[d]) for d in ds]), "emb[x] * y")
+            mask = ", ".join("true" if w else "false" for w in row)
+            dot = _fold(f"filter(emb, (e, i) -> array({mask})[i])",
+                        _lit_array([float(w) for w in row if w]))
             terms.append(
                 f"(CASE WHEN ({dot}) > 0D THEN CAST({1 << k} AS BIGINT) "
                 f"ELSE CAST(0 AS BIGINT) END)"

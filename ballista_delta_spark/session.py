@@ -663,13 +663,11 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             if m.group("dry"):
                 # delta-spark's DRY RUN lists the files that WOULD be
                 # deleted (a `path` column), not a deletion count
-                would = vacuum(
-                    _delta_views[name], dry_run=True, spark=spark, **kwargs
-                )
+                would = vacuum(_delta_views[name], dry_run=True, **kwargs)
                 return spark.createDataFrame(
                     [(p,) for p in would], "path string"
                 )
-            removed = vacuum(_delta_views[name], spark=spark, **kwargs)
+            removed = vacuum(_delta_views[name], **kwargs)
             return spark.sql(
                 f"SELECT CAST({len(removed)} AS BIGINT) AS files_deleted"
             )
@@ -756,7 +754,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
             from .sources.delta import fsck_repair
 
             loc = _delta_views[name]
-            res = fsck_repair(loc, dry_run=bool(m.group("dry")), spark=spark)
+            res = fsck_repair(loc, dry_run=bool(m.group("dry")))
             row = dict(committed_version=res["version"],
                        files_removed=res["numMissingFiles"])
             if m.group("dry"):  # nothing committed: the view stays put
@@ -865,10 +863,7 @@ def sql(spark: SparkSession, statement: str) -> DataFrame:
                 )
             src_loc = _delta_views[src_name]
         dst = _g(statement, m, "dst")
-        clone_delta(
-            src_loc, dst, deep=m.group("depth").upper() == "DEEP",
-            spark=spark,
-        )
+        clone_delta(src_loc, dst, deep=m.group("depth").upper() == "DEEP")
         name = m.group("name").strip("`")
         _delta_views[name] = dst
         return _committed(spark, name, committed_version=0)
@@ -1126,6 +1121,23 @@ def _relation(node) -> tuple[list[str], str] | None:
 _WRAPPED_QUERY = {"ExplainCommand": "logicalPlan", "DescribeQueryCommand": "plan"}
 
 
+def _as_of_ms(ts) -> int:
+    """Epoch millis of a TIMESTAMP AS OF literal: a string, or a typed
+    ``TIMESTAMP '…'`` (which the parser already read in the session time
+    zone) or ``TIMESTAMP_NTZ '…'`` (wall-clock time, read here in it)."""
+    kind = ts.dataType().typeName() if ts.nodeName() == "Literal" else None
+    if kind == "string":
+        return _ts_to_epoch_ms(ts.value().toString())
+    if kind == "timestamp":
+        return ts.value() // 1000
+    if kind == "timestamp_ntz":
+        from datetime import datetime, timedelta
+
+        wall = datetime(1970, 1, 1) + timedelta(microseconds=ts.value())
+        return _ts_to_epoch_ms(wall.isoformat())
+    raise ValueError(f"TIMESTAMP AS OF takes a timestamp literal, got {ts}")
+
+
 def _pin_time_travel(spark: SparkSession, plan, text: _Spliced) -> None:
     """Point every ``<view> VERSION|TIMESTAMP AS OF x`` on a registered
     Delta view, anywhere in ``plan`` (CTE bodies and subqueries too), at a
@@ -1152,11 +1164,7 @@ def _pin_time_travel(spark: SparkSession, plan, text: _Spliced) -> None:
             snap_name = f"{name}__asof_v{version}"
             df = read_delta(spark, loc, version=version)
         else:
-            ts = node.timestamp().get()
-            if not (ts.nodeName() == "Literal"
-                    and ts.dataType().typeName() == "string"):
-                raise ValueError(f"TIMESTAMP AS OF takes a string, got {ts}")
-            ts_ms = _ts_to_epoch_ms(ts.value().toString())
+            ts_ms = _as_of_ms(node.timestamp().get())
             snap_name = f"{name}__asof_t{ts_ms}"
             df = read_delta(spark, loc, timestamp_ms=ts_ms)
         df.createOrReplaceTempView(snap_name)

@@ -581,38 +581,28 @@ def convert_to_delta(spark: SparkSession, path: str) -> int:
     return _try_commit(path, actions, [])
 
 
-def fsck_repair(
-    path: str,
-    dry_run: bool = False,
-    spark: SparkSession | None = None,
-) -> dict[str, Any]:
+def fsck_repair(path: str, dry_run: bool = False) -> dict[str, Any]:
     """``FSCK REPAIR TABLE`` — drop log references to data files that no
     longer exist on storage (manual deletion, failed restore, cloud
     lifecycle policy). The commit removes ONLY the missing references
     (dataChange=true: rows really disappeared); intact files are
     untouched. ``dry_run`` reports without committing.
 
-    Above ``_DISTRIBUTED_LISTING_MIN_FILES`` the existence probes run as
-    one Spark job (``spark`` or the active session) — a million-file
-    table must not serialize a million stats through the driver.
+    The existence probe is one ``os.path.exists`` per spelling of each
+    tracked path, on the driver.
     """
     path = _strip_file_scheme(path)
     snap = _load_snapshot(path)
     # remove-only commit: CDF readers derive its deletes from the
     # dataChange removes, no _change_data needed
     check_write_protocol(snap, removes_files=True, cdf_capable=True)
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    if spark is not None and len(snap.files) >= _DISTRIBUTED_LISTING_MIN_FILES:
-        missing = _distributed_missing_files(spark, path, list(snap.files))
-    else:
-        missing = [
-            rel for rel in sorted(snap.files)
-            if not any(
-                os.path.exists(os.path.join(path, sp))
-                for sp in _rel_spellings(rel)
-            )
-        ]
+    missing = [
+        rel for rel in sorted(snap.files)
+        if not any(
+            os.path.exists(os.path.join(path, sp))
+            for sp in _rel_spellings(rel)
+        )
+    ]
     out = {"numMissingFiles": len(missing), "missing": missing}
     if dry_run or not missing:
         out["version"] = snap.version
@@ -2035,177 +2025,6 @@ def _stats_for_files(
             if strict:
                 raise
     return out
-
-
-# Tracked-file (or table-root entry) count above which VACUUM's
-# untracked-file discovery and FSCK's existence checks run as a Spark job
-# instead of a single-threaded driver loop. Below it the driver walk is
-# faster than a job launch; above it the listing is the bottleneck
-# (VERDICT r10 "What's wrong" #2 — delta-spark distributes the same two
-# passes for the same reason).
-_DISTRIBUTED_LISTING_MIN_FILES = 4096
-
-# Cap on listing-job tasks: one work item (partition dir / root file) per
-# task up to the cap, then items pack round-robin. Dirs are walked whole
-# executor-side, so a 10-dir million-file table still gets 10-way listing
-# parallelism while a flat million-root-file table batches ~2k names/task.
-_LISTING_MAX_TASKS = 512
-
-# Existence probes are one stat() each — batch thousands per task or the
-# scheduler overhead dominates.
-_EXISTS_FILES_PER_TASK = 4096
-
-
-def _vacuum_keep_dir(name: str) -> bool:
-    """Spec listing rule shared by EVERY orphan-discovery walk (driver
-    and distributed — one definition so the branches cannot diverge):
-    descend a directory iff it is a Hive partition dir (``=`` in the
-    name), ``_change_data`` (delta-spark's VacuumCommand carves the cdc
-    dir out of the hidden-file rule: change files are reclaimed by the
-    SAME retention window as data files, or a CDF-heavy table leaks
-    them forever), or not ``_``/``.``-prefixed."""
-    return (
-        "=" in name
-        or name == "_change_data"
-        or not name.startswith(("_", "."))
-    )
-
-
-def _vacuum_skip_name(name: str) -> bool:
-    """File names VACUUM's orphan passes never touch: ``_``/``.``-
-    prefixed entries and DV bins (the dedicated DV pass owns those)."""
-    return name.startswith(("_", ".")) or (
-        name.startswith("deletion_vector_") and name.endswith(".bin")
-    )
-
-
-def _distributed_untracked_listing(
-    spark: SparkSession,
-    path: str,
-    tracked: "list[str]",
-    cutoff_ms: int,
-) -> list[str]:
-    """VACUUM orphan discovery as ONE Spark job: list the table tree
-    executor-side, keep files whose mtime is at or before ``cutoff_ms``,
-    anti-join against the snapshot's tracked-path relation, and return
-    the (orphan-sized) survivors as sorted relative paths.
-
-    Work items are the table's filtered top-level entries — Hive
-    partition dirs walk whole subtrees per task, root-level files batch
-    by name — so the driver never holds the full listing in a Python
-    set; it sees only the anti-join result. Skip rules are SHARED with
-    the driver walk (``_vacuum_keep_dir`` / ``_vacuum_skip_name`` — one
-    definition, so the threshold can never flip the outcome), and
-    symlinked root dirs are never traversed, matching ``os.walk``'s
-    no-follow default below the threshold. delta-spark's VACUUM runs
-    this same listing-join shape as a distributed job.
-    """
-    items: list[tuple[str, bool]] = []
-    for entry in sorted(os.listdir(path)):
-        full = os.path.join(path, entry)
-        if os.path.isdir(full):
-            # Never traverse a symlinked dir: the driver walk below the
-            # threshold (os.walk, followlinks=False) doesn't descend it,
-            # and unlinking through one would reach OUTSIDE the table
-            # root — the invariant the tombstone pass guards by realpath.
-            if _vacuum_keep_dir(entry) and not os.path.islink(full):
-                items.append((entry, True))
-        else:
-            if _vacuum_skip_name(entry):
-                continue
-            items.append((entry, False))
-    if not items:
-        return []
-    root = path
-
-    def _list_batch(batches):
-        import os as _os
-
-        import pandas as _pd
-
-        for pdf in batches:
-            out = []
-            for rel, is_dir in zip(pdf["rel"], pdf["is_dir"]):
-                full = _os.path.join(root, rel)
-                if not is_dir:
-                    try:
-                        mt = int(_os.path.getmtime(full) * 1000)
-                    except OSError:
-                        continue
-                    if mt <= cutoff_ms:
-                        out.append(rel)
-                    continue
-                for wroot, dirs, names in _os.walk(full):
-                    dirs[:] = [d for d in dirs if _vacuum_keep_dir(d)]
-                    for name in names:
-                        if _vacuum_skip_name(name):
-                            continue
-                        fp = _os.path.join(wroot, name)
-                        try:
-                            mt = int(_os.path.getmtime(fp) * 1000)
-                        except OSError:
-                            continue
-                        if mt <= cutoff_ms:
-                            out.append(
-                                _os.path.relpath(fp, root).replace(
-                                    _os.sep, "/"
-                                )
-                            )
-            yield _pd.DataFrame({"rel": out})
-
-    # Task count follows the work shape: a dir item walks a whole subtree
-    # (deserves its own task), a file item is one stat — batched per task
-    # by the same policy constant as the FSCK probes.
-    n_dirs = sum(1 for _, is_dir in items if is_dir)
-    n_tasks = max(1, min(
-        max(n_dirs, -(-len(items) // _EXISTS_FILES_PER_TASK)),
-        _LISTING_MAX_TASKS,
-    ))
-    cand = (
-        spark.createDataFrame(items, "rel string, is_dir boolean")
-        .repartition(n_tasks)
-        .mapInPandas(_list_batch, schema="rel string")
-    )
-    tracked_df = spark.createDataFrame(
-        ((p,) for p in tracked), "rel string"
-    )
-    orphans = cand.join(tracked_df, "rel", "left_anti").collect()
-    return sorted(r["rel"] for r in orphans)
-
-
-def _distributed_missing_files(
-    spark: SparkSession, path: str, rels: "list[str]"
-) -> list[str]:
-    """FSCK existence probes as one Spark job over the snapshot's file
-    relation: each task stats its batch, only MISSING paths come back
-    (missing-sized collect). The driver loop equivalent is O(#files)
-    serialized stats — the last sequential per-file pass VERDICT r10
-    flagged."""
-    root = path
-
-    def _probe(batches):
-        import os as _os
-
-        import pandas as _pd
-
-        for pdf in batches:
-            out = [
-                rel for rel in pdf["rel"]
-                if not any(
-                    _os.path.exists(_os.path.join(root, sp))
-                    for sp in _rel_spellings(rel)
-                )
-            ]
-            yield _pd.DataFrame({"rel": out})
-
-    n_tasks = max(1, -(-len(rels) // _EXISTS_FILES_PER_TASK))
-    rows = (
-        spark.createDataFrame(((r,) for r in rels), "rel string")
-        .repartition(n_tasks)
-        .mapInPandas(_probe, schema="rel string")
-        .collect()
-    )
-    return sorted(r["rel"] for r in rows)
 
 
 def _spark_side_stats(
@@ -4965,42 +4784,7 @@ def drop_feature(
     )
 
 
-# Deep-clone data files at or above this count are copied by one Spark job
-# (_distributed_copy) instead of a driver loop.
-_DISTRIBUTED_COPY_MIN_FILES = 4
-
-
-def _distributed_copy(spark: SparkSession, pairs: list[tuple[str, str]]) -> None:
-    """Copy (src, dst) file pairs as ONE Spark job — deep clone's data
-    movement at scale. Batches of files per task (byte copies dominate,
-    so the batches stay small); on a real cluster the same
-    shape drives the object-store copy instead of a driver loop that
-    would serialize the entire table's bytes through one process."""
-    def _cp(batches):
-        import os as _os
-        import shutil as _sh
-
-        import pandas as _pd
-
-        for pdf in batches:
-            for srcp, dstp in zip(pdf["src"], pdf["dst"]):
-                _os.makedirs(_os.path.dirname(dstp), exist_ok=True)
-                _sh.copy2(srcp, dstp)
-            yield _pd.DataFrame({"n": [len(pdf)]})
-
-    n_tasks = max(1, -(-len(pairs) // 32))
-    (
-        spark.createDataFrame(pairs, "src string, dst string")
-        .repartition(n_tasks)
-        .mapInPandas(_cp, "n long")
-        .collect()
-    )
-
-
-def clone_delta(
-    src: str, dst: str, deep: bool = False,
-    spark: SparkSession | None = None,
-) -> int:
+def clone_delta(src: str, dst: str, deep: bool = False) -> int:
     """SHALLOW CLONE (default): a new, independent Delta table whose
     version-0 commit REFERENCES the source's current data files by
     absolute path — zero data copied, O(#files) metadata. Writes/DML/
@@ -5022,8 +4806,8 @@ def clone_delta(
     DV bin) into the destination, producing a fully self-contained table
     — the snapshot/disaster-recovery form: the source can be vacuumed or
     deleted afterwards without affecting the clone. Same single-commit
-    log shape; cost is the data transfer, trivially parallelizable at
-    the file level (sequential here — local FS).
+    log shape; cost is the data transfer, one ``shutil.copy2`` per file
+    on the driver.
     """
     src = _strip_file_scheme(src)
     dst = _strip_file_scheme(dst)
@@ -5090,7 +4874,6 @@ def clone_delta(
     # directories); for 'p' descriptors the value is the fresh 'u'
     # pathOrInlineDv the clone rewrites to.
     copied_bins: dict[str, str | None] = {}
-    copy_pairs: list[tuple[str, str]] = []  # deep clone's data movement
     for i, (rel, a) in enumerate(sorted(snap.files.items())):
         add = dict(a)
         add["dataChange"] = False
@@ -5120,7 +4903,8 @@ def clone_delta(
                 if os.path.isabs(rel) else rel
             )
             dst_fp = os.path.join(dst, _fs_rel(rel_out))
-            copy_pairs.append((src_fp, dst_fp))
+            os.makedirs(os.path.dirname(dst_fp), exist_ok=True)
+            _shutil.copy2(src_fp, dst_fp)
             add["path"] = rel_out.replace(os.sep, "/")
             if desc:
                 st = desc.get("storageType")
@@ -5146,9 +4930,6 @@ def clone_delta(
                     if pod is None:
                         nu = uuid.uuid4()
                         pod = _dv.z85_encode(nu.bytes)
-                        # data copies are deferred (distributed) now, so
-                        # the clone root may not exist yet
-                        os.makedirs(dst, exist_ok=True)
                         _shutil.copy2(
                             bin_src,
                             os.path.join(dst, f"deletion_vector_{nu}.bin"),
@@ -5160,16 +4941,6 @@ def clone_delta(
                     add["deletionVector"] = new_desc
                 # storageType 'i' (inline) needs no file
         actions.append({"add": add})
-    if copy_pairs:
-        # Data movement: ONE Spark job above the small-clone threshold
-        # (DV bins stay driver-side — few and tiny); the driver loop
-        # remains for spark-less callers and tiny clones.
-        if spark is not None and len(copy_pairs) >= _DISTRIBUTED_COPY_MIN_FILES:
-            _distributed_copy(spark, copy_pairs)
-        else:
-            for src_fp, dst_fp in copy_pairs:
-                os.makedirs(os.path.dirname(dst_fp), exist_ok=True)
-                _shutil.copy2(src_fp, dst_fp)
     return _try_commit(dst, actions, [])
 
 
@@ -5956,7 +5727,6 @@ def vacuum(
     path: str,
     retention_ms: int | None = None,
     dry_run: bool = False,
-    spark: SparkSession | None = None,
 ) -> list[str]:
     """Delete data files no longer referenced by the CURRENT snapshot whose
     tombstones are older than the retention window — the delta-rs/delta-spark
@@ -5975,10 +5745,9 @@ def vacuum(
     removed files; deleting before the window closes breaks them. Pass
     ``retention_ms=0`` only in tests.
 
-    ``spark`` (or the active session, discovered automatically) lets the
-    untracked-file discovery run as a distributed listing job above
-    ``_DISTRIBUTED_LISTING_MIN_FILES``; without a session the driver
-    walk handles tables of any size, just serially.
+    Every pass (tombstones, DV bins, staging dirs, untracked files) runs
+    on the driver; the untracked-file discovery is one ``os.walk`` of the
+    table tree, which never follows symlinked directories.
     """
     path = _strip_file_scheme(path)
     snap = _load_snapshot(path)
@@ -6090,8 +5859,7 @@ def vacuum(
     # the window.
     import shutil as _shutil
 
-    root_entries = sorted(os.listdir(path))
-    for entry in root_entries:
+    for entry in sorted(os.listdir(path)):
         staging = os.path.join(path, entry)
         if (
             entry.startswith(".tmp-write-")
@@ -6101,68 +5869,42 @@ def vacuum(
             if not dry_run:
                 _shutil.rmtree(staging, ignore_errors=True)
             deleted.append(entry)
-    # Untracked-file discovery: above the threshold (many tracked files,
-    # or a root flooded with orphan debris) the listing runs as ONE Spark
-    # job anti-joined against the snapshot's path relation; the driver
-    # walk below stays for small tables where a job launch costs more
-    # than the walk.
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    listing_scale = max(
-        len(snap.files) + len(snap.tombstones), len(root_entries)
-    )
-    if spark is not None and listing_scale >= _DISTRIBUTED_LISTING_MIN_FILES:
-        tracked_rels = [
-            sp
-            for rel in list(snap.files) + list(snap.tombstones)
-            for sp in _rel_spellings(rel)
+    # Untracked-file discovery: one walk of the table tree under the
+    # listing rules above; DV bins belong to the DV pass. os.walk never
+    # descends a symlinked dir, so nothing outside the root is reached,
+    # and an orphan that IS a symlink loses only the link.
+    tracked = {
+        sp
+        for rel in list(snap.files) + list(snap.tombstones)
+        for sp in _rel_spellings(rel)
+    }
+    for walk_root, dirs, names in os.walk(path):
+        rel_root = os.path.relpath(walk_root, path)
+        dirs[:] = [
+            d for d in dirs
+            if "=" in d or d == "_change_data"
+            or not d.startswith(("_", "."))
         ]
-        for rel in _distributed_untracked_listing(
-            spark, path, tracked_rels, now_ms - retention_ms
-        ):
-            abs_p = os.path.join(path, rel)
-            # Same containment invariant as the tombstone pass: never
-            # unlink THROUGH a link to outside the table root. An orphan
-            # that IS a symlink is fair game — os.unlink removes only the
-            # link, which is exactly what the driver walk below does, and
-            # the branches must not diverge on the same table state.
-            if not os.path.islink(abs_p) and not os.path.realpath(
-                abs_p
-            ).startswith(root + os.sep):
+        for name in names:
+            if name.startswith(("_", ".")) or (
+                name.startswith("deletion_vector_") and name.endswith(".bin")
+            ):
                 continue
-            if not dry_run:
-                try:
-                    os.unlink(abs_p)
-                except OSError:
+            rel = (
+                name if rel_root == "."
+                else os.path.join(rel_root, name).replace(os.sep, "/")
+            )
+            if rel in tracked:
+                continue
+            fp = os.path.join(walk_root, name)
+            try:
+                if now_ms - int(os.path.getmtime(fp) * 1000) < retention_ms:
                     continue
+                if not dry_run:
+                    os.unlink(fp)
+            except OSError:
+                continue
             deleted.append(rel)
-    else:
-        tracked = {
-            sp
-            for rel in list(snap.files) + list(snap.tombstones)
-            for sp in _rel_spellings(rel)
-        }
-        for walk_root, dirs, names in os.walk(path):
-            rel_root = os.path.relpath(walk_root, path)
-            dirs[:] = [d for d in dirs if _vacuum_keep_dir(d)]
-            for name in names:
-                if _vacuum_skip_name(name):
-                    continue  # log/CDF entries + DV bins (DV pass above)
-                rel = (
-                    name if rel_root == "."
-                    else os.path.join(rel_root, name).replace(os.sep, "/")
-                )
-                if rel in tracked:
-                    continue
-                fp = os.path.join(walk_root, name)
-                try:
-                    if now_ms - int(os.path.getmtime(fp) * 1000) < retention_ms:
-                        continue
-                    if not dry_run:
-                        os.unlink(fp)
-                except OSError:
-                    continue
-                deleted.append(rel)
     if dry_run:
         return deleted
     # Prune now-empty Hive partition dirs left behind.

@@ -411,3 +411,26 @@ def test_null_partition_values_on_shallow_clone(spark, tmp_path):
         range(5, 20)
     )
     assert read_delta(spark, src).count() == 20  # source untouched
+
+
+def test_deep_clone_copies_on_the_driver(spark, tmp_path):
+    """DEEP CLONE through SQL copies its data files on the driver: no
+    Spark job runs, and the clone reads the same rows."""
+    from ballista_delta_spark.session import sql as bd_sql
+
+    src = str(tmp_path / "src")
+    # 4 range partitions -> 4 part files, written without a shuffle
+    write_delta(spark.range(0, 40, 1, 4).selectExpr("id"), src)
+    assert len(_load_snapshot(src).files) >= 4
+    dst = str(tmp_path / "deep")
+    sc = spark.sparkContext
+    sc.setJobGroup("deep-clone", "DEEP CLONE of a 4-file table")
+    try:
+        bd_sql(spark, f"CREATE TABLE dcl4 DEEP CLONE '{src}' LOCATION '{dst}'")
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("deep-clone")) == []
+    assert len(glob.glob(os.path.join(dst, "*.parquet"))) >= 4
+    assert sorted(r.id for r in read_delta(spark, dst).collect()) == list(
+        range(40)
+    )

@@ -1243,13 +1243,13 @@ def test_vacuum_counts_dv_bin_retention_from_supersession(spark, tmp_path):
     pre_v = DeltaTable(tbl).snapshot.version
     compact_deletion_vectors(tbl)
 
-    vacuum(tbl, spark=spark)  # default 7-day retention
+    vacuum(tbl)  # default 7-day retention
     assert all(os.path.exists(b) for b in bins)
     # in-window time travel still reads through the superseded bins
     assert read_delta(spark, tbl, version=pre_v).count() == 90
 
     # past the window (retention 0) they are reclaimed as before
-    vacuum(tbl, retention_ms=0, spark=spark)
+    vacuum(tbl, retention_ms=0)
     assert not any(os.path.exists(b) for b in bins)
     assert read_delta(spark, tbl).count() == 90
 

@@ -707,12 +707,29 @@ def test_vacuum_reclaims_crashed_writer_orphans(spark, tmp_path):
     assert read_delta(spark, tbl).count() == 5
 
 
-def test_vacuum_distributed_listing_on_many_files(spark, tmp_path, monkeypatch):
-    """Above ``_DISTRIBUTED_LISTING_MIN_FILES`` VACUUM's untracked-file
-    discovery runs as ONE Spark job (executor-side listing anti-joined
-    against the snapshot's path relation — VERDICT r10 #2) and agrees
-    exactly with the driver walk, verified on a table flooded with
-    multi-thousand orphan debris in both root and Hive-partition dirs."""
+def _no_spark_job(spark, fn, *args, **kwargs):
+    """Run ``fn`` under a fresh job group and assert it launched no Spark
+    job."""
+    import uuid
+
+    group = f"driver-only-{uuid.uuid4()}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, fn.__name__)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert list(jobs) == [], f"{fn.__name__} ran Spark jobs {list(jobs)}"
+    return out
+
+
+def test_vacuum_listing_on_many_files_runs_no_spark_job(spark, tmp_path):
+    """VACUUM's untracked-file discovery is one driver walk at any size:
+    on a table flooded with thousands of orphans in the root and in a
+    Hive partition dir it launches no Spark job, keeps dot-files, leaves
+    the DV bin to its own pass, protects young orphans and prunes the
+    emptied partition dir."""
     import os as _os
 
     from ballista_delta_spark.sources import delta as d
@@ -720,11 +737,7 @@ def test_vacuum_distributed_listing_on_many_files(spark, tmp_path, monkeypatch):
     tbl = str(tmp_path / "t")
     src = read_delta(spark, FIXTURE)
     write_delta(src, tbl, mode="overwrite")
-    # The threshold heuristic sees tracked files + ROOT entries (nested
-    # orphan counts are unknowable without the listing itself), so the
-    # flood goes to the root; the partition dir proves executor-side
-    # subtree walking.
-    n_root = d._DISTRIBUTED_LISTING_MIN_FILES + 100
+    n_root = 4196
     n_part = 304
     n = n_root + n_part
     part = _os.path.join(tbl, "p=1")
@@ -734,41 +747,27 @@ def test_vacuum_distributed_listing_on_many_files(spark, tmp_path, monkeypatch):
     for i in range(n_root):
         open(_os.path.join(tbl, f"orph-root-{i}.parquet"), "wb").write(b"x")
     # debris the LISTING must skip: dot-files stay; the unreferenced DV
-    # bin is reaped — but by the dedicated DV pass, on both branches
+    # bin is reaped — but by the dedicated DV pass
     open(_os.path.join(tbl, "deletion_vector_orphan.bin"), "wb").write(b"x")
     open(_os.path.join(tbl, ".hidden"), "wb").write(b"x")
-    calls: list[int] = []
-    real = d._distributed_untracked_listing
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(d, "_distributed_untracked_listing", spy)
-    dry = d.vacuum(tbl, retention_ms=0, dry_run=True, spark=spark)
-    assert len(calls) == 1  # the Spark-job path ran
+    dry = _no_spark_job(spark, d.vacuum, tbl, retention_ms=0, dry_run=True)
     assert len(dry) == n + 1  # the n orphans + the DV-pass-reaped bin
-    # The driver walk (forced via an unreachable threshold) agrees exactly.
-    thresh = d._DISTRIBUTED_LISTING_MIN_FILES
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 1 << 60)
-    walk = d.vacuum(tbl, retention_ms=0, dry_run=True, spark=spark)
-    assert sorted(walk) == sorted(dry)
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", thresh)
-    # Young orphans stay protected on the distributed path too.
-    assert d.vacuum(tbl, retention_ms=10 * 60 * 1000, spark=spark) == []
-    deleted = d.vacuum(tbl, retention_ms=0, spark=spark)
-    assert len(calls) == 3 and sorted(deleted) == sorted(dry)
+    assert sum(r.startswith("orph-root-") for r in dry) == n_root
+    assert sum(r.startswith("p=1/orphan-") for r in dry) == n_part
+    assert "deletion_vector_orphan.bin" in dry
+    # Young orphans stay protected.
+    assert d.vacuum(tbl, retention_ms=10 * 60 * 1000) == []
+    deleted = _no_spark_job(spark, d.vacuum, tbl, retention_ms=0)
+    assert sorted(deleted) == sorted(dry)
     assert read_delta(spark, tbl).count() == 5
     assert not _os.path.exists(part)  # emptied partition dir pruned
     assert _os.path.exists(_os.path.join(tbl, ".hidden"))
 
 
-def test_vacuum_never_reaches_through_symlinks(spark, tmp_path, monkeypatch):
+def test_vacuum_never_reaches_through_symlinks(spark, tmp_path):
     """A symlinked root dir pointing OUTSIDE the table must never be
-    traversed or unlinked-through, on EITHER listing branch: the driver
-    walk never follows links (os.walk default) and the distributed items
-    builder must not classify the link as a walkable dir — else VACUUM
-    would destroy external files through it (review finding, r11)."""
+    traversed or unlinked-through: the walk never follows links (os.walk
+    default) — else VACUUM would destroy external files through it."""
     import os as _os
 
     from ballista_delta_spark.sources import delta as d
@@ -781,25 +780,23 @@ def test_vacuum_never_reaches_through_symlinks(spark, tmp_path, monkeypatch):
     _os.symlink(str(external), _os.path.join(tbl, "extdata"))
     # one real orphan so the pass provably ran and deleted SOMETHING
     open(_os.path.join(tbl, "orphan.parquet"), "wb").write(b"x")
-    # distributed branch (forced)
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 1)
-    deleted = d.vacuum(tbl, retention_ms=0, spark=spark)
+    deleted = d.vacuum(tbl, retention_ms=0)
     assert "orphan.parquet" in deleted
     assert not any("extdata" in r or "precious" in r for r in deleted)
     assert (external / "precious.parquet").read_bytes() == b"keep me"
-    # driver branch agrees (fresh orphan, unreachable threshold)
+    # a second pass (fresh orphan) still leaves the link's target alone
     open(_os.path.join(tbl, "orphan2.parquet"), "wb").write(b"x")
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 1 << 60)
-    deleted2 = d.vacuum(tbl, retention_ms=0, spark=spark)
+    deleted2 = d.vacuum(tbl, retention_ms=0)
     assert "orphan2.parquet" in deleted2
     assert not any("extdata" in r or "precious" in r for r in deleted2)
     assert (external / "precious.parquet").read_bytes() == b"keep me"
     assert read_delta(spark, tbl).count() == 5
 
 
-def test_fsck_distributed_existence_probe(spark, tmp_path, monkeypatch):
-    """Above the threshold FSCK's existence checks run as one Spark job
-    and report the same missing set as the driver loop."""
+def test_fsck_existence_probe_runs_no_spark_job(spark, tmp_path):
+    """FSCK's existence probe runs on the driver: the dry run reports the
+    missing file without a Spark job, the repair drops it, and a second
+    run finds nothing."""
     import os as _os
 
     from ballista_delta_spark.sources import delta as d
@@ -808,20 +805,11 @@ def test_fsck_distributed_existence_probe(spark, tmp_path, monkeypatch):
     write_delta(read_delta(spark, FIXTURE), tbl, mode="overwrite")
     victim = sorted(DeltaTable(tbl).snapshot.files)[0]
     _os.unlink(_os.path.join(tbl, victim))
-    calls: list[int] = []
-    real = d._distributed_missing_files
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(d, "_distributed_missing_files", spy)
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 1)
-    dry = d.fsck_repair(tbl, dry_run=True, spark=spark)
-    assert len(calls) == 1 and dry["missing"] == [victim]
-    res = d.fsck_repair(tbl, spark=spark)
+    dry = _no_spark_job(spark, d.fsck_repair, tbl, dry_run=True)
+    assert dry["missing"] == [victim]
+    res = d.fsck_repair(tbl)
     assert res["missing"] == [victim]
-    assert d.fsck_repair(tbl, spark=spark)["numMissingFiles"] == 0
+    assert d.fsck_repair(tbl)["numMissingFiles"] == 0
 
 
 def test_optimize_compacts_files_without_changing_rows(spark, tmp_path):
@@ -1903,11 +1891,9 @@ def test_checkpoint_columnar_path_matches_dict_path(spark, tmp_path):
     assert read_delta(spark, tbl).count() == 300 - 28
 
 
-def test_vacuum_orphan_symlink_parity(spark, tmp_path, monkeypatch):
+def test_vacuum_orphan_symlink_parity(spark, tmp_path):
     """An orphan that IS a symlink is reclaimed (the link only — never
-    the target) identically by BOTH listing branches; the distributed
-    branch's realpath containment guard must not skip links the driver
-    walk deletes (review finding, r11)."""
+    the target), on every pass that meets one."""
     import os as _os
 
     from ballista_delta_spark.sources import delta as d
@@ -1917,21 +1903,18 @@ def test_vacuum_orphan_symlink_parity(spark, tmp_path, monkeypatch):
     external = tmp_path / "external"
     external.mkdir()
     (external / "target.parquet").write_bytes(b"keep me")
-    # distributed branch (forced)
     _os.symlink(
         str(external / "target.parquet"), _os.path.join(tbl, "link1.parquet")
     )
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 1)
-    deleted = d.vacuum(tbl, retention_ms=0, spark=spark)
+    deleted = d.vacuum(tbl, retention_ms=0)
     assert "link1.parquet" in deleted
     assert not _os.path.lexists(_os.path.join(tbl, "link1.parquet"))
     assert (external / "target.parquet").read_bytes() == b"keep me"
-    # driver branch agrees
+    # a second orphan link on the next pass goes the same way
     _os.symlink(
         str(external / "target.parquet"), _os.path.join(tbl, "link2.parquet")
     )
-    monkeypatch.setattr(d, "_DISTRIBUTED_LISTING_MIN_FILES", 1 << 60)
-    deleted2 = d.vacuum(tbl, retention_ms=0, spark=spark)
+    deleted2 = d.vacuum(tbl, retention_ms=0)
     assert "link2.parquet" in deleted2
     assert not _os.path.lexists(_os.path.join(tbl, "link2.parquet"))
     assert (external / "target.parquet").read_bytes() == b"keep me"

@@ -232,3 +232,24 @@ def test_late_fold_queries_return_the_chains_bits(spark, sf_dir, qid, monkeypatc
     ] == [
         tuple(_bits(v) if isinstance(v, float) else v for v in r) for r in chained
     ]
+
+
+def test_emb_knn_graph_plans_first_in_a_fresh_session(sf_dir):
+    """``emb_knn_graph`` as the first query a fresh session plans: a
+    bucket fold whose lambda captured ``emb`` had Catalyst infer an
+    ``emb`` filter onto the per-bucket count, and the plan failed with
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND before any other plan was built.
+    ``tools/check.py`` opens a new session and compares the rows with
+    the DuckDB oracle."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "check.py"),
+         "--sf", sf_dir, "emb_knn_graph"],
+        capture_output=True, text=True, timeout=600, cwd=repo,
+    )
+    assert out.returncode == 0, (out.stdout + out.stderr)[-3000:]
+    assert "emb_knn_graph: OK" in out.stdout, out.stdout[-3000:]

@@ -2527,7 +2527,7 @@ class TestDmlDifferentialFuzz:
             elif op == "checkpoint":
                 D.create_checkpoint(tbl)
             elif op == "vacuum":
-                D.vacuum(tbl, retention_ms=0, spark=spark)
+                D.vacuum(tbl, retention_ms=0)
                 # vacuumed bytes are gone: older versions are no longer
                 # restorable targets, and CDF over the pre-vacuum range
                 # can no longer be computed (delta-spark parity: the

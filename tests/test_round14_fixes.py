@@ -315,7 +315,7 @@ class TestEncodedPathDestructiveGuards:
         tbl = _mini_table(tmp_path, ["my%20file.parquet"])
         with open(os.path.join(tbl, "my file.parquet"), "wb") as fh:
             fh.write(b"x")
-        out = fsck_repair(tbl, dry_run=True, spark=None)
+        out = fsck_repair(tbl, dry_run=True)
         assert out["numMissingFiles"] == 0, out
 
     def test_vacuum_keeps_decoded_spelling_of_tracked_file(self, tmp_path):
@@ -326,14 +326,14 @@ class TestEncodedPathDestructiveGuards:
         with open(fp, "wb") as fh:
             fh.write(b"x")
         os.utime(fp, (1, 1))  # ancient mtime: untracked would be swept
-        deleted = vacuum(tbl, retention_ms=0, dry_run=True, spark=None)
+        deleted = vacuum(tbl, retention_ms=0, dry_run=True)
         assert deleted == [], deleted
         # control: a genuinely untracked old file IS swept
         orphan = os.path.join(tbl, "orphan.parquet")
         with open(orphan, "wb") as fh:
             fh.write(b"x")
         os.utime(orphan, (1, 1))
-        deleted = vacuum(tbl, retention_ms=0, dry_run=True, spark=None)
+        deleted = vacuum(tbl, retention_ms=0, dry_run=True)
         assert deleted == ["orphan.parquet"], deleted
 
 
@@ -404,7 +404,7 @@ class TestRfc2396PathParity:
         assert got == [(1, "a b"), (2, "a b"), (3, "x%y"), (4, "plain")]
         # the where= skip path and vacuum both resolve the same files
         assert read_delta(spark, tbl, where="id > 2").count() == 2
-        assert vacuum(tbl, retention_ms=0, dry_run=True, spark=spark) == []
+        assert vacuum(tbl, retention_ms=0, dry_run=True) == []
 
     def test_dml_and_cdf_on_encoded_partitions(self, spark, tmp_path):
         from ballista_delta_spark.sources.delta import (
@@ -447,7 +447,7 @@ class TestRfc2396PathParity:
         )
         for deep, name in ((True, "deep"), (False, "shallow")):
             dst = str(tmp_path / name)
-            clone_delta(src, dst, deep=deep, spark=spark)
+            clone_delta(src, dst, deep=deep)
             got = sorted(
                 (r.id, r.p) for r in read_delta(spark, dst).collect()
             )
@@ -552,11 +552,11 @@ def test_vacuum_reclaims_old_change_data(spark, tmp_path):
     assert cdcs
 
     # in-window: fresh cdc files survive and CDF still reads them
-    assert vacuum(tbl, retention_ms=10**9, dry_run=True, spark=spark) == []
+    assert vacuum(tbl, retention_ms=10**9, dry_run=True) == []
     # age them past the window -> swept
     for c in cdcs:
         os.utime(c, (1, 1))
-    deleted = vacuum(tbl, retention_ms=10**9, spark=spark)
+    deleted = vacuum(tbl, retention_ms=10**9)
     for c in cdcs:
         assert os.path.relpath(c, tbl) in deleted, (c, deleted)
         assert not os.path.exists(c)

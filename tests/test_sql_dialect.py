@@ -598,6 +598,45 @@ def test_timestamp_as_of_reads_in_session_time_zone(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_timestamp_as_of_takes_a_typed_literal(spark, tmp_path):
+    """``TIMESTAMP AS OF TIMESTAMP '…'`` and ``TIMESTAMP_NTZ '…'`` pick the
+    same snapshot as the string form, zone-less text read in the session
+    time zone."""
+    import json
+    import os
+
+    loc = str(tmp_path / "typed")
+    write_delta(spark.createDataFrame([(1,)], "id long"), loc)      # v0
+    write_delta(spark.createDataFrame([(2,)], "id long"), loc)      # v1
+    # Pin commit times: v0 at 00:16:40 UTC, v1 at 00:33:20 UTC.
+    for v, ts in {0: 1000_000, 1: 2000_000}.items():
+        fp = os.path.join(loc, "_delta_log", f"{v:020d}.json")
+        acts = [json.loads(line) for line in open(fp)]
+        for a in acts:
+            if "commitInfo" in a:
+                a["commitInfo"]["timestamp"] = ts
+        with open(fp, "w") as fh:
+            fh.writelines(json.dumps(a) + "\n" for a in acts)
+    name = f"typed_{abs(hash(loc)) % 10**8}"
+    sql(spark, f"CREATE EXTERNAL TABLE {name} STORED AS DELTA LOCATION '{loc}'")
+
+    def ids(as_of):
+        q = f"SELECT id FROM {name} TIMESTAMP AS OF {as_of} ORDER BY id"
+        return [r.id for r in sql(spark, q).collect()]
+
+    assert ids("TIMESTAMP '2099-01-01 00:00:00'") == [1, 2]
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")  # UTC+9
+    try:
+        # 09:25 in Tokyo is 00:25 UTC: after v0, before v1.
+        assert ids("'1970-01-01 09:25:00'") == [1]
+        assert ids("TIMESTAMP '1970-01-01 09:25:00'") == [1]
+        assert ids("TIMESTAMP_NTZ '1970-01-01 09:25:00'") == [1]
+        assert ids("TIMESTAMP '1970-01-01 00:25:00Z'") == [1]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
 def test_timestamp_with_offset_needs_no_session_zone(spark):
     """A literal with an offset or 'Z' is an instant whatever the session
     zone; a zone-less one needs a session zone Python can resolve."""
